@@ -5,7 +5,9 @@ plus ``events``, ``documents`` and ``embeddings``) as one parquet file each,
 with the same schema and value domains as the engine's test data: uniform
 keys and measures, real TPC-H region names, ``NATION_i`` nation names,
 6 part types, 25 brands, 5% of documents an exact copy of another document
-plus a trailing ``dup`` token, and unit-norm 64-d embeddings.
+plus a trailing ``dup`` token, and unit-norm 64-d embeddings. ``events.ts``
+is timestamp[us], as in the test data at every scale; the reader's
+timestamp[ns] conversion is left to the engine's own tests.
 
 The data depends only on the scale factor, never on the workload seed: the
 seed varies the operation order and the DML constants, so runs with

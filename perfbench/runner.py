@@ -19,14 +19,16 @@ from perfbench import datagen, oracle
 from perfbench.trace import LAYER_METRICS, Tracer, cached_mb
 from perfbench.workloads import WORKLOADS
 
-# Set-ups per run: the reported setup_s is their median. The first one
-# starts the JVM; the others build a fresh SparkContext in it.
+# Set-ups after the timed passes, in a warm JVM: each stops the
+# SparkContext, then times a fresh one, the Session and the workload's
+# set-up. setup_s is their median. The cold set-up is only reported: a run
+# has one, and its JVM start (most of it) would hide under the bound any
+# set-up work a change adds. Set-ups made before the passes still speed up
+# with every repeat as the JIT warms.
 SETUPS = 3
-# Untimed passes before measuring: JIT and codegen keep speeding passes up
-# for about two passes after a cold start.
-WARMUP_PASSES = 2
-# Timed passes run until --seconds have passed, and at least this many.
-MIN_PASSES = 2
+# Timed passes run until --seconds have passed, and at least this many, so
+# the median rejects one slow pass.
+MIN_PASSES = 3
 
 # The gated metrics. The median slot latency is printed, not gated: it
 # falls on a sub-second operation (a lazy DML write, a short text query)
@@ -120,15 +122,10 @@ def run(
 
     from qurious_spark.session import Session, get_spark
 
-    setups, spark = [], None
-    for i in range(SETUPS):
-        t0 = t_first if i == 0 else time.perf_counter()
-        if spark is not None:
-            spark.stop()
-        spark = get_spark()
-        session = Session(spark)
-        w.setup(spark, session)
-        setups.append(time.perf_counter() - t0)
+    spark = get_spark()
+    session = Session(spark)
+    w.setup(spark, session)
+    setup_cold_s = time.perf_counter() - t_first
 
     cores = len(os.sched_getaffinity(0))
     tracer = Tracer(cores) if trace else None
@@ -138,7 +135,7 @@ def run(
         done, samples, pass_times, layer_passes, log = [], [], [], [], []
         op_id = 0
         t_loop = None
-        warm_left = WARMUP_PASSES
+        warm_left = spec.warmup
         while True:
             ops = w.pass_ops()
             t_pass = time.perf_counter()
@@ -169,6 +166,14 @@ def run(
         if tracer is not None:
             tracer.uninstall()
 
+    setups = []
+    for _ in range(0 if trace else SETUPS):
+        spark.stop()
+        t0 = time.perf_counter()
+        spark = get_spark()
+        w.setup(spark, Session(spark))
+        setups.append(time.perf_counter() - t0)
+
     results = [
         (op, res if res is None or isinstance(res, BaseException) else oracle.normalize(list(res[0]), res[1]))
         for op, res in done
@@ -182,7 +187,7 @@ def run(
     slot_lat = [d for _, d in slots.values()]
     metrics: dict[str, dict] = {}
     if trace:
-        for key, (unit, _, _) in LAYER_METRICS.items():
+        for key, (unit, _) in LAYER_METRICS.items():
             metrics[key] = {
                 "value": statistics.median(p[key] for p in layer_passes),
                 "unit": unit,
@@ -202,11 +207,11 @@ def run(
     conf = spark.conf
     report = {
         "workload": name,
-        "why": spec.why,
         "seed": seed,
         "sf": sf,
         "input_checksum": checksum,
         "data_build_s": manifest["build_s"],
+        "setup_cold_s": setup_cold_s,
         "setups_s": setups,
         "passes": log,
         "samples": len(samples),

@@ -37,9 +37,7 @@ def test_benchmark_json_matches_the_code():
     assert bench["command"] == ["python3", "perfbench/run.py"]
     assert {w["name"] for w in bench["workloads"]} <= set(WORKLOADS)
     assert {m["name"]: m["unit"] for m in bench["end_to_end"]} == runner.END_TO_END
-    assert {m["name"]: (m["unit"], m["better"]) for m in bench["per_layer"]} == {
-        k: (unit, better) for k, (unit, better, _) in LAYER_METRICS.items()
-    }
+    assert {m["name"]: (m["unit"], m["better"]) for m in bench["per_layer"]} == LAYER_METRICS
 
 
 def test_percentile_is_a_measured_sample():

@@ -28,44 +28,44 @@ import time
 from collections import defaultdict
 from contextlib import contextmanager
 
-# Per-layer metrics, their unit, which way is better, and the end-to-end
-# metric and workload each should move (README.md has the same table).
-LAYER_METRICS: dict[str, tuple[str, str, str]] = {
-    "queries.build_s": ("s", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "queries.py4j_calls": ("count", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "queries.build_jobs": ("count", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "dialect.calls": ("count", "lower", "pass_s on dml-session"),
-    "dialect.busy_s": ("s", "lower", "pass_s on dml-session"),
-    "session.write_busy_s": ("s", "lower", "pass_s on dml-session"),
-    "session.lineage_nodes": ("count", "lower", "latency_p90_s on dml-session"),
-    "checkpoint.calls": ("count", "lower", "pass_s on dml-session"),
-    "checkpoint.busy_s": ("s", "lower", "pass_s on dml-session"),
-    "catalyst.analyze_s": ("s", "lower", "latency_p90_s on dml-session, tpch-sf0.1"),
-    "catalyst.optimize_s": ("s", "lower", "latency_p90_s on dml-session, tpch-sf0.1"),
-    "catalyst.physical_s": ("s", "lower", "latency_p90_s on dml-session, tpch-sf0.1"),
-    "execute.busy_s": ("s", "lower", "pass_s on llm-pipeline-sf0.1, tpch-sf0.1"),
-    "execute.jobs": ("count", "lower", "pass_s on llm-pipeline-sf0.1, tpch-sf0.1"),
-    "execute.stages": ("count", "lower", "pass_s on llm-pipeline-sf0.1, tpch-sf0.1"),
-    "execute.tasks": ("count", "lower", "pass_s on llm-pipeline-sf0.1, tpch-sf0.1"),
-    "execute.sched_gap_s": ("s", "lower", "pass_s on llm-pipeline-sf0.1, tpch-sf0.1"),
-    "execute.core_util": ("ratio", "higher", "pass_s on llm-pipeline-sf0.1, tpch-sf0.1"),
-    "execute.failed_tasks": ("count", "lower", "pass_s on every workload"),
-    "execute.task_run_s": ("s", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "execute.task_cpu_s": ("s", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "execute.gc_s": ("s", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "sources.scan_mb": ("MB", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "sources.scan_rows": ("count", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "sources.rows_per_result_row": ("ratio", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "shuffle.write_mb": ("MB", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "shuffle.read_mb": ("MB", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "shuffle.spill_mb": ("MB", "lower", "pass_s on llm-pipeline-sf0.1"),
-    "operators.python_sent_mb": ("MB", "lower", "latency_p90_s on llm-pipeline-sf0.1"),
-    "operators.python_recv_mb": ("MB", "lower", "latency_p90_s on llm-pipeline-sf0.1"),
-    "storage.cached_mb": ("MB", "lower", "none (watch only)"),
-    "mem.jvm_peak_rss_mb": ("MB", "lower", "none (watch only)"),
-    "mem.heap_after_gc_mb": ("MB", "lower", "none (watch only)"),
-    "trace.pass_s": ("s", "lower", "none (traced pass wall time)"),
-    "trace.overhead_s": ("s", "lower", "none (time in trace bookkeeping)"),
+# Per-layer metrics: unit and which way is better. README.md says which
+# end-to-end metric and workload each should move.
+LAYER_METRICS: dict[str, tuple[str, str]] = {
+    "queries.build_s": ("s", "lower"),
+    "queries.py4j_calls": ("count", "lower"),
+    "queries.build_jobs": ("count", "lower"),
+    "dialect.calls": ("count", "lower"),
+    "dialect.busy_s": ("s", "lower"),
+    "session.write_busy_s": ("s", "lower"),
+    "session.lineage_nodes": ("count", "lower"),
+    "checkpoint.calls": ("count", "lower"),
+    "checkpoint.busy_s": ("s", "lower"),
+    "catalyst.analyze_s": ("s", "lower"),
+    "catalyst.optimize_s": ("s", "lower"),
+    "catalyst.physical_s": ("s", "lower"),
+    "execute.busy_s": ("s", "lower"),
+    "execute.jobs": ("count", "lower"),
+    "execute.stages": ("count", "lower"),
+    "execute.tasks": ("count", "lower"),
+    "execute.sched_gap_s": ("s", "lower"),
+    "execute.core_util": ("ratio", "higher"),
+    "execute.failed_tasks": ("count", "lower"),
+    "execute.task_run_s": ("s", "lower"),
+    "execute.task_cpu_s": ("s", "lower"),
+    "execute.gc_s": ("s", "lower"),
+    "sources.scan_mb": ("MB", "lower"),
+    "sources.scan_rows": ("count", "lower"),
+    "sources.rows_per_result_row": ("ratio", "lower"),
+    "shuffle.write_mb": ("MB", "lower"),
+    "shuffle.read_mb": ("MB", "lower"),
+    "shuffle.spill_mb": ("MB", "lower"),
+    "operators.python_sent_mb": ("MB", "lower"),
+    "operators.python_recv_mb": ("MB", "lower"),
+    "storage.cached_mb": ("MB", "lower"),
+    "mem.jvm_peak_rss_mb": ("MB", "lower"),
+    "mem.heap_after_gc_mb": ("MB", "lower"),
+    "trace.pass_s": ("s", "lower"),
+    "trace.overhead_s": ("s", "lower"),
 }
 
 _PYTHON_NODES = ("Python", "Pandas", "ArrowEval")

@@ -210,35 +210,29 @@ class DmlWorkload:
 
 @dataclass(frozen=True)
 class Spec:
-    """A workload as BENCHMARK.json names it: scale factor, reason, and the
-    factory that builds its per-run state from
-    ``(seed, sf, data_dir, oracle_cache, checksum)``."""
+    """A workload as BENCHMARK.json names it: scale factor, the factory
+    that builds its per-run state from
+    ``(seed, sf, data_dir, oracle_cache, checksum)``, and the untimed
+    passes before measuring (JIT and codegen keep speeding passes up for a
+    few passes after a cold start; how many depends on the workload)."""
 
     sf: float
-    why: str
     make: Callable
+    warmup: int = 2
 
 
 WORKLOADS = {
     "tpch-sf0.1": Spec(
         0.1,
-        "TPC-H at sf0.1: fixed per-query cost (driver build, Catalyst, "
-        "per-job scheduling) dominates",
         partial(QueryWorkload, ("tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6", "tpch_q13")),
     ),
     "llm-pipeline-sf0.1": Spec(
         0.1,
-        "LLM data prep at sf0.1: exact dedup, text quality, a mapInPandas "
-        "heavy-hitter pass and the build-heavy quality checks",
         partial(
             QueryWorkload,
             ("dedup_exact", "text_quality", "heavy_hitters_events", "pipeline_quality_checks"),
         ),
+        warmup=3,
     ),
-    "dml-session": Spec(
-        0.01,
-        "DML beside reads on a managed copy of orders at sf0.01: dialect, "
-        "lineage growth and the checkpoint every 16 mutations",
-        DmlWorkload,
-    ),
+    "dml-session": Spec(0.01, DmlWorkload),
 }
