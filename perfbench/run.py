@@ -27,13 +27,16 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _environment(root: str) -> None:
     """Host-honest, checkout-local settings, fixed before the JVM starts:
-    one Spark core per CPU this process may use, scratch space inside the
-    checkout, and the checkout on the workers' import path (mapInPandas
-    workers import ``qurious_spark``)."""
+    one Spark core per CPU this process may use but one, scratch space
+    inside the checkout, and the checkout on the workers' import path
+    (mapInPandas workers import ``qurious_spark``). The spare CPU is for
+    the Python client and the JVM's compiler and GC threads, which would
+    otherwise compete with the tasks: pass times spread less from run to
+    run with it left free."""
     build = os.path.join(root, ".bench_build", "perfbench")
     tmp = os.path.join(build, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
+    os.environ["SPARK_GRAFT_CPUS"] = str(max(1, len(os.sched_getaffinity(0)) - 1))
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(build, "spark-local")
     os.environ["SPARK_GRAFT_WAREHOUSE"] = os.path.join(build, "warehouse")

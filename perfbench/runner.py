@@ -27,8 +27,8 @@ from perfbench.workloads import WORKLOADS
 # with every repeat as the JIT warms.
 SETUPS = 3
 # Timed passes run until --seconds have passed, and at least this many, so
-# the median rejects one slow pass.
-MIN_PASSES = 3
+# the median rejects two slow passes.
+MIN_PASSES = 5
 
 # The gated metrics. The median slot latency is printed, not gated: it
 # falls on a sub-second operation (a lazy DML write, a short text query)
@@ -128,7 +128,7 @@ def run(
     setup_cold_s = time.perf_counter() - t_first
 
     cores = len(os.sched_getaffinity(0))
-    tracer = Tracer(cores) if trace else None
+    tracer = Tracer(spark.sparkContext.defaultParallelism) if trace else None
     if tracer is not None:
         tracer.install(spark)
     try:

@@ -218,7 +218,7 @@ class Spec:
 
     sf: float
     make: Callable
-    warmup: int = 2
+    warmup: int = 3
 
 
 WORKLOADS = {
@@ -232,7 +232,7 @@ WORKLOADS = {
             QueryWorkload,
             ("dedup_exact", "text_quality", "heavy_hitters_events", "pipeline_quality_checks"),
         ),
-        warmup=3,
+        warmup=4,
     ),
     "dml-session": Spec(0.01, DmlWorkload),
 }
