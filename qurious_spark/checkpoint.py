@@ -22,6 +22,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from qurious_spark.plans.inspect import plan_bytes
+
 
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate ``df``'s lineage; reliable iff SPARK_GRAFT_CHECKPOINT_DIR set."""
@@ -46,29 +48,22 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 # Minimum ESTIMATED input bytes before checkpoint_if_large materializes a
-# twice-consumed intermediate. 1 GiB default: below it, recomputing the
+# twice-consumed intermediate (1 GiB). Below it, recomputing the
 # branch (an extra local scan of a few MB) is cheaper than a checkpoint
 # job + block writes (measured +0.18s on tpch_q15 at sf0.1); above it, the
 # second full pass over the input dwarfs materializing the small aggregate.
-# Env-tunable so tests pin the materialized path and a cluster can lower it.
-MATERIALIZE_BYTES_DEFAULT = 1 << 30
+MATERIALIZE_BYTES = 1 << 30
 
 
-def checkpoint_if_large(df: DataFrame, size_of: DataFrame | None = None) -> DataFrame:
+def checkpoint_if_large(df: DataFrame, size_of: DataFrame) -> DataFrame:
     """Materialize ``df`` iff recomputing it would re-read a large input.
 
     ``size_of`` is the frame whose Catalyst size estimate stands in for the
-    recompute cost (typically the big-table scan feeding ``df``); defaults
-    to ``df`` itself. Driver-side metadata only — no job runs for the probe.
-    Each invocation materializes fresh (localCheckpoint / reliable
-    checkpoint per the shim) — nothing is reused across invocations.
+    recompute cost (typically the big-table scan feeding ``df``). Each
+    invocation materializes fresh (localCheckpoint / reliable checkpoint per
+    the shim) — nothing is reused across invocations.
     """
-    thresh = int(
-        os.environ.get("SPARK_GRAFT_MATERIALIZE_BYTES", MATERIALIZE_BYTES_DEFAULT)
-    )
-    probe = df if size_of is None else size_of
-    size = int(probe._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size >= thresh:
+    if plan_bytes(size_of) >= MATERIALIZE_BYTES:
         return checkpoint(df)
     return df
 

@@ -25,10 +25,10 @@ operators are the beyond-reference scope required for training-data work.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from qurious_spark.plans.inspect import plan_bytes
 
 # MinHash parameters — shared with the DuckDB oracle generator.
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
@@ -105,9 +105,9 @@ _SPREAD_PROBE_CACHE: dict[tuple[int, int], tuple[int, int]] = {}
 # stages dominate the lost core fan-out at this size). Any real corpus is
 # orders of magnitude past the floor, where the target saturates at the
 # session's parallelism and, on a cluster whose scan is already wide,
-# spread stays a no-op. Env-tunable, never a semantics input (the
-# partitioning-independence gate runs the registry at perturbed widths).
-SPREAD_PARTITION_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_BYTES", 1 << 16))
+# spread stays a no-op. Never a semantics input (the partitioning-
+# independence gate runs the registry at perturbed widths).
+SPREAD_PARTITION_BYTES = 1 << 16
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -140,8 +140,7 @@ def spread(df: DataFrame) -> DataFrame:
         # Catalyst's own size estimate (file-size total for scans; works on
         # any filesystem, no data read). Upper bound is fine: over-estimates
         # only push the target toward full parallelism.
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        probe = (nparts, size)
+        probe = (nparts, plan_bytes(df))
         _SPREAD_PROBE_CACHE[key] = probe
     nparts, size = probe
     target = min(par, max(1, -(-size // SPREAD_PARTITION_BYTES)))

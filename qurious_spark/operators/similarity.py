@@ -313,6 +313,8 @@ def _srp_key_sql(vec_sql: str, table_planes: list[list[float]]) -> str:
     """
     terms = ["CAST(0 AS BIGINT)"]
     for j, plane in enumerate(table_planes):
+        if any(x not in (1.0, -1.0) for x in plane):
+            raise ValueError(f"SRP plane components must be +1.0 or -1.0: {plane}")
         lit = "array(" + ", ".join("1.0D" if x > 0 else "-1.0D" for x in plane) + ")"
         terms.append(
             f"CAST(CASE WHEN {V.dot_sql(vec_sql, lit)} >= 0 "

@@ -1,10 +1,18 @@
-"""Physical-plan inspection over ``df.explain`` output."""
+"""Plan inspection: Catalyst size estimates and physical-plan facts."""
 
 from __future__ import annotations
 
 import re
 
 from pyspark.sql import DataFrame
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s optimized plan, in bytes.
+
+    The one probe behind every size gate. Driver-side metadata only: for
+    scans it is the file-size total, and no job runs."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _executed_plan(df: DataFrame) -> str:

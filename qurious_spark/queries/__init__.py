@@ -51,6 +51,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from qurious_spark.plans.inspect import plan_bytes
+
 REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -126,23 +128,23 @@ def sql_query(name: str, spark_sql: str, duck_sql: str | None = None) -> None:
 # tpch_q5 1.020→0.911 s interleaved A/B, jobs 4→2 / 9→7) that dwarfs the
 # actual sort whenever the sorted frame is a handful of aggregate rows.
 #
-# The rewrite (coalesce(1) + sortWithinPartitions — identical rows, order,
+# The rewrite (``/*+ COALESCE(1) */ ... SORT BY`` — identical rows, order,
 # and schema; the sort collapses to one task) is applied ONLY when the
 # Catalyst size estimate of the query's INPUT (``size_of``) is below
-# SPARK_GRAFT_SORT1_BYTES (default 1 GiB) — the same estimate-gated pattern
-# as checkpoint.checkpoint_if_large. The gate exists because coalesce(1)
+# SORT1_BYTES (1 GiB) — the same estimate-gated pattern as
+# checkpoint.checkpoint_if_large. The gate exists because the coalesce
 # also collapses the narrow stage UNDER the sort (the final-aggregate merge)
 # to one task reading one partial row per (group x map task): harmless when
 # the input is MBs, but at cluster scale (map tasks ~ input/128 MB) that is
 # a single-reducer straggler — exactly the blanket-coalesce(1) anti-pattern
 # VERDICT r11/r12 rejected. Above the gate the plan is the untouched wide
-# sort. Applied only to queries whose sorted output is provably bounded
+# ORDER BY. Applied only to queries whose sorted output is provably bounded
 # (group-by over an enumerable domain) so even the below-gate single task
 # is O(bound) rows; never to top-n (LIMIT already plans
 # TakeOrderedAndProject, no sampling job).
 # --------------------------------------------------------------------------- #
 
-SORT1_BYTES_DEFAULT = 1 << 30
+SORT1_BYTES = 1 << 30
 
 # name -> (inner_sql, pin_order_by): every registered final-sort query, with
 # the pieces needed to reconstruct the original one-statement form for the
@@ -150,40 +152,19 @@ SORT1_BYTES_DEFAULT = 1 << 30
 FINAL_SORT_FORMS: dict[str, tuple[str, str]] = {}
 
 
-def _order_columns(order_by: str):
-    """Parse a simple ORDER BY column list ("a, b DESC") into Columns with
-    the same asc/desc + default null-ordering semantics Spark SQL applies."""
-    from pyspark.sql import functions as F
-
-    cols = []
-    for term in order_by.split(","):
-        term = term.strip()
-        upper = term.upper()
-        if upper.endswith(" DESC"):
-            cols.append(F.expr(term[: -len(" DESC")].strip()).desc())
-        elif upper.endswith(" ASC"):
-            cols.append(F.expr(term[: -len(" ASC")].strip()).asc())
-        else:
-            cols.append(F.expr(term).asc())
-    return cols
-
-
-def final_sort_small(df: DataFrame, order_by: str, size_of: DataFrame | None = None) -> DataFrame:
+def final_sort_small(df: DataFrame, order_by: str, size_of: DataFrame) -> DataFrame:
     """Apply the query's final ORDER BY; single-partition form below the gate.
 
-    ``order_by`` is the ORDER BY column list as SQL text (single source of
-    truth with the oracle's clause). ``size_of`` is the frame whose Catalyst
-    size estimate stands in for the query's input scale (typically the fact
-    table); defaults to ``df`` itself. Driver-side metadata only — no job
-    runs for the probe. Both branches produce identical rows in identical
-    order with identical schemas (pinned per query)."""
-    cols = _order_columns(order_by)
-    thresh = int(os.environ.get("SPARK_GRAFT_SORT1_BYTES", SORT1_BYTES_DEFAULT))
-    probe = df if size_of is None else size_of
-    size = int(probe._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size < thresh:
-        return df.coalesce(1).sortWithinPartitions(*cols)
-    return df.orderBy(*cols)
+    ``order_by`` is the ORDER BY clause as SQL text over ``df``'s columns.
+    ``size_of`` is the frame whose Catalyst size estimate stands in for the
+    query's input scale (typically the fact table). Both branches produce
+    identical rows in identical order with identical schemas (pinned per
+    query)."""
+    if plan_bytes(size_of) < SORT1_BYTES:
+        sql = f"SELECT /*+ COALESCE(1) */ * FROM {{df}} SORT BY {order_by}"
+    else:
+        sql = f"SELECT * FROM {{df}} ORDER BY {order_by}"
+    return df.sparkSession.sql(sql, df=df)
 
 
 def sql_query_final_sort(
@@ -207,8 +188,8 @@ def sql_query_final_sort(
             spark.sql(_sql), _ob, size_of=spark.table(size_of_table)
         )
 
-    FINAL_SORT_FORMS[name] = (inner_sql, pin_order_by or order_by)
     register(name, fn, duck_sql if duck_sql is not None else full)
+    FINAL_SORT_FORMS[name] = (inner_sql, pin_order_by or order_by)
 
 
 def df_query(name: str, oracle: str | None):

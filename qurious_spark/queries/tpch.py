@@ -15,8 +15,6 @@ tiebreaker so top-n is deterministic.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +25,7 @@ from qurious_spark.queries import (
     sql_query,
     sql_query_final_sort,
 )
+from qurious_spark.plans.inspect import plan_bytes
 
 # --------------------------------------------------------------------------- #
 # Money-sum via bounded integer unit sums (optimization round 12, guide §1.2
@@ -62,19 +61,7 @@ from qurious_spark.queries import (
 # extra part scans and broadcast build cost more than they save (interleaved
 # A/B at sf0.1: q2 0.636→0.432 s, q17 0.530→0.406 s plain vs restricted).
 # Both forms are bit-equal (tests/test_moneysum.py pins each path).
-RESTRICT_BYTES_DEFAULT = 1 << 30
-
-
-def _input_is_large(df: DataFrame) -> bool:
-    """Catalyst size estimate vs SPARK_GRAFT_RESTRICT_BYTES — driver-side
-    metadata only, no job runs."""
-    thresh = int(
-        os.environ.get("SPARK_GRAFT_RESTRICT_BYTES", RESTRICT_BYTES_DEFAULT)
-    )
-    return (
-        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        >= thresh
-    )
+RESTRICT_BYTES = 1 << 30
 
 
 def _unit_expr(x: str, s: int) -> str:
@@ -215,7 +202,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Catalyst's decorrelated aggregate over a few MB costs less than the
     # restriction's extra part scans — A/B in the gate-constant header);
     # above it the r12 semi-join restriction pays for itself ~50x over.
-    if not _input_is_large(li):
+    if plan_bytes(li) < RESTRICT_BYTES:
         return spark.sql(_Q2_ORACLE)
     # the semi-filtered fact frame as ONE SQL text (r12 driver-latency pass;
     # same plan and broadcast hint, bit-equality held by the existing pin)
@@ -480,8 +467,11 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle replaces. Bit-equality vs the df form is pinned
     # (tests/test_moneysum.py::test_q10_matches_original, incl. a non-UTC
     # session-TZ sweep for the to_timestamp -> TIMESTAMP literal swap).
+    # r13: the final sort is the single-partition form at every scale: the
+    # sorted frame is structurally <= 20 rows (the `top` CTE's LIMIT
+    # survives the two inner joins), so it needs no size gate.
     ensure_views(spark, sf_dir)
-    out = spark.sql(
+    return spark.sql(
         """
         WITH rev AS (
             SELECT o.o_custkey,
@@ -502,18 +492,12 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
             ORDER BY r.revenue DESC, r.o_custkey
             LIMIT 20
         )
-        SELECT c.c_custkey, c.c_name, t.revenue, c.c_acctbal, n.n_name
+        SELECT /*+ COALESCE(1) */ c.c_custkey, c.c_name, t.revenue, c.c_acctbal, n.n_name
         FROM top t
         JOIN customer c ON t.o_custkey = c.c_custkey
         JOIN nation n ON c.c_nationkey = n.n_nationkey
+        SORT BY revenue DESC, c_custkey
         """
-    )
-    # r13: size-gated final sort. The sorted frame is structurally <= 20
-    # rows (the `top` CTE's LIMIT survives the two inner joins), so even the
-    # below-gate single task is O(20); above the gate the wide range sort
-    # stays, same as every other final_sort_small site.
-    return final_sort_small(
-        out, "revenue DESC, c_custkey", size_of=spark.table("lineitem")
     )
 
 
@@ -825,9 +809,9 @@ _Q17_ORACLE = """
 def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_views(spark, sf_dir)
     li = spark.table("lineitem")
-    # r13: same input-size gate as tpch_q2 (see RESTRICT_BYTES_DEFAULT) —
+    # r13: same input-size gate as tpch_q2 (see RESTRICT_BYTES) —
     # plain correlated SQL below it, the r12 restriction above it.
-    if not _input_is_large(li):
+    if plan_bytes(li) < RESTRICT_BYTES:
         return spark.sql(_Q17_ORACLE)
     # one broadcast semi-join restricts BOTH consumers to Brand#13 partkeys
     # (ONE SQL text — r12 driver-latency pass; same plan, pin-held)

@@ -154,17 +154,18 @@ def _check_env_conf(active: SparkSession) -> None:
 def get_spark(app_name: str = "qurious_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    Defaults target local[$SPARK_GRAFT_CPUS] for tests while keeping every
-    setting cluster-appropriate: AQE on (runtime re-planning, skew-join
-    handling, partition coalescing), Arrow transfer on (pandas UDF hot path),
-    UTC session timezone (stable vs the DuckDB oracle).
+    Defaults target local[$SPARK_GRAFT_CPUS] (unset: the CPUs this process
+    may run on) for tests while keeping every setting cluster-appropriate:
+    AQE on (runtime re-planning, skew-join handling, partition coalescing),
+    Arrow transfer on (pandas UDF hot path), UTC session timezone (stable vs
+    the DuckDB oracle).
     """
     with _lock:
         active = SparkSession.getActiveSession()
         if active is not None:
             _check_env_conf(active)
             return active
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
         master = master or f"local[{cpus}]"
         # Scan-split sizing: Spark's 128m default is right for cluster-scale
         # parquet; local test data is a few MB per file, so benchmarks set

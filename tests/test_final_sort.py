@@ -3,8 +3,8 @@ final_sort_small).
 
 Every converted query must produce the EXACT same rows, in the EXACT same
 order, with the EXACT same schema as the original single-statement ORDER BY
-form — on BOTH sides of the size gate (coalesce(1)+sortWithinPartitions
-below, plain orderBy above). The gate env var is read per call, so both
+form — on BOTH sides of the size gate (``/*+ COALESCE(1) */ ... SORT BY``
+below, plain ORDER BY above). The gate constant is read per call, so both
 branches are exercised inside one session.
 """
 
@@ -61,12 +61,16 @@ def test_final_sort_above_gate_is_plain_orderby(spark, monkeypatch):
     q.load_all()
     q.ensure_views(spark, SF)
     name, (inner, order_by) = next(iter(q.FINAL_SORT_FORMS.items()))
-    monkeypatch.setenv("SPARK_GRAFT_SORT1_BYTES", "0")
+    monkeypatch.setattr(q, "SORT1_BYTES", 0)
     above = q.REGISTRY[name](spark, SF)
     plan = above._jdf.queryExecution().optimizedPlan().toString()
     assert "Coalesce" not in plan, "gate=0 must keep the wide sort"
     original = spark.sql(f"{inner}\n    ORDER BY {order_by}")
     assert_frames_bit_equal(original, above)
+    # tpch_q10 sorts at most its LIMIT 20 rows: single-partition, no gate
+    # (rows pinned by tests/test_moneysum.py::test_q10_matches_original)
+    q10 = q.REGISTRY["tpch_q10"](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce" in q10 and "rangepartitioning" not in q10
 
 
 def test_final_sort_below_gate_plans_no_range_exchange(spark, monkeypatch):
@@ -77,7 +81,7 @@ def test_final_sort_below_gate_plans_no_range_exchange(spark, monkeypatch):
 
     q.load_all()
     q.ensure_views(spark, SF)
-    monkeypatch.setenv("SPARK_GRAFT_SORT1_BYTES", str(1 << 40))
+    monkeypatch.setattr(q, "SORT1_BYTES", 1 << 40)
     for name in q.FINAL_SORT_FORMS:
         df = q.REGISTRY[name](spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -86,26 +90,27 @@ def test_final_sort_below_gate_plans_no_range_exchange(spark, monkeypatch):
 
 
 def test_df_final_sort_queries_match_orderby(spark, monkeypatch):
-    """The df-form call sites (tpch_q10/q11/q13/q15) must match their own
-    orderBy variant on both gate branches."""
+    """The df-form call sites (tpch_q11/q13/q15) must match their own
+    ORDER BY variant on both gate branches."""
     import qurious_spark.queries as q
 
     q.load_all()
     q.ensure_views(spark, SF)
-    for name in ("tpch_q10", "tpch_q11", "tpch_q13", "tpch_q15"):
-        monkeypatch.setenv("SPARK_GRAFT_SORT1_BYTES", "0")
+    for name in ("tpch_q11", "tpch_q13", "tpch_q15"):
+        monkeypatch.setattr(q, "SORT1_BYTES", 0)
         wide = q.REGISTRY[name](spark, SF)
-        monkeypatch.setenv("SPARK_GRAFT_SORT1_BYTES", str(1 << 40))
+        monkeypatch.setattr(q, "SORT1_BYTES", 1 << 40)
         small = q.REGISTRY[name](spark, SF)
         assert_frames_bit_equal(wide, small)
 
 
-def test_order_columns_parser():
-    from qurious_spark.queries import _order_columns
+def test_duplicate_final_sort_name_leaves_forms_unchanged():
+    """A rejected duplicate registration must not overwrite the pin form of
+    the query that owns the name."""
+    import qurious_spark.queries as q
 
-    cols = _order_columns("a, b DESC, c ASC, d desc")
-    texts = [str(c) for c in cols]
-    assert "ASC" in texts[0] and "'a" in texts[0]
-    assert "DESC" in texts[1] and "'b" in texts[1]
-    assert "ASC" in texts[2] and "'c" in texts[2]
-    assert "DESC" in texts[3] and "'d" in texts[3]
+    q.load_all()
+    before = dict(q.FINAL_SORT_FORMS)
+    with pytest.raises(ValueError, match="duplicate query name"):
+        q.sql_query_final_sort("tpch_q1", "SELECT 1 AS x", order_by="x")
+    assert q.FINAL_SORT_FORMS == before

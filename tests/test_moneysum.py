@@ -132,10 +132,10 @@ def test_q17_matches_original(spark, monkeypatch):
     """The brand-restricted q17 aggregate must reproduce the correlated-
     subquery SQL bit-for-bit (the per-partkey AVG set is unchanged because
     p_partkey is part's key). The restriction is size-gated since r13
-    (plain SQL below SPARK_GRAFT_RESTRICT_BYTES); forcing the gate to 0
-    keeps this pin on the non-trivial restricted path — the one a cluster
-    input takes."""
-    monkeypatch.setenv("SPARK_GRAFT_RESTRICT_BYTES", "0")
+    (plain SQL below tpch.RESTRICT_BYTES); forcing the gate to 0 keeps
+    this pin on the non-trivial restricted path — the one a cluster input
+    takes."""
+    monkeypatch.setattr("qurious_spark.queries.tpch.RESTRICT_BYTES", 0)
     import qurious_spark.queries as q
 
     q.load_all()
@@ -215,12 +215,12 @@ def test_q15_matches_original(spark):
 
 
 def test_q15_matches_original_materialized(spark, monkeypatch):
-    """Same pin with SPARK_GRAFT_MATERIALIZE_BYTES=0: the checkpoint_if_large
+    """Same pin with checkpoint.MATERIALIZE_BYTES=0: the checkpoint_if_large
     path (taken at cluster-scale input sizes) must produce the identical
     frame — materialization must never change values or schema."""
     import qurious_spark.queries as q
 
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_BYTES", "0")
+    monkeypatch.setattr("qurious_spark.checkpoint.MATERIALIZE_BYTES", 0)
     q.load_all()
     q.ensure_views(spark, SF)
     new_df = q.REGISTRY["tpch_q15"](spark, SF)
@@ -253,7 +253,7 @@ def test_q2_matches_original(spark, monkeypatch):
     correlated-subquery SQL row-for-row (order-insensitive — the query has
     no ORDER BY). Gate forced to 0 so the pin exercises the restricted
     path (see test_q17_matches_original)."""
-    monkeypatch.setenv("SPARK_GRAFT_RESTRICT_BYTES", "0")
+    monkeypatch.setattr("qurious_spark.queries.tpch.RESTRICT_BYTES", 0)
     import qurious_spark.queries as q
 
     q.load_all()
@@ -350,20 +350,20 @@ def test_q10_matches_original(spark):
 
 
 def test_materialized_paths_match(spark, monkeypatch):
-    """SPARK_GRAFT_MATERIALIZE_BYTES=0 forces every checkpoint_if_large site
+    """checkpoint.MATERIALIZE_BYTES=0 forces every checkpoint_if_large site
     (q2 li_f, q17 li_b13 — the path taken at cluster input sizes); each
     query must still reproduce its original SQL bit-for-bit. q21 no longer
     has a materialization site (its single-consumer rewrite makes one
-    lineitem pass structural) but stays in the sweep to prove the env knob
+    lineitem pass structural) but stays in the sweep to prove the gate
     cannot perturb it."""
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_BYTES", "0")
+    monkeypatch.setattr("qurious_spark.checkpoint.MATERIALIZE_BYTES", 0)
     test_q2_matches_original(spark, monkeypatch)
     test_q17_matches_original(spark, monkeypatch)
     test_q21_matches_original(spark)
 
 
 def test_q2_q17_restriction_gate_switches_plans(spark, monkeypatch):
-    """r13 size gate wiring: below SPARK_GRAFT_RESTRICT_BYTES the builders
+    """r13 size gate wiring: below tpch.RESTRICT_BYTES the builders
     return the plain decorrelated SQL (ONE part scan); forcing the gate to 0
     plans the semi-join restriction (a SECOND part scan feeding the
     broadcast keys). Both paths' results are pinned bit-equal by
@@ -377,10 +377,10 @@ def test_q2_q17_restriction_gate_switches_plans(spark, monkeypatch):
         plan = df._jdf.queryExecution().executedPlan().toString()
         return plan.count("part.parquet")
 
-    monkeypatch.setenv("SPARK_GRAFT_RESTRICT_BYTES", str(1 << 40))
+    monkeypatch.setattr("qurious_spark.queries.tpch.RESTRICT_BYTES", 1 << 40)
     assert part_scans(q.REGISTRY["tpch_q2"](spark, SF)) == 1
     assert part_scans(q.REGISTRY["tpch_q17"](spark, SF)) == 1
-    monkeypatch.setenv("SPARK_GRAFT_RESTRICT_BYTES", "0")
+    monkeypatch.setattr("qurious_spark.queries.tpch.RESTRICT_BYTES", 0)
     # the restriction adds at least one extra part scan (the broadcast key
     # side); q2 plans a third (its semi filter feeds two consumers)
     assert part_scans(q.REGISTRY["tpch_q2"](spark, SF)) >= 2

@@ -168,6 +168,13 @@ def test_srp_keyed_sql_text_form(spark, embeddings):
     assert new_df.schema == old_df.schema, (new_df.schema, old_df.schema)
     assert sorted(map(tuple, new_df.collect())) == sorted(map(tuple, old_df.collect()))
 
+    # the text form prints only signs, so any other component must raise
+    # instead of silently changing the bucket keys
+    bad = [list(plane) for plane in planes[0]]
+    bad[0][0] = 0.5
+    with pytest.raises(ValueError, match="SRP plane"):
+        S._srp_keyed(embeddings, "neighbor_id", [bad], "vec_id", "embedding")
+
 
 def test_unrolled_sql_twins(spark, embeddings):
     """r13: the SQL-text twins of the dim-unrolled dot/norm/cosine must be

@@ -27,8 +27,11 @@ _general = [f for f in _files if os.path.basename(f) != "tpch.slt"]
 _project = sorted(glob.glob(os.path.join(PROJECT_SQL_DIR, "*.slt")))
 
 
-@pytest.mark.skipif(not _general, reason="reference slt corpus not available")
-@pytest.mark.parametrize("slt_path", _general, ids=os.path.basename)
+_NO_CORPUS = "reference slt corpus is not on this host; SLT parity evidence is unavailable here"
+
+
+@pytest.mark.skipif(not _general, reason=_NO_CORPUS)
+@pytest.mark.parametrize("slt_path", _general, ids=[os.path.basename(f) for f in _general])
 def test_reference_slt_file(spark, slt_path):
     result = run_slt_file(slt_path, spark)
     assert result.ok, "\n".join(result.failures)
@@ -45,7 +48,7 @@ def test_project_slt_file(spark, slt_path):
 
 
 @pytest.mark.slow
-@pytest.mark.skipif(not _files, reason="reference slt corpus not available")
+@pytest.mark.skipif(not _files, reason=_NO_CORPUS)
 def test_reference_tpch_slt(spark, tmp_path_factory):
     """The reference's gated TPC-H slt pipeline (create_tables -> COPY ->
     q1-q12 -> drop_tables), end-to-end. The dbgen ``.tbl`` data the corpus
