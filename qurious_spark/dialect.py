@@ -6,10 +6,10 @@ Spark SQL lacks (SURVEY.md §7.1):
 - table functions in FROM: ``read_csv('p', delimiter=>'|')``, ``read_json``,
   ``read_parquet`` (reference: qurious/src/planner/sql.rs:751-774,
   session.rs:169-192) — rewritten here to registered temp views;
-- ``COPY <table> FROM '<file>' (FORMAT CSV, DELIMITER '|', HEADER)``
+- ``COPY <table> FROM|TO '<file>' (FORMAT CSV, DELIMITER '|', HEADER)``
   (reference: qurious/src/planner/sql.rs:324-375);
-- DDL/DML against managed in-memory tables (CREATE/DROP/INSERT/DELETE/UPDATE,
-  reference: session.rs:128-151, 217-246) — parsed here, executed by
+- DDL/DML against managed in-memory tables (CREATE/DROP/INSERT/DELETE/UPDATE/
+  MERGE, reference: session.rs:128-151, 217-246) — parsed here, executed by
   ``Session``;
 - trailing commas in CREATE TABLE column lists
   (reference fixture: tests/tpch/create_tables.slt:10 ends ``s_rev VARCHAR,)``).
@@ -18,8 +18,15 @@ Spark 4 natively supports ``expr::TYPE`` casts, typed literals
 (``DATE '1998-09-02'``), INTERVAL arithmetic, EXTRACT, and Kleene AND/OR, so
 none of those need rewriting.
 
-This is a deliberately small regex-based pre-parser, not a SQL parser: every
-statement it does not recognize is passed through to Spark SQL untouched.
+This is a deliberately small pre-parser, not a SQL parser: every statement it
+does not recognize is passed through to Spark SQL untouched. Regexes match
+statement heads; finding a clause keyword, splitting a comma list and finding
+the ``)`` that closes a list or subquery all go through one scanner,
+``_scan``. Quoted spans are ``'…'`` (``''`` escapes a quote), ``"…"`` and
+```…```, and no keyword, comma or paren inside one counts; parens outside
+them nest. The scanner does not parse comments (``--``, ``/* */``),
+backslash escapes or dollar quoting: their characters count as plain text.
+``_sub_unquoted`` (used by the Session's rewrites) substitutes outside quotes.
 """
 
 from __future__ import annotations
@@ -30,7 +37,7 @@ from dataclasses import dataclass, field
 
 @dataclass
 class DdlDmlStatement:
-    kind: str  # create_table | drop_table | insert | delete | update | copy_from | merge
+    kind: str  # create_table | drop_table | insert | delete | update | copy_from | copy_to | merge
     table: str = ""
     if_exists: bool = False
     if_not_exists: bool = False
@@ -123,23 +130,22 @@ _DELETE_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _TRUNCATE_RE = re.compile(r"^\s*TRUNCATE\s+(?:TABLE\s+)?([\w.]+)\s*;?\s*$", re.IGNORECASE)
-# Only the UPDATE..SET prefix is regex-matched; the SET/WHERE split is done
-# by a paren/quote-aware scan (_find_top_level_keyword) so subqueries and
-# string literals containing " WHERE " don't truncate the assignment list.
+# Only the UPDATE..SET prefix is regex-matched; the SET/FROM/WHERE split is
+# done by _split_at_keyword so subqueries and string literals containing
+# " WHERE " don't truncate the assignment list.
 _UPDATE_PREFIX_RE = re.compile(
     r"^\s*UPDATE\s+([\w.]+)\s+SET\s+(.*?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-_COPY_RE = re.compile(
-    r"^\s*COPY\s+([\w.]+)\s+FROM\s+'([^']+)'\s*(?:\(([^)]*)\))?\s*;?\s*$",
-    re.IGNORECASE,
-)
-# COPY ... TO — unimplemented todo!() in the reference (sql.rs:315-322);
+# COPY ... TO is an unimplemented todo!() in the reference (sql.rs:315-322);
 # implemented here via df.write (SURVEY.md §7.4.6).
-_COPY_TO_RE = re.compile(
-    r"^\s*COPY\s+([\w.]+)\s+TO\s+'([^']+)'\s*(?:\(([^)]*)\))?\s*;?\s*$",
-    re.IGNORECASE,
+_COPY_RE = re.compile(
+    r"^\s*COPY\s+([\w.]+)\s+(FROM|TO)\s+'([^']+)'\s*(.*?)\s*;?\s*$",
+    re.IGNORECASE | re.DOTALL,
 )
+_COPY_OPTION_RE = re.compile(r"(\w+)(?:\s+('(?:[^']|'')*'|\S+))?$", re.DOTALL)
+# COPY FROM reads CSV only (Session hands the file to read_csv_like)
+_COPY_FORMATS = {"from": ("csv",), "to": ("csv", "json", "orc", "parquet")}
 
 
 def parse_ddl_dml(text: str) -> DdlDmlStatement | None:
@@ -151,43 +157,7 @@ def parse_ddl_dml(text: str) -> DdlDmlStatement | None:
 
     m = _COPY_RE.match(text)
     if m:
-        opts: dict[str, object] = {}
-        for part in _split_top_level_commas(m.group(3) or ""):
-            part = part.strip()
-            if not part:
-                continue
-            kv = re.match(r"(\w+)\s*(?:\s+'?([^']*)'?)?$", part)
-            if kv:
-                key = kv.group(1).lower()
-                val = kv.group(2)
-                if key == "delimiter":
-                    opts["delimiter"] = val
-                elif key == "header":
-                    opts["header"] = val is None or val.lower() in ("true", "on")
-                elif key == "format":
-                    opts["format"] = (val or "csv").lower()
-                elif key == "multiline":
-                    opts["multiline"] = val is None or val.lower() in ("true", "on")
-        return DdlDmlStatement(kind="copy_from", table=m.group(1), path=m.group(2), options=opts)
-
-    m = _COPY_TO_RE.match(text)
-    if m:
-        opts: dict[str, object] = {}
-        for part in _split_top_level_commas(m.group(3) or ""):
-            part = part.strip()
-            if not part:
-                continue
-            kv = re.match(r"(\w+)\s*(?:\s+'?([^']*)'?)?$", part)
-            if kv:
-                key = kv.group(1).lower()
-                val = kv.group(2)
-                if key == "format":
-                    opts["format"] = (val or "parquet").lower()
-                elif key == "delimiter":
-                    opts["delimiter"] = val
-                elif key == "header":
-                    opts["header"] = val is None or val.lower() in ("true", "on")
-        return DdlDmlStatement(kind="copy_to", table=m.group(1), path=m.group(2), options=opts)
+        return _parse_copy(m)
 
     m = _DROP_RE.match(text)
     if m:
@@ -202,24 +172,10 @@ def parse_ddl_dml(text: str) -> DdlDmlStatement | None:
         as_match = re.match(r"^(?:\((.*)\)\s*)?AS\s+(SELECT.*|VALUES.*)$", rest, re.IGNORECASE | re.DOTALL)
         if as_match:
             stmt.query = as_match.group(2)
-            return stmt
-        if rest.startswith("("):
-            body = rest[1:]
-            depth = 1
-            end = len(body)
-            for i, ch in enumerate(body):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        end = i
-                        break
-            stmt.columns = _parse_column_defs(body[:end])
-            return stmt
-        if not rest:
+        elif rest.startswith("("):
+            stmt.columns = _parse_column_defs(rest[1 : _close_paren(rest)])
+        elif not rest:
             stmt.columns = []
-            return stmt
         return stmt
 
     m = _INSERT_RE.match(text)
@@ -245,70 +201,75 @@ def parse_ddl_dml(text: str) -> DdlDmlStatement | None:
 
     m = _UPDATE_PREFIX_RE.match(text)
     if m:
-        body = m.group(2)
+        table = m.group(1)
+        set_part, from_part = _split_at_keyword(m.group(2), "FROM")
+        if from_part is None:
+            set_part, predicate = _split_at_keyword(set_part, "WHERE")
+            return DdlDmlStatement(
+                kind="update", table=table, assignments=_parse_set_list(set_part), predicate=predicate
+            )
         # UPDATE t SET ... FROM src WHERE join_cond  (Postgres/DuckDB form):
         # desugar to MERGE with a single WHEN MATCHED UPDATE arm — identical
         # semantics including the error on a target row matching multiple
         # source rows (DuckDB raises there too; Postgres picks arbitrarily,
         # which a deterministic engine must not).
-        from_i = _find_top_level_keyword(body, "FROM")
-        if from_i >= 0:
-            set_part = body[:from_i].rstrip()
-            after = body[from_i + len("FROM") :]
-            wsplit = _find_top_level_keyword(after, "WHERE")
-            source_part, on_cond = (
-                (after[:wsplit].strip(), after[wsplit + len("WHERE") :].strip().rstrip(";"))
-                if wsplit >= 0
-                else (after.strip().rstrip(";"), "TRUE")
-            )
-            assignments = {}
-            for part in _split_top_level_commas(set_part):
-                k, _, v = part.partition("=")
-                assignments[k.strip()] = v.strip()
-            src_is_query = source_part.startswith("(")
-            if src_is_query:
-                close = source_part.rfind(")")
-                src_text = source_part[1:close]
-                # the UPDATE regex is case-insensitive, so the optional AS
-                # keyword must be stripped case-insensitively too
-                tail = source_part[close + 1 :].strip()
-                if tail[:3].upper() == "AS " or tail[:3].upper() == "AS\t":
-                    tail = tail[3:].strip()
-                src_alias = tail or None
-            else:
-                toks = source_part.split()
-                src_text = toks[0]
-                rest = [t for t in toks[1:] if t.upper() != "AS"]
-                src_alias = rest[0] if rest else None
-            return DdlDmlStatement(
-                kind="merge",
-                table=m.group(1),
-                alias=m.group(1),  # target referenced by its own name
-                source=src_text,
-                source_is_query=src_is_query,
-                source_alias=src_alias or src_text,
-                on_cond=on_cond,
-                clauses=[
-                    MergeClause(
-                        matched=True, cond=None, action="update", assignments=assignments
-                    )
-                ],
-            )
-        split = _find_top_level_keyword(body, "WHERE")
-        set_part, predicate = (
-            (body[:split].rstrip(), body[split + len("WHERE") :].strip())
-            if split >= 0
-            else (body, None)
-        )
-        assignments: dict[str, str] = {}
-        for part in _split_top_level_commas(set_part):
-            k, _, v = part.partition("=")
-            assignments[k.strip()] = v.strip()
+        source_part, on_cond = _split_at_keyword(from_part, "WHERE")
+        source, is_query, alias, rest = _parse_source(source_part)
+        if rest.strip():
+            raise ValueError(f"UPDATE ... FROM: cannot parse source: {source_part.strip()!r}")
         return DdlDmlStatement(
-            kind="update", table=m.group(1), assignments=assignments, predicate=predicate
+            kind="merge",
+            table=table,
+            alias=table,  # target referenced by its own name
+            source=source,
+            source_is_query=is_query,
+            source_alias=alias or source,
+            on_cond=on_cond or "TRUE",
+            clauses=[
+                MergeClause(
+                    matched=True, cond=None, action="update", assignments=_parse_set_list(set_part)
+                )
+            ],
         )
 
     return None
+
+
+def _parse_copy(m: re.Match) -> DdlDmlStatement:
+    """``COPY <t> FROM|TO '<path>' [(<options>)]`` from a ``_COPY_RE``
+    match. An unknown option, or a FORMAT the direction cannot handle,
+    raises instead of being dropped."""
+    direction, tail = m.group(2).lower(), m.group(4)
+    if tail and (not tail.startswith("(") or _close_paren(tail) != len(tail) - 1):
+        raise ValueError(f"COPY: expected (options) after the path, got {tail!r}")
+    opts: dict[str, object] = {}
+    for part in _split_top_level_commas(tail[1:-1]):
+        part = part.strip()
+        if not part:
+            continue
+        kv = _COPY_OPTION_RE.match(part)
+        key = kv.group(1).lower() if kv else None
+        if key not in ("format", "delimiter", "header", "multiline"):
+            raise ValueError(
+                f"COPY: unsupported option {part!r} (expected FORMAT, DELIMITER, HEADER or MULTILINE)"
+            )
+        val = kv.group(2)
+        if val is not None and val.startswith("'"):
+            val = _parse_literal(val)
+        if key in ("header", "multiline"):
+            opts[key] = val is None or val.lower() in ("true", "on")
+        elif val is None:
+            raise ValueError(f"COPY: {key.upper()} needs a value")
+        elif key == "format" and val.lower() not in _COPY_FORMATS[direction]:
+            raise ValueError(
+                f"COPY {direction.upper()}: FORMAT {val} is not supported "
+                f"(supported: {', '.join(_COPY_FORMATS[direction]).upper()})"
+            )
+        else:
+            opts[key] = val.lower() if key == "format" else val
+    return DdlDmlStatement(
+        kind=f"copy_{direction}", table=m.group(1), path=m.group(3), options=opts
+    )
 
 
 _MERGE_HEAD_RE = re.compile(
@@ -326,38 +287,13 @@ def _parse_merge(text: str) -> DdlDmlStatement | None:
     if not m:
         return None
     stmt = DdlDmlStatement(kind="merge", table=m.group(1), alias=m.group(2))
-    rest = text[m.end() :]
-    if rest.lstrip().startswith("("):
-        rest = rest.lstrip()
-        depth = 0
-        end = -1
-        for i, ch in enumerate(rest):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    end = i
-                    break
-        if end < 0:
-            raise ValueError("MERGE: unbalanced parens in USING source")
-        stmt.source = rest[1:end].strip()
-        stmt.source_is_query = True
-        rest = rest[end + 1 :]
-    else:
-        m2 = re.match(r"\s*([\w.]+)", rest)
-        if not m2:
-            raise ValueError("MERGE: missing USING source")
-        stmt.source = m2.group(1)
-        rest = rest[m2.end() :]
-    m3 = re.match(
-        r"\s*(?:(?:AS\s+)?(?!ON\b)(\w+)\s+)?ON\s+(.*)$", rest, re.IGNORECASE | re.DOTALL
-    )
+    stmt.source, stmt.source_is_query, stmt.source_alias, rest = _parse_source(text[m.end() :])
+    m3 = re.match(r"\s*ON\s+(.*)$", rest, re.IGNORECASE | re.DOTALL)
     if not m3:
         raise ValueError("MERGE: missing ON condition")
-    stmt.source_alias = m3.group(1)
-    tail = m3.group(2)
-    whens = list(_MERGE_WHEN_RE.finditer(tail))
+    tail = m3.group(1)
+    top_level = {i for i, depth in _scan(tail) if depth == 0}
+    whens = [w for w in _MERGE_WHEN_RE.finditer(tail) if w.start() in top_level]
     if not whens:
         raise ValueError("MERGE: at least one WHEN clause required")
     stmt.on_cond = tail[: whens[0].start()].strip()
@@ -366,6 +302,38 @@ def _parse_merge(text: str) -> DdlDmlStatement | None:
         seg = tail[w.end() : seg_end].strip().rstrip(";").strip()
         stmt.clauses.append(_parse_merge_clause(matched=not w.group(1), seg=seg))
     return stmt
+
+
+_ALIAS_RE = re.compile(r"\s*(?:AS\s+)?(?!ON\b)(\w+)", re.IGNORECASE)
+
+
+def _parse_source(text: str) -> tuple[str, bool, str | None, str]:
+    """The USING source of MERGE, or the FROM source of UPDATE:
+    ``(query) [[AS] alias]`` or ``name [[AS] alias]`` at the start of
+    ``text``. Returns (source, is_query, alias or None, the text after)."""
+    text = text.lstrip()
+    if text.startswith("("):
+        close = _close_paren(text)
+        source, is_query, rest = text[1:close].strip(), True, text[close + 1 :]
+    else:
+        m = re.match(r"[\w.]+", text)
+        if not m:
+            raise ValueError(f"expected a table name or (subquery), got {text!r}")
+        source, is_query, rest = m.group(0), False, text[m.end() :]
+    m = _ALIAS_RE.match(rest)
+    return (source, is_query, m.group(1), rest[m.end() :]) if m else (source, is_query, None, rest)
+
+
+def _parse_set_list(text: str) -> dict[str, str]:
+    """``col = expr, ...`` (UPDATE and MERGE's UPDATE arm) → {col: expr}.
+    Column names are kept as written; the Session resolves them."""
+    assignments: dict[str, str] = {}
+    for part in _split_top_level_commas(text):
+        col, eq, expr = part.partition("=")
+        if not eq:
+            raise ValueError(f"SET: expected column = expression, got {part.strip()!r}")
+        assignments[col.strip()] = expr.strip()
+    return assignments
 
 
 def _parse_merge_clause(matched: bool, seg: str) -> MergeClause:
@@ -384,12 +352,9 @@ def _parse_merge_clause(matched: bool, seg: str) -> MergeClause:
         mu = re.match(r"UPDATE\s+SET\s+(.*)$", action_text, re.IGNORECASE | re.DOTALL)
         if not mu:
             raise ValueError(f"MERGE: cannot parse UPDATE action: {action_text!r}")
-        assignments: dict[str, str] = {}
-        for part in _split_top_level_commas(mu.group(1)):
-            k, _, v = part.partition("=")
-            # allow `t.col = expr`; the target column is the bare name
-            assignments[k.strip().split(".")[-1]] = v.strip()
-        return MergeClause(matched=matched, cond=cond, action="update", assignments=assignments)
+        return MergeClause(
+            matched=matched, cond=cond, action="update", assignments=_parse_set_list(mu.group(1))
+        )
     if up.startswith("INSERT"):
         if matched:
             raise ValueError("MERGE: WHEN MATCHED cannot INSERT")
@@ -401,7 +366,7 @@ def _parse_merge_clause(matched: bool, seg: str) -> MergeClause:
             raise ValueError(f"MERGE: cannot parse INSERT action: {action_text!r}")
         cols = None
         if mi.group(2):
-            cols = [c.strip().split(".")[-1] for c in mi.group(2).split(",") if c.strip()]
+            cols = [c.strip() for c in mi.group(2).split(",") if c.strip()]
         vals = [v.strip() for v in _split_top_level_commas(mi.group(3))]
         if cols is not None and len(cols) != len(vals):
             raise ValueError("MERGE: INSERT column/value count mismatch")
@@ -450,8 +415,8 @@ class NotNull:
 
 
 def _parse_literal(raw: str) -> object:
-    if raw.startswith("'") and raw.endswith("'"):
-        return raw[1:-1]
+    if len(raw) >= 2 and raw.startswith("'") and raw.endswith("'"):
+        return raw[1:-1].replace("''", "'")
     low = raw.lower()
     if low == "null":
         return None
@@ -468,54 +433,63 @@ def _parse_literal(raw: str) -> object:
     return raw
 
 
-def _find_top_level_keyword(s: str, keyword: str) -> int:
-    """Index of the first whole-word ``keyword`` outside parens, string
-    literals, and quoted identifiers ("..." / `...`); -1 if absent. Same
-    depth/quote rules as _split_top_level_commas — an alias like
-    ``SELECT a AS "order by"`` must not register as a keyword hit."""
-    kw = keyword.upper()
+def _scan(s: str):
+    """Yield ``(i, depth)`` for every character ``s[i]`` outside a quoted
+    span (rules in the module docstring), ``depth`` being the paren depth
+    around it; a top-level ``(`` and its ``)`` both yield depth 0. ``''``
+    needs no case: it closes the literal and at once reopens it."""
     depth, quote = 0, None
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
+    for i, ch in enumerate(s):
         if quote is not None:
             if ch == quote:
                 quote = None
-        elif ch in ("'", '"', "`"):
+        elif ch in "'\"`":
             quote = ch
-        elif ch == "(":
-            depth += 1
         elif ch == ")":
             depth -= 1
-        elif depth == 0 and s[i : i + len(kw)].upper() == kw:
-            before_ok = i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")
-            after = i + len(kw)
-            after_ok = after >= n or not (s[after].isalnum() or s[after] == "_")
-            if before_ok and after_ok:
-                return i
-        i += 1
-    return -1
+            yield i, depth
+        else:
+            yield i, depth
+            if ch == "(":
+                depth += 1
+
+
+def _close_paren(s: str, start: int = 0) -> int:
+    """Index of the ``)`` that closes the ``(`` at ``s[start]``."""
+    for i, depth in _scan(s[start:]):
+        if depth == 0 and s[start + i] == ")":
+            return start + i
+    raise ValueError(f"unbalanced parentheses: {s[start:]!r}")
+
+
+def _find_top_level_keyword(s: str, keyword: str) -> int:
+    """Index of the first whole-word ``keyword`` outside parens and quoted
+    spans; -1 if absent. An alias like ``SELECT a AS "order by"`` must not
+    register as a keyword hit."""
+    hits = {m.start() for m in re.finditer(rf"(?<!\w){re.escape(keyword)}(?!\w)", s, re.IGNORECASE)}
+    return next((i for i, depth in _scan(s) if depth == 0 and i in hits), -1) if hits else -1
+
+
+def _split_at_keyword(s: str, keyword: str) -> tuple[str, str | None]:
+    """``s`` cut at its first top-level ``keyword``: (text before, stripped
+    text after), or (s, None) when the keyword is absent."""
+    i = _find_top_level_keyword(s, keyword)
+    return (s, None) if i < 0 else (s[:i], s[i + len(keyword) :].strip())
 
 
 def _split_top_level_commas(s: str) -> list[str]:
-    parts, depth, quote, cur = [], 0, None, []
-    for ch in s:
-        if quote is not None:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-            continue
-        cur.append(ch)
-    parts.append("".join(cur))
-    return parts
+    cuts = [i for i, depth in _scan(s) if depth == 0 and s[i] == ","]
+    return [s[a + 1 : b] for a, b in zip([-1, *cuts], [*cuts, len(s)])]
+
+
+def _sub_unquoted(pattern: re.Pattern, repl, text: str) -> str:
+    """``pattern.sub(repl, text)`` for the matches that lie wholly outside
+    quoted spans; the others are left as they are."""
+    if not pattern.search(text):
+        return text
+    outside = {i for i, _ in _scan(text)}
+    sub = repl if callable(repl) else (lambda m: m.expand(repl))
+    return pattern.sub(lambda m: sub(m) if outside.issuperset(range(*m.span())) else m.group(0), text)
 
 
 _INTERVAL_SUM_RE = re.compile(
@@ -752,7 +726,7 @@ def rewrite_qualify(text: str, wrap: bool = False) -> str:
 
 
 _READ_FN_RE = re.compile(
-    r"\b(read_csv|read_json|read_parquet|read_orc)\s*\(\s*'([^']+)'\s*((?:,[^)]*)?)\)",
+    r"\b(read_csv|read_json|read_parquet|read_orc)\s*(\()\s*'([^']+)'\s*[,)]",
     re.IGNORECASE,
 )
 
@@ -767,11 +741,7 @@ def rewrite_table_functions(session, text: str) -> str:
     """
     from qurious_spark.sources.readers import read_csv_like
 
-    def repl(m: re.Match) -> str:
-        fn = m.group(1).lower()
-        path = m.group(2)
-        opt_str = m.group(3) or ""
-        options = _parse_read_options(opt_str)
+    def register(fn: str, path: str, options: dict[str, object]) -> str:
         view = "file_" + re.sub(r"\W", "_", path).strip("_")
         if fn == "read_csv":
             df = read_csv_like(
@@ -789,7 +759,15 @@ def rewrite_table_functions(session, text: str) -> str:
         df.createOrReplaceTempView(view)
         return view
 
-    return _READ_FN_RE.sub(repl, text)
+    out, pos = [], 0
+    for m in _READ_FN_RE.finditer(text):
+        if m.start() < pos:
+            continue  # inside the arguments of a call already rewritten
+        close = _close_paren(text, m.start(2))
+        options = _parse_read_options(text[m.end() - 1 : close])
+        out += [text[pos : m.start()], register(m.group(1).lower(), m.group(3), options)]
+        pos = close + 1
+    return "".join(out) + text[pos:]
 
 
 def _parse_read_options(opt_str: str) -> dict[str, object]:

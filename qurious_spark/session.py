@@ -23,16 +23,19 @@ mutation-depth threshold so plan size stays bounded (SURVEY.md §7.4.5).
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 import os
 import re
 import threading
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qurious_spark.dialect import (
     DdlDmlStatement,
+    _sub_unquoted,
     fold_interval_quantity,
     parse_ddl_dml,
     rewrite_qualify,
@@ -51,6 +54,31 @@ CHECKPOINT_EVERY = 16
 
 # Time-travel history: versions retained per managed table (bounded ring).
 SNAPSHOT_KEEP = 8
+
+_INFO_SCHEMA_RE = re.compile(r"\binformation_schema\s*\.\s*tables\b", re.IGNORECASE)
+_TIME_TRAVEL_RE = re.compile(r"\b([\w.]+)\s+VERSION\s+AS\s+OF\s+(\d+)", re.IGNORECASE)
+
+
+def _resolve_columns(
+    names: Iterable[str], fields: list[str], table: str, alias: str | None = None
+) -> list[str]:
+    """Map DML target column names (SET, INSERT and MERGE INSERT column
+    lists) onto the table's field names as Spark resolves identifiers under
+    its default ``spark.sql.caseSensitive=false``: case-insensitively, after
+    stripping a ``<table or alias>.`` qualifier. Raises ValueError naming a
+    column that matches no field, or a field named twice."""
+    by_lower = {f.lower(): f for f in fields}
+    qualifiers = {q.lower() for q in (table, table.rsplit(".", 1)[-1], alias) if q}
+    out = []
+    for name in names:
+        qual, _, bare = name.strip().rpartition(".")
+        field = by_lower.get(bare.lower()) if not qual or qual.lower() in qualifiers else None
+        if field is None:
+            raise ValueError(f"column {name!r} not found in table {table} (columns: {', '.join(fields)})")
+        if field in out:
+            raise ValueError(f"column {field!r} of table {table} is named twice")
+        out.append(field)
+    return out
 
 
 def _env_bool(name: str, default: str) -> str:
@@ -287,7 +315,6 @@ class ManagedTable:
         self.df = df
         self.defaults = defaults or {}
         self.notnull = notnull or set()
-        self._mutations = 0
         # Session-scoped time travel: version -> snapshot DataFrame.
         # DataFrames are immutable plans, so a snapshot is just the df
         # reference at mutation time (no copy); the every-16 checkpoint in
@@ -319,13 +346,12 @@ class ManagedTable:
             )
 
     def _bump(self) -> None:
-        self._mutations += 1
-        if self._mutations % CHECKPOINT_EVERY == 0:
+        self.version += 1
+        if self.version % CHECKPOINT_EVERY == 0:
             # Truncate the union/filter plan chain; eager=True materializes
             # the table now so later reads plan against a flat scan instead
             # of the accumulated union/filter lineage.
             self.df = _checkpoint(self.df, eager=True)
-        self.version += 1
         self.snapshots[self.version] = self.df
         for v in [v for v in self.snapshots if v <= self.version - SNAPSHOT_KEEP]:
             del self.snapshots[v]
@@ -557,29 +583,16 @@ class Session:
         # information_schema.tables is a real queryable relation in the
         # reference (information_schema.rs:12-46; SHOW TABLES is sugar over
         # it, session.rs:78-81) — materialize it as a temp view on demand so
-        # arbitrary SELECTs against it work too.
-        info_view = None
-        if re.search(r"\binformation_schema\s*\.\s*tables\b", rewritten, re.IGNORECASE):
-            # substitute only OUTSIDE quoted spans — string literals ('..')
-            # AND quoted identifiers (".." / `..`); the view name is
-            # per-Session so concurrent Session objects sharing one
-            # SparkSession don't clobber each other's catalogs
-            view = f"q_information_schema_tables_{self._id}"
-            parts = re.split(r"('(?:[^']|'')*'|\"[^\"]*\"|`[^`]*`)", rewritten)
-            replaced = False
-            for i in range(0, len(parts), 2):  # even chunks are unquoted
-                new = re.sub(
-                    r"\binformation_schema\s*\.\s*tables\b",
-                    view,
-                    parts[i],
-                    flags=re.IGNORECASE,
-                )
-                replaced = replaced or new != parts[i]
-                parts[i] = new
-            if replaced:
-                self._show_tables().createOrReplaceTempView(view)
-                rewritten = "".join(parts)
-                info_view = view
+        # arbitrary SELECTs against it work too. The view name is per-Session
+        # so Session objects sharing one SparkSession don't clobber each
+        # other's catalogs.
+        info_view = f"q_information_schema_tables_{self._id}"
+        swapped = _sub_unquoted(_INFO_SCHEMA_RE, info_view, rewritten)
+        if swapped == rewritten:
+            info_view = None
+        else:
+            self._show_tables().createOrReplaceTempView(info_view)
+            rewritten = swapped
         rewritten = self._rewrite_time_travel(rewritten)
         m_hist = re.match(
             r"^\s*DESCRIBE\s+HISTORY\s+([\w.]+)\s*;?\s*$", rewritten, re.IGNORECASE
@@ -614,7 +627,6 @@ class Session:
         """``FROM t VERSION AS OF n`` over a managed table -> temp view of
         that snapshot (session-scoped time travel; Delta-style syntax,
         bounded history — see ManagedTable.snapshots)."""
-        import re
 
         def repl(m: re.Match) -> str:
             key = self._normalize_name(m.group(1))
@@ -625,25 +637,20 @@ class Session:
             self.tables[key].as_of(version).createOrReplaceTempView(view)
             return view
 
-        return re.sub(
-            r"\b([\w.]+)\s+VERSION\s+AS\s+OF\s+(\d+)", repl, text, flags=re.IGNORECASE
-        )
+        return _sub_unquoted(_TIME_TRAVEL_RE, repl, text)
 
     def _dequalify(self, text: str) -> str:
         """Strip default-catalog/schema qualifiers off managed-table
         references (qurious.public.t / public.t → t) so they resolve to the
         bare temp views — the reference's bare/partial/full name forms
         (table_relation.rs:8-38)."""
-        import re
-
-        for key in self.tables:
-            text = re.sub(
-                rf"\b(?:{DEFAULT_CATALOG}\.)?{DEFAULT_SCHEMA}\.({re.escape(key)})\b",
-                r"\1",
-                text,
-                flags=re.IGNORECASE,
-            )
-        return text
+        if not self.tables:
+            return text
+        keys = "|".join(map(re.escape, self.tables))
+        pattern = re.compile(
+            rf"\b(?:{DEFAULT_CATALOG}\.)?{DEFAULT_SCHEMA}\.({keys})\b", re.IGNORECASE
+        )
+        return _sub_unquoted(pattern, r"\1", text)
 
     def _show_tables(self) -> DataFrame:
         """SHOW TABLES parity: the reference rewrites it to a select over
@@ -695,7 +702,8 @@ class Session:
                 source = self.spark.sql(f"SELECT * FROM ({stmt.query})")
             else:
                 source = self.sql(stmt.query)
-            n = mt.insert_df(source, stmt.columns_list)
+            cols = stmt.columns_list and _resolve_columns(stmt.columns_list, mt.df.columns, stmt.table)
+            n = mt.insert_df(source, cols)
             self._put_table(mt.name, mt)
             return self._count_df(n)
         if kind == "delete":
@@ -705,7 +713,8 @@ class Session:
             return self._count_df(0)
         if kind == "update":
             mt = self._get_managed(stmt.table)
-            mt.update_set(stmt.assignments, stmt.predicate)
+            cols = _resolve_columns(stmt.assignments, mt.df.columns, stmt.table)
+            mt.update_set(dict(zip(cols, stmt.assignments.values())), stmt.predicate)
             self._put_table(mt.name, mt)
             return self._count_df(0)
         if kind == "merge":
@@ -728,13 +737,7 @@ class Session:
                 )
                 if stmt.options.get("delimiter"):
                     writer = writer.option("sep", stmt.options["delimiter"])
-                writer.csv(stmt.path)
-            elif fmt == "json":
-                writer.json(stmt.path)
-            elif fmt == "orc":
-                writer.orc(stmt.path)
-            else:
-                writer.parquet(stmt.path)
+            writer.format(fmt).save(stmt.path)  # the parser admits csv/json/orc/parquet
             return self._count_df(df.count())
         if kind == "copy_from":
             from qurious_spark.sources.readers import read_csv_like
@@ -778,6 +781,18 @@ class Session:
         mt = self._get_managed(stmt.table)
         talias = stmt.alias or "t"
         salias = stmt.source_alias or "s"
+
+        def resolve(names):
+            return _resolve_columns(names, mt.df.columns, stmt.table, talias)
+
+        clauses = [
+            dataclasses.replace(
+                c,
+                assignments=dict(zip(resolve(c.assignments), c.assignments.values())),
+                insert_columns=c.insert_columns and resolve(c.insert_columns),
+            )
+            for c in stmt.clauses
+        ]
         if source_df is not None:
             src = source_df
         else:
@@ -805,8 +820,8 @@ class Session:
 
         joined = target.join(source, cond, "left")
         matched = F.col(f"{salias}.__m").isNotNull()
-        m_clauses = [c for c in stmt.clauses if c.matched]
-        nm_clauses = [c for c in stmt.clauses if not c.matched]
+        m_clauses = [c for c in clauses if c.matched]
+        nm_clauses = [c for c in clauses if not c.matched]
 
         # winning MATCHED arm per row (first match wins), -1 = no arm applies
         winner = F.lit(-1)

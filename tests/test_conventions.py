@@ -114,3 +114,15 @@ def test_rdd_access_is_metadata_only_in_spread():
     ]
     assert not unexpected, f"new .rdd access outside spread(): {unexpected}"
     assert len(hits) == 1, f"expected exactly the spread() probe, got: {hits}"
+
+
+def test_one_paren_depth_counter_in_the_dialect_layer():
+    """The dialect layer tracks nesting and quoting in one scanner
+    (dialect._scan); a second ad-hoc paren counter in dialect.py or
+    session.py would bring back the quote-blind copies it replaced."""
+    pkg = os.path.dirname(QUERIES_DIR)
+    n = sum(
+        open(os.path.join(pkg, name)).read().count("depth += 1")
+        for name in ("dialect.py", "session.py")
+    )
+    assert n <= 1, f"{n} paren-depth counters in dialect.py + session.py; use dialect._scan"

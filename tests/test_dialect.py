@@ -1,5 +1,11 @@
 """Unit tests for the SQL dialect shim (no Spark needed)."""
 
+import dataclasses
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from qurious_spark.dialect import NotNull, map_sql_type, parse_ddl_dml
 
 
@@ -56,6 +62,32 @@ def test_delete_update():
 def test_copy_from():
     s = parse_ddl_dml("COPY lineitem FROM '/tmp/lineitem.tbl' (DELIMITER '|')")
     assert s.kind == "copy_from" and s.options["delimiter"] == "|"
+    s = parse_ddl_dml("COPY lineitem FROM '/tmp/lineitem.tbl' (DELIMITER ')', HEADER)")
+    assert s.options == {"delimiter": ")", "header": True}
+    # an unknown option, or a format COPY FROM cannot read, raises
+    for options, match in (("(QUOTE 'x')", "QUOTE"), ("(FORMAT JSON)", "JSON")):
+        with pytest.raises(ValueError, match=match):
+            parse_ddl_dml(f"COPY w FROM '/tmp/w' {options}")
+
+
+def test_create_default_paren_literal_keeps_every_column():
+    s = parse_ddl_dml("CREATE TABLE u (a VARCHAR DEFAULT ')', b INT)")
+    assert s.columns == [("a", "string", ")"), ("b", "bigint", None)]
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "MERGE INTO t USING (SELECT ')' AS k) s ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = 1",
+        "UPDATE t SET v = 1 FROM (SELECT ')' AS k) s WHERE t.k = s.k",
+    ],
+)
+def test_paren_literal_inside_source_subquery(sql):
+    s = parse_ddl_dml(sql)
+    assert (s.kind, s.source, s.source_is_query, s.source_alias, s.on_cond) == (
+        "merge", "SELECT ')' AS k", True, "s", "t.k = s.k"
+    )
+    assert s.clauses[0].assignments == {"v": "1"}
 
 
 def test_plain_select_passthrough():
@@ -263,3 +295,52 @@ def test_rewrite_qualify_qualified_order_by_using_join_untouched():
     )
     out4 = rewrite_qualify(sql4)
     assert out4.rstrip().endswith("ORDER BY x")
+
+
+# Each template takes three string literals. Substituting literals made of
+# the characters the pre-parser cuts on must change nothing in the parse but
+# the literals themselves.
+_LITERAL_TEMPLATES = (
+    "CREATE TABLE u (a VARCHAR DEFAULT {0}, b INT NOT NULL DEFAULT {1}, c DECIMAL(10,2), d VARCHAR DEFAULT {2})",
+    "UPDATE t SET a = {0}, b = concat(b, {1}) WHERE c = {2}",
+    "UPDATE t SET a = s.x, b = {0} FROM (SELECT {1} AS x, k FROM u) s WHERE t.k = s.k AND t.c <> {2}",
+    "MERGE INTO t USING (SELECT {0} AS k) s ON t.k = s.k "
+    "WHEN MATCHED AND s.k <> {1} THEN UPDATE SET v = {2}, w = 1 "
+    "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, {1})",
+    "COPY t FROM '/tmp/p' (DELIMITER {0}, HEADER)",
+    "COPY t TO '/tmp/p' (FORMAT CSV, DELIMITER {1})",
+)
+_TRICKY_LITERALS = ("')'", "'('", "','", "' WHERE '", "'FROM'", "''''", "'WHEN MATCHED'")
+
+
+def _parse_tree(sql: str, swaps: dict[str, tuple[str, str]] | None = None):
+    """asdict of the parse, NotNull spelled out; with ``swaps`` (plain
+    literal text -> (literal text, literal value)) each plain literal is
+    replaced by its counterpart, as SQL text or as a parsed value."""
+
+    def walk(x):
+        if isinstance(x, NotNull):
+            return ("NOT NULL", walk(x.default))
+        if isinstance(x, dict):
+            return {walk(k): walk(v) for k, v in x.items()}
+        if isinstance(x, (list, tuple)):
+            return [walk(v) for v in x]
+        if isinstance(x, str) and swaps:
+            for plain, (text, value) in swaps.items():
+                if x == plain[1:-1]:
+                    return value
+                x = x.replace(plain, text)
+        return x
+
+    return walk(dataclasses.asdict(parse_ddl_dml(sql)))
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    template=st.sampled_from(_LITERAL_TEMPLATES),
+    literals=st.tuples(*[st.sampled_from(_TRICKY_LITERALS)] * 3),
+)
+def test_quoted_literals_do_not_change_the_parse(template, literals):
+    plain = [f"'plain{i}'" for i in range(3)]
+    swaps = {p: (lit, lit[1:-1].replace("''", "'")) for p, lit in zip(plain, literals)}
+    assert _parse_tree(template.format(*literals)) == _parse_tree(template.format(*plain), swaps)

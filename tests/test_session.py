@@ -91,6 +91,12 @@ def test_read_csv_table_function(fresh):
         fh.write("id,name\n1,alice\n2,bob\n")
     rows = fresh.sql(f"SELECT id, name FROM read_csv('{p}') ORDER BY id").collect()
     assert [(r.id, r.name) for r in rows] == [(1, "alice"), (2, "bob")]
+    # a ')' inside an option literal does not end the argument list
+    p2 = os.path.join(d, "g.csv")
+    with open(p2, "w") as fh:
+        fh.write("id)name\n1)carol\n")
+    rows = fresh.sql(f"SELECT id, name FROM read_csv('{p2}', delimiter=>')')").collect()
+    assert [(r.id, r.name) for r in rows] == [(1, "carol")]
 
 
 def test_copy_from_tbl(fresh):
@@ -637,3 +643,50 @@ def test_max_partition_bytes_env_knob_guarded_on_reuse(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "256k")
     with pytest.raises(RuntimeError, match="SPARK_GRAFT_MAX_PARTITION_BYTES"):
         get_spark()
+
+
+@pytest.mark.parametrize(
+    "stmt, expected",
+    [
+        ("UPDATE rc_t SET A = 10", [(10, "x")]),
+        ("UPDATE rc_t SET rc_t.b = 'q'", [(1, "q")]),
+        ("UPDATE rc_t SET nosuch = 5", "nosuch"),
+        ("INSERT INTO rc_t (A, b) VALUES (2, 'y')", [(1, "x"), (2, "y")]),
+        (
+            "MERGE INTO rc_t t USING (SELECT 2 AS k) s ON t.a = s.k "
+            "WHEN NOT MATCHED THEN INSERT (A, b) VALUES (s.k, 'm')",
+            [(1, "x"), (2, "m")],
+        ),
+        (
+            "MERGE INTO rc_t t USING (SELECT 1 AS k) s ON t.a = s.k "
+            "WHEN MATCHED THEN UPDATE SET t.B = 'u'",
+            [(1, "u")],
+        ),
+        (
+            "MERGE INTO rc_t t USING (SELECT 1 AS k) s ON t.a = s.k "
+            "WHEN MATCHED THEN UPDATE SET s.b = 'u'",
+            "s.b",
+        ),
+    ],
+)
+def test_dml_target_columns_resolve_or_raise(fresh, stmt, expected):
+    # target columns resolve like Spark's default spark.sql.caseSensitive=false
+    # (case-insensitive, optional <table or alias>. qualifier) or raise naming
+    # the column — never a silent no-op or an all-NULL column
+    fresh.sql("CREATE TABLE rc_t (a INT, b VARCHAR)")
+    fresh.sql("INSERT INTO rc_t VALUES (1, 'x')")
+    if isinstance(expected, str):
+        with pytest.raises(ValueError, match=expected):
+            fresh.sql(stmt)
+        expected = [(1, "x")]
+    else:
+        fresh.sql(stmt)
+    assert sorted(tuple(r) for r in fresh.sql("SELECT a, b FROM rc_t").collect()) == expected
+
+
+def test_quoted_literals_survive_session_rewrites(fresh):
+    # the default-schema and time-travel rewrites leave string literals alone
+    fresh.sql("CREATE TABLE v (a INT)")
+    fresh.sql("INSERT INTO v VALUES (1)")
+    row = fresh.sql("SELECT 'public.v' AS lit, 'v VERSION AS OF 1' AS tt FROM public.v").collect()[0]
+    assert (row.lit, row.tt) == ("public.v", "v VERSION AS OF 1")
