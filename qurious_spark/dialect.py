@@ -760,9 +760,10 @@ def rewrite_table_functions(session, text: str) -> str:
         return view
 
     out, pos = [], 0
+    outside = {i for i, _ in _scan(text)} if _READ_FN_RE.search(text) else ()
     for m in _READ_FN_RE.finditer(text):
-        if m.start() < pos:
-            continue  # inside the arguments of a call already rewritten
+        if m.start() < pos or m.start() not in outside:
+            continue  # inside a quoted span, or a call already rewritten
         close = _close_paren(text, m.start(2))
         options = _parse_read_options(text[m.end() - 1 : close])
         out += [text[pos : m.start()], register(m.group(1).lower(), m.group(3), options)]
@@ -771,13 +772,15 @@ def rewrite_table_functions(session, text: str) -> str:
 
 
 def _parse_read_options(opt_str: str) -> dict[str, object]:
+    """``name => value`` (or ``=``) table-function options; others raise."""
     options: dict[str, object] = {}
     # quote-aware: delimiter=>',' must not split on its own comma
     for part in _split_top_level_commas(opt_str):
         part = part.strip()
         if not part:
             continue
-        m = re.match(r"(\w+)\s*(?:=>|=)\s*(.+)$", part)
-        if m:
-            options[m.group(1).lower()] = _parse_literal(m.group(2).strip())
+        m = re.match(r"(\w+)\s*(?:=>|=)\s*(.+)$", part, re.DOTALL)
+        if not m:
+            raise ValueError(f"read_*: cannot parse option {part!r} (expected name => value)")
+        options[m.group(1).lower()] = _parse_literal(m.group(2).strip())
     return options

@@ -25,16 +25,19 @@ from __future__ import annotations
 
 import dataclasses
 import itertools
+import math
 import os
 import re
 import threading
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructField
 
+from qurious_spark.dataframe import QFrame
 from qurious_spark.dialect import (
     DdlDmlStatement,
+    NotNull,
     _sub_unquoted,
     fold_interval_quantity,
     parse_ddl_dml,
@@ -79,6 +82,48 @@ def _resolve_columns(
             raise ValueError(f"column {field!r} of table {table} is named twice")
         out.append(field)
     return out
+
+
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, any backtick doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _group(expr: str) -> str:
+    """``(expr)``; the newline ends a trailing ``--`` comment in ``expr``."""
+    return f"({expr}\n)"
+
+
+def _cast(expr: str, field: StructField) -> str:
+    return f"CAST({_group(expr)} AS {field.dataType.simpleString()})"
+
+
+def _literal(value: object) -> str:
+    """A column default (a ``dialect._parse_literal`` value) as SQL text of
+    the type ``functions.lit(value)`` gives: a float takes the ``D`` suffix
+    (a bare ``1.5`` is decimal(2,1)); a string doubles ``'`` and ``\\``
+    (Spark unescapes backslashes)."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, int):  # bool included: TRUE / FALSE
+        return str(value).upper()
+    if isinstance(value, float):
+        return f"{value!r}D" if math.isfinite(value) else f"CAST('{value}' AS DOUBLE)"
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def _aligned(fields: Iterable[StructField], value: Callable[[str], str]) -> list[str]:
+    """``CAST(<value(name)> AS <type>) AS <name>``, one item per field."""
+    return [f"{_cast(value(f.name), f)} AS {_ident(f.name)}" for f in fields]
+
+
+def _case(arms: list[tuple[str, str]], otherwise: str | None = None) -> str | None:
+    """``CASE WHEN <cond> THEN <value> … [ELSE <otherwise>] END``, or just
+    ``otherwise`` when there are no arms."""
+    if not arms:
+        return otherwise
+    whens = " ".join(f"WHEN {_group(c)} THEN {v}" for c, v in arms)
+    return f"CASE {whens} ELSE {otherwise} END" if otherwise else f"CASE {whens} END"
 
 
 def _env_bool(name: str, default: str) -> str:
@@ -302,6 +347,10 @@ class ManagedTable:
     default fill, cast — reference qurious/src/planner/sql.rs:790-873),
     delete (anti-filter) and update (masked projection — the plan shape the
     reference builds at qurious/src/planner/sql.rs:377-432).
+
+    Every write passes SQL text (parsed predicates and SET expressions as
+    written, quoted identifiers, typed default literals) to ``selectExpr``
+    / ``where``: the plan a Column chain builds, in far fewer py4j calls.
     """
 
     def __init__(
@@ -334,15 +383,10 @@ class ManagedTable:
         """Enforce NOT NULL on incoming rows (the reference parses the
         constraint but never enforces it — qurious/src/planner/sql.rs; we
         implement it correctly per SURVEY §7.4.6). One count job."""
-        cols = [c for c in self.notnull if c in df.columns]
-        if not cols:
-            return
-        cond = None
-        for c in cols:
-            cond = F.col(c).isNull() if cond is None else cond | F.col(c).isNull()
-        if df.filter(cond).limit(1).count():
+        cols = sorted(self.notnull & set(df.columns))
+        if cols and df.where(" OR ".join(f"{_ident(c)} IS NULL" for c in cols)).limit(1).count():
             raise ValueError(
-                f"{op}: NOT NULL constraint violated on {self.name} ({', '.join(sorted(cols))})"
+                f"{op}: NOT NULL constraint violated on {self.name} ({', '.join(cols)})"
             )
 
     def _bump(self) -> None:
@@ -361,27 +405,15 @@ class ManagedTable:
         defaults, cast to target types, then union."""
         target_schema = self.df.schema
         n = source.count()
-        if columns:
-            if len(columns) != len(source.columns):
-                raise ValueError(
-                    f"INSERT column list has {len(columns)} columns but source has {len(source.columns)}"
-                )
-            source = source.toDF(*columns)
-        else:
-            if len(source.columns) != len(target_schema):
-                raise ValueError(
-                    f"INSERT source has {len(source.columns)} columns, table {self.name} has {len(target_schema)}"
-                )
-            source = source.toDF(*[f.name for f in target_schema])
-        exprs = []
-        for field in target_schema:
-            if field.name in source.columns:
-                exprs.append(F.col(field.name).cast(field.dataType).alias(field.name))
-            elif field.name in self.defaults:
-                exprs.append(F.lit(self.defaults[field.name]).cast(field.dataType).alias(field.name))
-            else:
-                exprs.append(F.lit(None).cast(field.dataType).alias(field.name))
-        aligned = source.select(*exprs)
+        names = columns or [f.name for f in target_schema]
+        if len(names) != len(source.columns):
+            into = "column list" if columns else f"table {self.name}"
+            raise ValueError(
+                f"INSERT source has {len(source.columns)} columns, {into} has {len(names)}"
+            )
+        aligned = source.toDF(*names).selectExpr(
+            *_aligned(target_schema, lambda c: _ident(c) if c in names else _literal(self.defaults.get(c)))
+        )
         self._check_notnull(aligned, "INSERT")
         self.df = self.df.unionByName(aligned)
         self._bump()
@@ -391,7 +423,7 @@ class ManagedTable:
         if predicate is None:
             self.df = self.df.limit(0)
         else:
-            self.df = self.df.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
+            self.df = self.df.where(f"NOT coalesce({_group(predicate)}, false)")
         self._bump()
 
     def replace_df(self, source: DataFrame) -> None:
@@ -403,23 +435,18 @@ class ManagedTable:
         missing = [f.name for f in target_schema if f.name not in source.columns]
         if missing:
             raise ValueError(f"replace_df source lacks columns: {missing}")
-        aligned = source.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target_schema]
-        )
+        aligned = source.selectExpr(*_aligned(target_schema, _ident))
         self._check_notnull(aligned, "REPLACE")
         self.df = aligned
         self._bump()
 
     def update_set(self, assignments: dict[str, str], predicate: str | None) -> None:
-        cond = F.expr(predicate) if predicate else F.lit(True)
-        exprs = []
-        for field in self.df.schema:
-            if field.name in assignments:
-                new_val = F.expr(assignments[field.name]).cast(field.dataType)
-                exprs.append(F.when(cond, new_val).otherwise(F.col(field.name)).alias(field.name))
-            else:
-                exprs.append(F.col(field.name))
-        updated = self.df.select(*exprs)
+        updated = self.df.selectExpr(*[
+            f"{_case([(predicate or 'true', _cast(assignments[f.name], f))], _ident(f.name))}"
+            f" AS {_ident(f.name)}"
+            if f.name in assignments else _ident(f.name)
+            for f in self.df.schema
+        ])
         if self.notnull & set(assignments):
             self._check_notnull(updated, "UPDATE")
         self.df = updated
@@ -462,7 +489,7 @@ class Session:
         """Register a vectorized scalar UDF (Arrow-backed pandas_udf — the
         Spark analogue of the reference's Arrow-native UDF trait,
         qurious/src/functions/mod.rs:10-21)."""
-        from pyspark.sql.functions import pandas_udf
+        from pyspark.sql.pandas.functions import pandas_udf
 
         self.spark.udf.register(name, pandas_udf(fn, return_type))
 
@@ -472,7 +499,7 @@ class Session:
         trait exists there — SURVEY.md §2.5); Arrow-batched like the scalar
         path: each group's column arrives as one pandas Series per batch and
         aggregates JVM-side-partitioned, Python-side-reduced."""
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
+        from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
 
         self.spark.udf.register(
             name, pandas_udf(fn, return_type, PandasUDFType.GROUPED_AGG)
@@ -500,8 +527,6 @@ class Session:
     def frame(self, name: str):
         """Fluent builder over a table (reference entry points B/C —
         qurious_spark.dataframe.QFrame)."""
-        from qurious_spark.dataframe import QFrame
-
         return QFrame(self.table(name))
 
     def _put_table(self, name: str, mt: ManagedTable) -> None:
@@ -679,8 +704,6 @@ class Session:
             else:
                 schema_ddl = ", ".join(f"{c} {t}" for c, t, _ in stmt.columns)
                 df = self.spark.createDataFrame([], schema_ddl)
-            from qurious_spark.dialect import NotNull
-
             defaults: dict[str, object] = {}
             notnull: set[str] = set()
             for c, _, d in stmt.columns or []:
@@ -773,17 +796,25 @@ class Session:
         reference, whose DML stops at INSERT/DELETE — session.rs:128-151).
 
         Plan shape (scale): ONE left outer join on the merge condition
-        handles every MATCHED arm (first-match-wins via a single when-chain
-        per column), ONE left anti join produces the NOT MATCHED inserts;
-        both are key-equi joins Catalyst can run as broadcast or shuffle
-        hash. No collect; the new table state stays a lazy plan.
+        handles every MATCHED arm (first-match-wins via one CASE per
+        column), ONE left anti join produces the NOT MATCHED inserts; both
+        are key-equi joins Catalyst can run as broadcast or shuffle hash.
+        No collect; the new table state stays a lazy plan.
+
+        The arms are SQL text in ``selectExpr``/``where``: a CASE picks the
+        winning arm ``__w``, and one CASE per column applies it. The joins
+        stay DataFrame joins (``QFrame.join`` parses the ON text), not one
+        ``spark.sql`` over temp views: a ``merge_into`` source from a
+        ``foreachBatch`` cloned session has temp views this one cannot read.
         """
         mt = self._get_managed(stmt.table)
         talias = stmt.alias or "t"
         salias = stmt.source_alias or "s"
+        fields = mt.df.schema.fields
+        names = [f.name for f in fields]
 
-        def resolve(names):
-            return _resolve_columns(names, mt.df.columns, stmt.table, talias)
+        def resolve(cols):
+            return _resolve_columns(cols, names, stmt.table, talias)
 
         clauses = [
             dataclasses.replace(
@@ -797,100 +828,64 @@ class Session:
             src = source_df
         else:
             src = self.sql(stmt.source) if stmt.source_is_query else self.table(stmt.source)
-        if "__m" in src.columns:
-            raise ValueError("MERGE: source may not contain a __m column")
-        cond = F.expr(stmt.on_cond)
+        src_cols = set(src.columns)
+        if src_cols & {"__m", "__w"}:
+            raise ValueError("MERGE: source may not contain a __m or __w column")
         target = mt.df.alias(talias)
-        source = src.withColumn("__m", F.lit(True)).alias(salias)
+        source = src.selectExpr("*", "true AS __m").alias(salias)
+
+        def join(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
+            return QFrame(left).join(QFrame(right), how, stmt.on_cond).to_spark()
+
+        def apply_arms(df: DataFrame, arms: list[dict[str, str]], keep: str | None) -> DataFrame:
+            """Each target column as a CASE over the value arm ``__w`` gives
+            it; else the column of relation ``keep`` (None: NULL)."""
+            items = []
+            for f in fields:
+                whens = [(f"__w = {i}", _cast(a[f.name], f)) for i, a in enumerate(arms) if f.name in a]
+                items.append(f"{_case(whens, keep and f'{keep}.{_ident(f.name)}')} AS {_ident(f.name)}")
+            return df.selectExpr(*items)
 
         # SQL-standard cardinality check: a target row may match at most one
         # source row (nondeterministic update otherwise). One count job.
-        dup = (
-            mt.df.withColumn("__tid", F.monotonically_increasing_id())
-            .alias(talias)
-            .join(source, cond, "inner")
-            .groupBy("__tid")
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
+        tagged = mt.df.selectExpr("*", "monotonically_increasing_id() AS __tid").alias(talias)
+        dup = join(tagged, source, "inner").groupBy("__tid").count().where("count > 1")
+        if dup.limit(1).count():
             raise ValueError("MERGE: a target row matched more than one source row")
 
-        joined = target.join(source, cond, "left")
-        matched = F.col(f"{salias}.__m").isNotNull()
         m_clauses = [c for c in clauses if c.matched]
         nm_clauses = [c for c in clauses if not c.matched]
 
         # winning MATCHED arm per row (first match wins), -1 = no arm applies
-        winner = F.lit(-1)
-        chain = None
-        for i, c in enumerate(m_clauses):
-            arm = matched & (F.expr(c.cond) if c.cond else F.lit(True))
-            chain = (chain.when(arm, i) if chain is not None else F.when(arm, i))
-        if chain is not None:
-            winner = chain.otherwise(F.lit(-1))
-        joined = joined.withColumn("__w", winner)
-        delete_arms = [i for i, c in enumerate(m_clauses) if c.action == "delete"]
-        kept = joined
-        if delete_arms:
-            kept = joined.filter(~F.col("__w").isin(delete_arms))
-        out_cols = []
-        for field in mt.df.schema:
-            val = F.col(f"{talias}.{field.name}")
-            upd = None
-            for i, c in enumerate(m_clauses):
-                if c.action == "update" and field.name in c.assignments:
-                    v = F.expr(c.assignments[field.name]).cast(field.dataType)
-                    upd = (upd.when(F.col("__w") == i, v) if upd is not None
-                           else F.when(F.col("__w") == i, v))
-            out_cols.append((upd.otherwise(val) if upd is not None else val).alias(field.name))
-        updated = kept.select(*out_cols)
+        when = [(f"{_ident(salias)}.__m IS NOT NULL AND {_group(c.cond or 'true')}", str(i))
+                for i, c in enumerate(m_clauses)]
+        joined = join(target, source, "left").selectExpr("*", f"{_case(when, '-1')} AS __w")
+        delete_arms = [str(i) for i, c in enumerate(m_clauses) if c.action == "delete"]
+        kept = joined.where(f"NOT __w IN ({', '.join(delete_arms)})") if delete_arms else joined
+        updated = apply_arms(kept, [c.assignments for c in m_clauses], _ident(talias))
         # NOT NULL applies to matched-update arms too, not just inserts —
         # an UPDATE SET x = NULL on a constrained column must fail the same
         # way INSERT/UPDATE do. Only pay the count job when an update arm
         # actually assigns a constrained column.
-        updated_cols = {
-            name
-            for c in m_clauses
-            if c.action == "update"
-            for name in c.assignments
-        }
-        if mt.notnull & updated_cols:
+        if mt.notnull & {name for c in m_clauses for name in c.assignments}:
             mt._check_notnull(updated, "MERGE")
 
         # NOT MATCHED side: anti-join source against target, then the
-        # first applicable insert arm builds each target column.
+        # first applicable insert arm builds each target column; a column
+        # an arm leaves out takes its default.
         inserted = None
         if nm_clauses:
-            anti = src.alias(salias).join(target, cond, "left_anti")
-            nm_winner = None
-            for i, c in enumerate(nm_clauses):
-                arm = F.expr(c.cond) if c.cond else F.lit(True)
-                nm_winner = (nm_winner.when(arm, i) if nm_winner is not None
-                             else F.when(arm, i))
-            anti = anti.withColumn("__w", nm_winner.otherwise(F.lit(-1))).filter(
-                F.col("__w") >= 0
-            )
-            ins_cols = []
-            for field in mt.df.schema:
-                per_arm = None
-                for i, c in enumerate(nm_clauses):
-                    if c.insert_values is None:  # INSERT *
-                        v = (F.col(f"{salias}.{field.name}") if field.name in src.columns
-                             else F.lit(mt.defaults.get(field.name)))
-                    else:
-                        cols = c.insert_columns or [f.name for f in mt.df.schema]
-                        if field.name in cols:
-                            v = F.expr(c.insert_values[cols.index(field.name)])
-                        else:
-                            v = F.lit(mt.defaults.get(field.name))
-                    v = v.cast(field.dataType)
-                    per_arm = (per_arm.when(F.col("__w") == i, v) if per_arm is not None
-                               else F.when(F.col("__w") == i, v))
-                ins_cols.append(per_arm.alias(field.name))
-            inserted = anti.select(*ins_cols)
+            when = [(c.cond or "true", str(i)) for i, c in enumerate(nm_clauses)]
+            anti = join(src.alias(salias), target, "left_anti")
+            anti = anti.selectExpr("*", f"{_case(when, '-1')} AS __w").where("__w >= 0")
+            arms = [
+                {n: f"{_ident(salias)}.{_ident(n)}" for n in names if n in src_cols}
+                if c.insert_values is None  # INSERT *
+                else dict(zip(c.insert_columns or names, c.insert_values, strict=True))
+                for c in nm_clauses
+            ]
+            defaults = {n: _literal(mt.defaults.get(n)) for n in names}
+            inserted = apply_arms(anti, [{**defaults, **a} for a in arms], None)
             mt._check_notnull(inserted, "MERGE")
 
         mt.df = updated.unionByName(inserted) if inserted is not None else updated

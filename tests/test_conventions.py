@@ -126,3 +126,26 @@ def test_one_paren_depth_counter_in_the_dialect_layer():
         for name in ("dialect.py", "session.py")
     )
     assert n <= 1, f"{n} paren-depth counters in dialect.py + session.py; use dialect._scan"
+
+
+def test_session_builds_no_column_chains():
+    """Managed-table writes pass SQL text to selectExpr/where; session.py
+    imports no pyspark.sql.functions, so per-column Column chains
+    (F.when/F.col/F.lit) cannot come back into the write path."""
+    import ast
+
+    path = os.path.join(os.path.dirname(QUERIES_DIR), "session.py")
+    bad = []
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            mods = [f"{node.module}.{a.name}" for a in node.names]
+        else:
+            continue
+        bad += [
+            f"line {node.lineno}: {m}"
+            for m in mods
+            if m == "pyspark.sql.functions" or m.startswith("pyspark.sql.functions.")
+        ]
+    assert not bad, f"session.py imports pyspark.sql.functions: {bad}"

@@ -5,8 +5,10 @@ Mirrors the reference's session-level SQL tests
 (create/insert/delete/group_by/join — SURVEY.md §5).
 """
 
+import math
 import os
 import tempfile
+from decimal import Decimal
 
 import pytest
 
@@ -45,13 +47,34 @@ def test_create_insert_select(fresh):
     assert [(r.v2, r.c) for r in rows] == [(1, 2), (2, 1)]
 
 
-def test_insert_column_subset_defaults(fresh):
-    # reference: tests/sql/insert.slt column-subset/default/NULL paths
-    fresh.sql("CREATE TABLE t_def (a INT, b INT DEFAULT 42, c VARCHAR)")
+@pytest.mark.parametrize(
+    "column, value, dtype",
+    [
+        ("INT DEFAULT 42", 42, "bigint"),
+        ("DOUBLE DEFAULT 1.5", 1.5, "double"),
+        ("BIGINT DEFAULT 3000000000", 3000000000, "bigint"),
+        ("DECIMAL(10,2) DEFAULT 0.1", Decimal("0.10"), "decimal(10,2)"),
+        ("BOOLEAN DEFAULT true", True, "boolean"),
+        ("VARCHAR DEFAULT 'it''s'", "it's", "string"),
+        # stored as written, backslash and all (no escape processing)
+        ("VARCHAR DEFAULT 'C:\\temp'", "C:\\temp", "string"),
+    ],
+    ids=["int", "double", "bigint", "decimal", "boolean", "quote", "backslash"],
+)
+def test_insert_column_subset_defaults(fresh, column, value, dtype):
+    # reference: tests/sql/insert.slt column-subset/default/NULL paths; the
+    # default is rendered as a typed SQL literal, so its value and type must
+    # survive that rendering on both INSERT (cols) and MERGE INSERT (cols)
+    fresh.sql(f"CREATE TABLE t_def (a INT, b {column}, c VARCHAR)")
     fresh.sql("INSERT INTO t_def (a) VALUES (1)")
     fresh.sql("INSERT INTO t_def (a, c) VALUES (2, 'x')")
-    rows = fresh.sql("SELECT a, b, c FROM t_def ORDER BY a").collect()
-    assert [(r.a, r.b, r.c) for r in rows] == [(1, 42, None), (2, 42, "x")]
+    fresh.sql(
+        "MERGE INTO t_def t USING (SELECT 3 AS a) s ON t.a = s.a "
+        "WHEN NOT MATCHED THEN INSERT (a) VALUES (s.a)"
+    )
+    df = fresh.sql("SELECT a, b, c FROM t_def ORDER BY a")
+    assert df.schema["b"].dataType.simpleString() == dtype
+    assert [tuple(r) for r in df.collect()] == [(1, value, None), (2, value, "x"), (3, value, None)]
 
 
 def test_insert_select_from(fresh):
@@ -97,6 +120,9 @@ def test_read_csv_table_function(fresh):
         fh.write("id)name\n1)carol\n")
     rows = fresh.sql(f"SELECT id, name FROM read_csv('{p2}', delimiter=>')')").collect()
     assert [(r.id, r.name) for r in rows] == [(1, "carol")]
+    # an option not in ``name => value`` form raises instead of being dropped
+    with pytest.raises(ValueError, match="cannot parse option"):
+        fresh.sql(f"SELECT * FROM read_csv('{p}', delimiter '|')")
 
 
 def test_copy_from_tbl(fresh):
@@ -685,8 +711,61 @@ def test_dml_target_columns_resolve_or_raise(fresh, stmt, expected):
 
 
 def test_quoted_literals_survive_session_rewrites(fresh):
-    # the default-schema and time-travel rewrites leave string literals alone
+    # the default-schema, time-travel and read_* rewrites leave string
+    # literals alone
     fresh.sql("CREATE TABLE v (a INT)")
     fresh.sql("INSERT INTO v VALUES (1)")
     row = fresh.sql("SELECT 'public.v' AS lit, 'v VERSION AS OF 1' AS tt FROM public.v").collect()[0]
     assert (row.lit, row.tt) == ("public.v", "v VERSION AS OF 1")
+    p = os.path.join(tempfile.mkdtemp(), "p.csv")
+    with open(p, "w") as fh:
+        fh.write("a\n1\n")
+    text = f"see read_csv('{p}')"
+    assert fresh.sql(f'SELECT "{text}" AS s').collect()[0].s == text
+
+
+def test_dml_on_keyword_and_spaced_column_names(fresh):
+    # every write quotes the target's column names in the SQL text it builds,
+    # and a trailing line comment does not swallow the text around it
+    fresh.sql("CREATE TABLE qi AS SELECT 1 AS `order`, 'x' AS `group`, 10 AS `a b`")
+    fresh.sql("UPDATE qi SET order = `order` + `a b`, group = 'y' WHERE `a b` = 10 -- note")
+    fresh.sql("INSERT INTO qi (order, group) VALUES (2, 'z')")
+    fresh.sql("INSERT INTO qi (group, order) VALUES ('w', 4)")
+    fresh.sql("DELETE FROM qi WHERE `group` = 'z' AND `a b` IS NULL -- note")
+    fresh.sql(
+        "MERGE INTO qi t USING (SELECT 11 AS `order`, 'm' AS `group`, 5 AS `a b` "
+        "UNION ALL SELECT 3, 'n', 7 UNION ALL SELECT 5, 'p', 1) s ON t.`order` = s.`order` "
+        "WHEN MATCHED THEN UPDATE SET group = s.`group` "
+        "WHEN NOT MATCHED AND s.`a b` > 6 THEN INSERT (order, group) VALUES (s.`a b`, s.`group`) "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    rows = fresh.sql("SELECT `order` AS o, `group` AS g, `a b` AS ab FROM qi ORDER BY o").collect()
+    assert [tuple(r) for r in rows] == [(4, "w", None), (5, "p", 1), (7, "n", None), (11, "m", 10)]
+
+
+def test_sql_text_renderers(spark):
+    from pyspark.sql import functions as F
+
+    from qurious_spark.session import _cast, _ident, _literal
+
+    # identifiers: always backtick-quoted, a backtick doubled
+    assert _ident("a b") == "`a b`" and _ident("x`y") == "`x``y`"
+    names = ["order", "a b", "x`y", "c.d"]
+    assert spark.range(1).selectExpr(*[f"1 AS {_ident(n)}" for n in names]).columns == names
+    # types: a CAST to the field's type gives exactly that type
+    schema = spark.createDataFrame(
+        [],
+        "a DECIMAL(10,2), b TIMESTAMP, c DATE, d ARRAY<BIGINT>, e MAP<STRING, DOUBLE>, "
+        "f STRUCT<x: INT, y: STRING>, g SMALLINT, h BINARY",
+    ).schema
+    cast = spark.range(1).selectExpr(*[f"{_cast('NULL', f)} AS {f.name}" for f in schema])
+    assert [f.dataType for f in cast.schema] == [f.dataType for f in schema]
+    # column defaults: the literal has the value and type F.lit gives
+    values = [None, True, False, 0, -7, 3000000000, 1.5, -0.25, 1e20, 0.1,
+              float("inf"), float("-inf"), float("nan"), "it's", "C:\\temp", "", "a\nb", "\\'"]
+    text = spark.range(1).selectExpr(*[f"{_literal(v)} AS c{i}" for i, v in enumerate(values)])
+    lit = spark.range(1).select(*[F.lit(v).alias(f"c{i}") for i, v in enumerate(values)])
+    assert [f.dataType for f in text.schema] == [f.dataType for f in lit.schema]
+    got, want = text.collect()[0], lit.collect()[0]
+    for v, g, w in zip(values, got, want):
+        assert w == v and g == v if v == v else math.isnan(w) and math.isnan(g)
