@@ -121,10 +121,7 @@ _CREATE_RE = re.compile(
 _DROP_RE = re.compile(
     r"^\s*DROP\s+TABLE\s+(?:(IF\s+EXISTS)\s+)?([\w.]+)\s*;?\s*$", re.IGNORECASE
 )
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+([\w.]+)\s*(\([^)]*\))?\s*(VALUES\s*.*|SELECT\s+.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
+_INSERT_RE = re.compile(r"^\s*INSERT\s+INTO\s+([\w.]+)\s*(.*)$", re.IGNORECASE | re.DOTALL)
 _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+([\w.]+)(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
@@ -180,15 +177,14 @@ def parse_ddl_dml(text: str) -> DdlDmlStatement | None:
 
     m = _INSERT_RE.match(text)
     if m:
-        cols = None
-        if m.group(2):
-            cols = [c.strip() for c in m.group(2).strip("() \t\n").split(",") if c.strip()]
-        return DdlDmlStatement(
-            kind="insert",
-            table=m.group(1),
-            columns_list=cols,
-            query=m.group(3).rstrip().rstrip(";"),
-        )
+        cols, query = _parse_column_list(m.group(2))
+        if re.match(r"VALUES|SELECT\s", query, re.IGNORECASE):
+            return DdlDmlStatement(
+                kind="insert",
+                table=m.group(1),
+                columns_list=cols,
+                query=query.rstrip().rstrip(";"),
+            )
 
     m = _DELETE_RE.match(text)
     if m:
@@ -361,19 +357,29 @@ def _parse_merge_clause(matched: bool, seg: str) -> MergeClause:
         body = action_text[len("INSERT") :].strip()
         if body == "*" or body == "":
             return MergeClause(matched=matched, cond=cond, action="insert")
-        mi = re.match(r"(\(([^)]*)\)\s*)?VALUES\s*\((.*)\)\s*$", body, re.IGNORECASE | re.DOTALL)
+        cols, rest = _parse_column_list(body)
+        mi = re.match(r"VALUES\s*\((.*)\)\s*$", rest, re.IGNORECASE | re.DOTALL)
         if not mi:
             raise ValueError(f"MERGE: cannot parse INSERT action: {action_text!r}")
-        cols = None
-        if mi.group(2):
-            cols = [c.strip() for c in mi.group(2).split(",") if c.strip()]
-        vals = [v.strip() for v in _split_top_level_commas(mi.group(3))]
+        vals = [v.strip() for v in _split_top_level_commas(mi.group(1))]
         if cols is not None and len(cols) != len(vals):
             raise ValueError("MERGE: INSERT column/value count mismatch")
         return MergeClause(
             matched=matched, cond=cond, action="insert", insert_columns=cols, insert_values=vals
         )
     raise ValueError(f"MERGE: unknown action: {action_text!r}")
+
+
+def _parse_column_list(text: str) -> tuple[list[str] | None, str]:
+    """The ``(col, ...)`` list that opens ``text`` (INSERT and MERGE INSERT):
+    (the names as written, the stripped text after the list), or (None,
+    the stripped text) when ``text`` does not open with one."""
+    text = text.strip()
+    if not text.startswith("("):
+        return None, text
+    close = _close_paren(text)
+    names = [c.strip() for c in _split_top_level_commas(text[1:close]) if c.strip()]
+    return names, text[close + 1 :].strip()
 
 
 def _parse_column_defs(body: str) -> list[tuple[str, str, object]]:

@@ -1,120 +1,57 @@
-"""Vector column functions (array<float|double>) — pure JVM expressions.
+"""Vector expressions (array<float|double>) as Spark SQL text.
 
-``F.zip_with`` / ``F.aggregate`` keep the arithmetic inside whole-stage
-codegen; no UDF in the hot path. All math is done in double (inputs cast)
-so the DuckDB oracle can replicate results exactly.
+Every function returns a SQL fragment, and its arguments are SQL fragments
+too (quote column names with backticks). Callers hand the text to
+``selectExpr``, ``F.expr`` or ``where``: one py4j round trip per
+expression, where a Column built from Python lambdas or per-dimension
+``getItem`` calls costs several per lambda or term. The math stays in JVM
+expressions (no UDF), is done in double (inputs cast) and sums fold left
+to right, so the DuckDB oracle can replicate results exactly.
+
+``dim`` picks the form of a sum. With ``dim`` given, the terms are written
+out one by one (``a[0]`` .. ``a[dim-1]``): plain arithmetic that
+whole-stage codegen compiles, ~10x faster on the cross-join hot path than
+the interpreted ``zip_with``/``aggregate`` fold used when ``dim`` is None.
+Both forms add in the same order, so on double input they give
+bit-identical results (pin: tests/test_similarity.py::test_unrolled_sql_twins).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Sequential-order dot product (matches DuckDB list_dot_product).
-
-    With ``dim`` given, the fold is unrolled into plain arithmetic —
-    bit-identical result (same left-to-right order), but whole-stage
-    codegen instead of interpreted HOF lambda evaluation (~10x on the
-    cross-join hot path). Callers that know the embedding width should
-    always pass it.
-    """
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + a.getItem(i).cast("double") * b.getItem(i).cast("double")
-        return acc
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def norm_sq(a: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            v = a.getItem(i).cast("double")
-            acc = acc + v * v
-        return acc
-    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-
-
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(norm_sq(a, dim))
-
-
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    """cosine = dot / (sqrt(|a|^2) * sqrt(|b|^2)); 0.0 for zero vectors."""
-    d = dot(a, b, dim)
-    denom = l2_norm(a, dim) * l2_norm(b, dim)
-    return F.when(denom > 0, d / denom).otherwise(F.lit(0.0))
-
-
-# --------------------------------------------------------------------------- #
-# SQL-text twins of the HOF (dim=None) forms above. Each Python-lambda HOF
-# costs ~6-10 py4j round trips to construct (lambda-variable registration +
-# tree assembly) and hot builders compose several per call; the text forms
-# parse to the SAME analyzed expression (same fold order — bit-identical
-# results; differential pin: tests/test_prep_ops.py::test_vector_sql_twins)
-# in ONE round trip. Arguments are SQL fragments (quoted column names).
-# --------------------------------------------------------------------------- #
+_ZERO = "CAST(0.0 AS DOUBLE)"
 
 
 def as_double_sql(vec: str) -> str:
     return f"transform({vec}, x -> CAST(x AS DOUBLE))"
 
 
-# SQL-text twins of the dim-UNROLLED forms (r13): each unrolled Column fold
-# costs ~4 py4j round trips per dimension per use — V.cosine(a, b, 64)
-# alone is ~14,600 round trips (measured on the lsh_topk rerank build, the
-# largest remaining builder hot spot after the SRP-key batching). The text
-# forms print the identical left-to-right unrolled tree (same 0-based
-# bracket indexing as Column.getItem, same cast placement) in ONE round
-# trip; bit-identical results pinned by
-# tests/test_similarity.py::test_unrolled_sql_twins.
+def dot_sql(a: str, b: str, dim: int | None = None) -> str:
+    """Sequential-order dot product (matches DuckDB list_dot_product)."""
+    if dim is None:
+        return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), {_ZERO}, (acc, v) -> acc + v)"
+    terms = [f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(dim)]
+    return "(" + " + ".join([_ZERO, *terms]) + ")"
 
 
-def dot_unrolled_sql(a: str, b: str, dim: int) -> str:
-    terms = ["CAST(0.0 AS DOUBLE)"] + [
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(dim)
-    ]
-    return "(" + " + ".join(terms) + ")"
+def norm_sq_sql(a: str, dim: int | None = None) -> str:
+    if dim is None:
+        return f"aggregate({a}, {_ZERO}, (acc, v) -> acc + v * v)"
+    return dot_sql(a, a, dim)
 
 
-def norm_sq_unrolled_sql(a: str, dim: int) -> str:
-    terms = ["CAST(0.0 AS DOUBLE)"] + [
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)" for i in range(dim)
-    ]
-    return "(" + " + ".join(terms) + ")"
+def l2_norm_sql(a: str, dim: int | None = None) -> str:
+    return f"sqrt({norm_sq_sql(a, dim)})"
 
 
-def l2_norm_unrolled_sql(a: str, dim: int) -> str:
-    return f"SQRT({norm_sq_unrolled_sql(a, dim)})"
+def cosine_sql(a: str, b: str, dim: int | None = None) -> str:
+    """cosine = dot / (sqrt(|a|^2) * sqrt(|b|^2)); 0.0 for zero vectors."""
+    denom = f"{l2_norm_sql(a, dim)} * {l2_norm_sql(b, dim)}"
+    return f"CASE WHEN {denom} > 0 THEN {dot_sql(a, b, dim)} / ({denom}) ELSE {_ZERO} END"
 
 
-def cosine_unrolled_sql(a: str, b: str, dim: int) -> str:
-    denom = f"{l2_norm_unrolled_sql(a, dim)} * {l2_norm_unrolled_sql(b, dim)}"
+def l2_sq_sql(a: str, b: str) -> str:
+    """Squared L2 distance between two arrays of equal length."""
     return (
-        f"CASE WHEN {denom} > 0 THEN {dot_unrolled_sql(a, b, dim)} / ({denom}) "
-        f"ELSE CAST(0.0 AS DOUBLE) END"
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), {_ZERO}, "
+        f"(acc, v) -> acc + v)"
     )
-
-
-def dot_sql(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def norm_sq_sql(a: str) -> str:
-    return f"aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + v * v)"
-
-
-def l2_norm_sql(a: str) -> str:
-    return f"sqrt({norm_sq_sql(a)})"

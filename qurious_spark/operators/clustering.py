@@ -53,7 +53,7 @@ def assign_clusters(
     scored = (
         with_double_vec(df, vec_col)
         .crossJoin(F.broadcast(centroids))
-        .withColumn("__sim", F.round(V.cosine(F.col(vec_col), F.col("centroid")), 6))
+        .withColumn("__sim", F.expr(f"round({V.cosine_sql(f'`{vec_col}`', 'centroid')}, 6)"))
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc("bucket"))
     return (
@@ -69,7 +69,8 @@ def seed_centroids(
     """Deterministic zero-iteration "centroids": the first ``n_clusters``
     vectors by id, bucket-numbered in id order. Replicable by any engine,
     which makes the full semantic-dedup pipeline exactly oracle-checkable;
-    pass the result of ``kmeans_centroids`` instead for real Lloyd's."""
+    pass the result of ``kmeans_centroids`` instead for real Lloyd's (it
+    starts from these seeds)."""
     return (
         with_double_vec(df, vec_col)
         .select(id_col, vec_col)
@@ -123,7 +124,7 @@ def semantic_dedup(
     dropped = (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.round(V.cosine(F.col("va"), F.col("vb")), 6) >= threshold)
+        .filter(F.expr(f"round({V.cosine_sql('va', 'vb')}, 6)") >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

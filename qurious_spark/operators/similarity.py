@@ -20,26 +20,27 @@ from qurious_spark.checkpoint import checkpoint as _checkpoint
 
 
 def with_double_vec(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    # SQL-text twin of V.as_double: one py4j round trip vs a Python-lambda
-    # HOF construction (~0.1 s/call on a py4j-degraded driver host)
     return df.withColumn(vec_col, F.expr(V.as_double_sql(f"`{vec_col}`")))
 
 
-def _l2_norm_col(col_name: str, dim: int | None):
-    """l2 norm of a column by name: HOF fold when dim is unknown, the
-    SQL-text twin of the unrolled form when it is (r13 — the unrolled
-    Column fold costs ~4 py4j round trips per dimension per use; the text
-    parses to the identical tree in one)."""
-    if dim is None:
-        return V.l2_norm(F.col(col_name))
-    return F.expr(V.l2_norm_unrolled_sql(f"`{col_name}`", dim))
+def hoisted_cosine_sql(a: str, b: str, na: str, nb: str, dim: int | None = None) -> str:
+    """``round(cosine(a, b), 6)`` as SQL text, given the l2 norms of ``a``
+    and ``b`` as the columns ``na`` and ``nb``: a pair scorer computes each
+    side's norm once per row before its join, not once per pair."""
+    return (
+        f"round(CASE WHEN {na} * {nb} > 0 THEN {V.dot_sql(a, b, dim)} / ({na} * {nb}) "
+        f"ELSE CAST(0.0 AS DOUBLE) END, 6)"
+    )
 
 
-def _cosine_col(a: str, b: str, dim: int | None):
-    """cosine(a, b) by column name — same twin policy as _l2_norm_col."""
-    if dim is None:
-        return V.cosine(F.col(a), F.col(b))
-    return F.expr(V.cosine_unrolled_sql(f"`{a}`", f"`{b}`", dim))
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best neighbors per query, ranked by (sim DESC, neighbor id ASC)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "sim")
+    )
 
 
 def brute_force_topk(
@@ -59,42 +60,10 @@ def brute_force_topk(
     join instead of once per pair.
     """
     if dim is None:
-        # SQL-text twins (one py4j round trip per expression; same analyzed
-        # tree as the Column/HOF forms — see functions/vector.py)
-        q = with_double_vec(queries, vec_col).selectExpr(
-            f"`{id_col}` AS query_id",
-            f"`{vec_col}` AS qv",
-            f"{V.l2_norm_sql(f'`{vec_col}`')} AS qn",
-        )
-        c = with_double_vec(corpus, vec_col).selectExpr(
-            f"`{id_col}` AS neighbor_id",
-            f"`{vec_col}` AS cv",
-            f"{V.l2_norm_sql(f'`{vec_col}`')} AS cn",
-        )
-        sim = F.expr(
-            "round(CASE WHEN qn * cn > 0 THEN "
-            f"{V.dot_sql('qv', 'cv')} / (qn * cn) "
-            "ELSE CAST(0.0 AS DOUBLE) END, 6)"
-        )
-    else:
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _l2_norm_col(vec_col, dim).alias("qn"),
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-            _l2_norm_col(vec_col, dim).alias("cn"),
-        )
-        denom = F.col("qn") * F.col("cn")
-        sim = F.round(
-            F.when(
-                denom > 0,
-                F.expr(V.dot_unrolled_sql("`qv`", "`cv`", dim)) / denom,
-            ).otherwise(F.lit(0.0)),
-            6,
-        )
+        corpus, queries = with_double_vec(corpus, vec_col), with_double_vec(queries, vec_col)
+    norm = V.l2_norm_sql(f"`{vec_col}`", dim)
+    q = queries.selectExpr(f"`{id_col}` AS query_id", f"`{vec_col}` AS qv", f"{norm} AS qn")
+    c = corpus.selectExpr(f"`{id_col}` AS neighbor_id", f"`{vec_col}` AS cv", f"{norm} AS cn")
     # spread the O(|corpus| x |queries|) scoring across the cluster: a small
     # corpus file may arrive as one input partition, and the cross join
     # inherits the streamed side's partitioning — the O(N) repartition is
@@ -104,14 +73,9 @@ def brute_force_topk(
         c.repartition(par)
         .crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", sim)
+        .withColumn("sim", F.expr(hoisted_cosine_sql("qv", "cv", "qn", "cn", dim)))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 # cosine_pairs refuses inputs above this size unless the caller raises the
@@ -146,22 +110,9 @@ def cosine_pairs(
             f"corpus-scale near-dup detection, or pass max_rows explicitly "
             f"to accept the quadratic cost"
         )
-    a = src.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        _l2_norm_col(vec_col, dim).alias("na"),
-    )
-    b = src.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        _l2_norm_col(vec_col, dim).alias("nb"),
-    )
-    denom = F.col("na") * F.col("nb")
-    dot = (
-        V.dot(F.col("va"), F.col("vb"))
-        if dim is None
-        else F.expr(V.dot_unrolled_sql("`va`", "`vb`", dim))
-    )
+    norm = V.l2_norm_sql(f"`{vec_col}`", dim)
+    a = src.selectExpr(f"`{id_col}` AS id_a", f"`{vec_col}` AS va", f"{norm} AS na")
+    b = src.selectExpr(f"`{id_col}` AS id_b", f"`{vec_col}` AS vb", f"{norm} AS nb")
     # same single-input-partition hazard as ann brute-force: parallelize the
     # O(N^2) pair scoring regardless of how few partitions the source has
     par = a.sparkSession.sparkContext.defaultParallelism
@@ -169,27 +120,22 @@ def cosine_pairs(
         a.repartition(par)
         .crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "sim",
-            F.round(
-                F.when(denom > 0, dot / denom).otherwise(F.lit(0.0)),
-                6,
-            ),
-        )
+        .withColumn("sim", F.expr(hoisted_cosine_sql("va", "vb", "na", "nb", dim)))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )
 
 
-def _avg_centroids(assigned: DataFrame, vec_col: str) -> DataFrame:
-    """Per-bucket mean vector: posexplode + per-dimension avg (one shuffle)."""
+def _avg_centroids(assigned: DataFrame, keys: list[str], vec_col: str) -> DataFrame:
+    """Mean vector per ``keys`` group, as ``centroid``: posexplode +
+    per-dimension avg (one shuffle)."""
     return (
-        assigned.select("bucket", F.posexplode(vec_col).alias("pos", "v"))
-        .groupBy("bucket", "pos")
+        assigned.select(*keys, F.posexplode(vec_col).alias("pos", "v"))
+        .groupBy(*keys, "pos")
         .agg(F.avg("v").alias("cv"))
-        .groupBy("bucket")
+        .groupBy(*keys)
         .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pairs"))
-        .select("bucket", F.transform("pairs", lambda p: p["cv"]).alias("centroid"))
+        .selectExpr(*keys, "transform(pairs, p -> p.cv) AS centroid")
     )
 
 
@@ -199,7 +145,7 @@ def _assign_to_centroids(
     """Nearest-centroid bucket per vector (centroids broadcast; max_by argmax)."""
     return (
         c.crossJoin(F.broadcast(cent))
-        .withColumn("sim", V.cosine(F.col(vec_col), F.col("centroid")))
+        .withColumn("sim", F.expr(V.cosine_sql(f"`{vec_col}`", "centroid")))
         .groupBy(id_col)
         .agg(
             F.max_by("bucket", F.struct(F.col("sim"), F.col("bucket"))).alias("bucket"),
@@ -218,25 +164,21 @@ def kmeans_centroids(
 ) -> DataFrame:
     """Distributed Lloyd iterations for the IVF coarse quantizer.
 
-    Deterministic init (first ``n_clusters`` vectors by id), then
-    assign-and-average rounds — each round is one broadcast join plus one
-    shuffle.  At 100 TB train on a sample (``sample_fraction``); the final
-    full-corpus assignment is a single broadcast pass either way.
+    Deterministic init (``clustering.seed_centroids``: the first
+    ``n_clusters`` vectors by id), then assign-and-average rounds — each
+    round is one broadcast join plus one shuffle.  At 100 TB train on a
+    sample (``sample_fraction``); the final full-corpus assignment is a
+    single broadcast pass either way.
     """
-    c = with_double_vec(corpus, vec_col).select(id_col, vec_col)
+    from qurious_spark.operators.clustering import seed_centroids
+
     if sample_fraction:
-        c = c.sample(fraction=sample_fraction, seed=42)
-    cent = (
-        c.orderBy(id_col)
-        .limit(n_clusters)
-        # unpartitioned window is benign by construction: its input is the
-        # limit(n_clusters) result — at most n_clusters (≈16) rows regardless
-        # of corpus size, so the single-partition exchange moves only those
-        .withColumn("bucket", F.row_number().over(Window.orderBy(id_col)) - 1)
-        .select("bucket", F.col(vec_col).alias("centroid"))
-    )
+        corpus = corpus.sample(fraction=sample_fraction, seed=42)
+    cent = seed_centroids(corpus, n_clusters, id_col, vec_col)
+    c = with_double_vec(corpus, vec_col).select(id_col, vec_col)
     for _ in range(iters):
-        cent = _avg_centroids(_assign_to_centroids(c, cent, id_col, vec_col), vec_col)
+        assigned = _assign_to_centroids(c, cent, id_col, vec_col)
+        cent = _avg_centroids(assigned, ["bucket"], vec_col)
     return cent
 
 
@@ -258,7 +200,7 @@ def ivf_assign(
     c = with_double_vec(corpus, vec_col)
     if quantizer == "label":
         cent = _avg_centroids(
-            c.select(F.col(label_col).alias("bucket"), F.col(vec_col)), vec_col
+            c.select(F.col(label_col).alias("bucket"), F.col(vec_col)), ["bucket"], vec_col
         )
         return cent, c.withColumn("bucket", F.col(label_col))
     from qurious_spark.operators.caching import persist_rotating
@@ -376,41 +318,22 @@ def lsh_topk(
             "neighbor_id",
         )
         .join(F.broadcast(q), "query_id")
-        .withColumn("sim", F.round(_cosine_col("qv", "cv", dim), 6))
+        .withColumn("sim", F.expr(f"round({V.cosine_sql('qv', 'cv', dim)}, 6)"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 def _pq_subvectors(df: DataFrame, id_out: str, id_col: str, vec_col: str,
                    n_subspaces: int, sub_dim: int) -> DataFrame:
-    """(id, s, sub): one row per (vector, subspace slice). F.slice is 1-based."""
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("s"),
-                F.transform(
-                    F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim),
-                    lambda x: x.cast("double"),
-                ).alias("sub"),
-            )
-            for s in range(n_subspaces)
-        ]
+    """(id, s, sub): one row per (vector, subspace slice). slice() is 1-based."""
+    slices = ", ".join(
+        f"struct({s} AS s, "
+        f"{V.as_double_sql(f'slice(`{vec_col}`, {s * sub_dim + 1}, {sub_dim})')} AS sub)"
+        for s in range(n_subspaces)
     )
-    return df.select(F.col(id_col).alias(id_out), F.explode(slices).alias("e")).select(
-        id_out, F.col("e.s").alias("s"), F.col("e.sub").alias("sub")
-    )
-
-
-def _l2_sq(a, b) -> F.Column:
-    """Squared L2 distance between two small arrays (HOF fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v
-    )
+    return df.selectExpr(
+        f"`{id_col}` AS `{id_out}`", f"explode(array({slices})) AS e"
+    ).selectExpr(f"`{id_out}`", "e.s AS s", "e.sub AS sub")
 
 
 def pq_codebooks(
@@ -441,21 +364,14 @@ def pq_codebooks(
     for _ in range(iters):
         assigned = (
             sub.join(F.broadcast(cent), "s")
-            .withColumn("d2", _l2_sq(F.col("sub"), F.col("centroid")))
+            .withColumn("d2", F.expr(V.l2_sq_sql("sub", "centroid")))
             .groupBy("id", "s")
             .agg(
                 F.min_by("code", F.struct(F.col("d2"), F.col("code"))).alias("code"),
                 F.first("sub").alias("sub"),
             )
         )
-        cent = (
-            assigned.select("s", "code", F.posexplode("sub").alias("pos", "v"))
-            .groupBy("s", "code", "pos")
-            .agg(F.avg("v").alias("cv"))
-            .groupBy("s", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pairs"))
-            .select("s", "code", F.transform("pairs", lambda p: p["cv"]).alias("centroid"))
-        )
+        cent = _avg_centroids(assigned, ["s", "code"], "sub")
         cent = _checkpoint(cent, eager=True)  # truncate the lineage per round
     return cent
 
@@ -495,17 +411,14 @@ def pq_topk(
     csub = _pq_subvectors(corpus, "neighbor_id", id_col, vec_col, n_subspaces, sub_dim)
     codes = (
         csub.join(F.broadcast(cb), "s")
-        .withColumn("d2", _l2_sq(F.col("sub"), F.col("centroid")))
+        .withColumn("d2", F.expr(V.l2_sq_sql("sub", "centroid")))
         .groupBy("neighbor_id", "s")
         .agg(F.min_by("code", F.struct(F.col("d2"), F.col("code"))).alias("code"))
     )
     qsub = _pq_subvectors(queries, "query_id", id_col, vec_col, n_subspaces, sub_dim)
     lut = (
         qsub.join(F.broadcast(cb), "s")
-        .select(
-            "query_id", "s", "code",
-            _l2_sq(F.col("sub"), F.col("centroid")).alias("partial"),
-        )
+        .selectExpr("query_id", "s", "code", f"{V.l2_sq_sql('sub', 'centroid')} AS partial")
     )
     scored = (
         codes.join(F.broadcast(lut), ["s", "code"])
@@ -524,14 +437,9 @@ def pq_topk(
     rescored = (
         shortlist.join(c, "neighbor_id")
         .join(F.broadcast(q), "query_id")
-        .withColumn("sim", F.round(V.cosine(F.col("qv"), F.col("cv")), 6))
+        .withColumn("sim", F.expr(f"round({V.cosine_sql('qv', 'cv')}, 6)"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(rescored, k)
 
 
 def ivf_topk(
@@ -556,7 +464,7 @@ def ivf_topk(
     probe_w = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("bucket"))
     probes = (
         q.crossJoin(F.broadcast(cent))
-        .withColumn("csim", _cosine_col("qv", "centroid", dim))
+        .withColumn("csim", F.expr(V.cosine_sql("qv", "centroid", dim)))
         .withColumn("prank", F.row_number().over(probe_w))
         .filter(F.col("prank") <= nprobe)
         .select("query_id", "qv", "bucket")
@@ -567,10 +475,5 @@ def ivf_topk(
         ),
         "bucket",
     ).filter(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cands.withColumn("sim", F.round(_cosine_col("qv", "cv", dim), 6))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    cands = cands.withColumn("sim", F.expr(f"round({V.cosine_sql('qv', 'cv', dim)}, 6)"))
+    return _top_k(cands, k)

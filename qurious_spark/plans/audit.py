@@ -88,16 +88,18 @@ ALLOW_NON_EQUI = {
 # scale-killer shape and fails the audit.
 ALLOW_GLOBAL_WINDOW = {
     # two-phase prefix sum: the global cumulative sum runs over the 64
-    # per-bucket TOTALS, not the corpus (operators/packing.py:52-57)
+    # per-bucket TOTALS, not the corpus (operators/packing.py
+    # global_running_sum)
     "pipeline_pack_bins",
-    # k-means: cumulative-count seeding over k<=16 centroid candidate rows
-    # (operators/clustering.py:78-80)
+    # k-means seeding: bucket numbers over the limit(k) seed rows, k<=16
+    # (operators/clustering.py seed_centroids)
     "embedding_semdedup",
-    # IVF coarse-quantizer training: cumulative-count k-means seeding over
-    # the bounded centroid-candidate rows (operators/similarity.py:196-199)
+    # IVF coarse-quantizer training starts from the same k-means seeding
+    # (operators/clustering.py seed_centroids, via kmeans_centroids)
     "ann_ivf_topk",
-    # windowed demo over a predicate-bounded slice (<=400 rows at any sf;
-    # queries/relational.py:684-691 documents the bound)
+    # windowed demo over a predicate-bounded slice: the entry's
+    # WHERE o_orderkey < 400 (<=400 rows at any sf; queries/relational.py
+    # window_ntile_percent)
     "window_ntile_percent",
 }
 

@@ -15,6 +15,17 @@ def plan_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
+def normalized_plan(df: DataFrame) -> str:
+    """``df``'s optimized logical plan with the names that change from one
+    build to the next replaced by placeholders: every ``#<exprId>``, every
+    lambda-variable name and every ``plan_id``. Two builds of the same plan
+    give the same string, so this is the plan-equality check between two
+    versions of the code."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"\blambda \w+#\d+", "lambda _", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=_", re.sub(r"#\d+", "#_", plan))
+
+
 def _executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 

@@ -41,10 +41,10 @@ def _cos(a: str, b: str) -> str:
 )
 def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = S.with_double_vec(table(spark, sf_dir, "embeddings"))
-    return emb.select(
+    return emb.selectExpr(
         "vec_id",
-        F.round(V.l2_norm(F.col("embedding")), 6).alias("l2"),
-        F.size("embedding").cast("bigint").alias("dim"),
+        f"round({V.l2_norm_sql('embedding')}, 6) AS l2",
+        "CAST(size(embedding) AS BIGINT) AS dim",
         "label",
     )
 
@@ -314,35 +314,17 @@ def embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.cosine_pairs(emb, threshold=COS_THRESH, dim=64), eager=True
     )
     full = _checkpoint(duplicate_clusters(pairs), eager=True)
-    # unrolled-by-dim expressions as SQL text (r13 — ~4 py4j round trips per
-    # dimension per use in the Column form; identical tree, pin:
-    # tests/test_similarity.py::test_unrolled_sql_twins)
-    probes = emb.filter(F.col("vec_id") < _PROBE).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("qv"),
-        F.expr(V.l2_norm_unrolled_sql("`embedding`", 64)).alias("qn"),
+    norm = V.l2_norm_sql("embedding", 64)
+    probes = emb.filter(F.col("vec_id") < _PROBE).selectExpr(
+        "vec_id AS probe_id", "embedding AS qv", f"{norm} AS qn"
     )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("nv"),
-        F.expr(V.l2_norm_unrolled_sql("`embedding`", 64)).alias("nn"),
-    )
-    denom = F.col("qn") * F.col("nn")
+    corpus = emb.selectExpr("vec_id AS neighbor_id", "embedding AS nv", f"{norm} AS nn")
     # probe side broadcast: O(_PROBE * n) map-side work, no shuffle of the
     # corpus — scales linearly with n at any corpus size
     edges = (
         corpus.crossJoin(F.broadcast(probes))
         .filter(F.col("neighbor_id") != F.col("probe_id"))
-        .withColumn(
-            "sim",
-            F.round(
-                F.when(
-                    denom > 0,
-                    F.expr(V.dot_unrolled_sql("`qv`", "`nv`", 64)) / denom,
-                ).otherwise(F.lit(0.0)),
-                6,
-            ),
-        )
+        .withColumn("sim", F.expr(S.hoisted_cosine_sql("qv", "nv", "qn", "nn", 64)))
         .filter(F.col("sim") >= COS_THRESH)
         .select("probe_id", "neighbor_id")
     )
@@ -408,9 +390,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked bound >= 0.4, while a random 40-vector shortlist lands ~0.08.
 
     The ADC shortlist scales with the corpus (a fixed 4*k shortlist is
-    top-2%% of 2k vectors but top-0.2%% of 20k — the sf1 gate caught recall
+    top-2% of 2k vectors but top-0.2% of 20k — the sf1 gate caught recall
     dropping below the bound at 10x data). factor = max(4, n/500) keeps the
-    shortlist at ~top-2%% of any corpus while rerank cost stays ~n/500 * k
+    shortlist at ~top-2% of any corpus while rerank cost stays ~n/500 * k
     exact cosines per query; at sf0.01 (the driver regime) it still
     resolves to 4, so gate behavior is unchanged."""
     emb = table(spark, sf_dir, "embeddings")

@@ -60,6 +60,8 @@ SNAPSHOT_KEEP = 8
 
 _INFO_SCHEMA_RE = re.compile(r"\binformation_schema\s*\.\s*tables\b", re.IGNORECASE)
 _TIME_TRAVEL_RE = re.compile(r"\b([\w.]+)\s+VERSION\s+AS\s+OF\s+(\d+)", re.IGNORECASE)
+# a column name ending in a backtick-quoted part, ``[<qualifier>.]`<name>```
+_QUOTED_COLUMN_RE = re.compile(r"(?:(.*)\.)?`((?:[^`]|``)*)`", re.DOTALL)
 
 
 def _resolve_columns(
@@ -68,13 +70,18 @@ def _resolve_columns(
     """Map DML target column names (SET, INSERT and MERGE INSERT column
     lists) onto the table's field names as Spark resolves identifiers under
     its default ``spark.sql.caseSensitive=false``: case-insensitively, after
-    stripping a ``<table or alias>.`` qualifier. Raises ValueError naming a
-    column that matches no field, or a field named twice."""
+    stripping a ``<table or alias>.`` qualifier and the backticks of a quoted
+    name. Raises ValueError naming a column that matches no field, or a
+    field named twice."""
     by_lower = {f.lower(): f for f in fields}
     qualifiers = {q.lower() for q in (table, table.rsplit(".", 1)[-1], alias) if q}
     out = []
     for name in names:
-        qual, _, bare = name.strip().rpartition(".")
+        quoted = _QUOTED_COLUMN_RE.fullmatch(name.strip())
+        if quoted:
+            qual, bare = quoted.group(1) or "", quoted.group(2).replace("``", "`")
+        else:
+            qual, _, bare = name.strip().rpartition(".")
         field = by_lower.get(bare.lower()) if not qual or qual.lower() in qualifiers else None
         if field is None:
             raise ValueError(f"column {name!r} not found in table {table} (columns: {', '.join(fields)})")

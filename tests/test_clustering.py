@@ -45,7 +45,7 @@ def test_assignment_matches_exact_argmax(emb):
     scored = (
         with_double_vec(emb)
         .crossJoin(F.broadcast(cent))
-        .withColumn("sim", F.round(V.cosine(F.col("embedding"), F.col("centroid")), 6))
+        .withColumn("sim", F.expr(f"round({V.cosine_sql('embedding', 'centroid')}, 6)"))
         .select("vec_id", "bucket", "sim")
     )
     best = scored.groupBy("vec_id").agg(F.max("sim").alias("best"))
@@ -74,7 +74,7 @@ def test_semantic_dedup_no_close_pair_survives(emb):
     survivors = (
         a.join(b, "bucket")
         .filter(F.col("ia") < F.col("ib"))
-        .filter(F.round(V.cosine(F.col("va"), F.col("vb")), 6) >= t)
+        .filter(F.expr(f"round({V.cosine_sql('va', 'vb')}, 6)") >= t)
         .count()
     )
     assert survivors == 0
@@ -113,7 +113,7 @@ def test_kmeans_refinement_reduces_sse(emb):
         asg = (
             with_double_vec(emb)
             .crossJoin(F.broadcast(cent))
-            .withColumn("sim", V.cosine(F.col("embedding"), F.col("centroid")))
+            .withColumn("sim", F.expr(V.cosine_sql("embedding", "centroid")))
         )
         from pyspark.sql import Window
 

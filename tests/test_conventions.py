@@ -149,3 +149,58 @@ def test_session_builds_no_column_chains():
             if m == "pyspark.sql.functions" or m.startswith("pyspark.sql.functions.")
         ]
     assert not bad, f"session.py imports pyspark.sql.functions: {bad}"
+
+
+# The vector layer: the modules that build embedding expressions.
+_VECTOR_LAYER = (
+    "functions/vector.py",
+    "operators/similarity.py",
+    "operators/clustering.py",
+    "queries/vector.py",
+)
+
+
+def test_vector_functions_import_no_pyspark():
+    """functions/vector.py builds SQL text only, so it needs nothing from
+    pyspark; a Column form next to the text would be a second way to build
+    the same expression."""
+    import ast
+
+    path = os.path.join(os.path.dirname(QUERIES_DIR), "functions", "vector.py")
+    bad = []
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            mods = [node.module or ""]
+        else:
+            continue
+        bad += [f"line {node.lineno}: {m}" for m in mods if m.split(".")[0] == "pyspark"]
+    assert not bad, f"functions/vector.py imports from pyspark: {bad}"
+
+
+def test_vector_layer_passes_no_python_lambdas():
+    """The vector layer writes higher-order functions as SQL text
+    (``x -> ...``). A Python lambda passed to F.transform and its kind costs
+    several py4j round trips to build and brings back the Column twin of a
+    text expression."""
+    import ast
+
+    hofs = {"transform", "aggregate", "zip_with", "filter", "exists", "forall"}
+    pkg = os.path.dirname(QUERIES_DIR)
+    bad = []
+    for rel in _VECTOR_LAYER:
+        for node in ast.walk(ast.parse(open(os.path.join(pkg, rel)).read())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "F"
+                and node.func.attr in hofs
+                and any(
+                    isinstance(arg, ast.Lambda)
+                    for arg in [*node.args, *(k.value for k in node.keywords)]
+                )
+            ):
+                bad.append(f"{rel}:{node.lineno}: F.{node.func.attr}")
+    assert not bad, f"Python lambdas passed to higher-order functions: {bad}"

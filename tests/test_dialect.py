@@ -48,6 +48,16 @@ def test_insert_variants():
     assert s.kind == "insert" and s.columns_list is None
     s = parse_ddl_dml("INSERT INTO t (a, b) SELECT x, y FROM u")
     assert s.columns_list == ["a", "b"] and s.query.startswith("SELECT")
+    # a quoted column name may hold a comma or a close paren
+    for name in ("`a)b`", "`a,b`"):
+        s = parse_ddl_dml(f"INSERT INTO t ({name}, c) VALUES (1, 2)")
+        assert s.columns_list == [name, "c"] and s.query == "VALUES (1, 2)"
+        s = parse_ddl_dml(
+            f"MERGE INTO t USING s ON t.k = s.k "
+            f"WHEN NOT MATCHED THEN INSERT ({name}, c) VALUES (s.x, s.y)"
+        )
+        assert s.clauses[0].insert_columns == [name, "c"]
+        assert s.clauses[0].insert_values == ["s.x", "s.y"]
 
 
 def test_delete_update():

@@ -123,3 +123,35 @@ def test_global_window_count_distinguishes_partitioned_shapes():
     assert global_window_count(part_ordered) == 0
     assert global_window_count(bare_global) == 1
     assert global_window_count("\n".join([glob, part_ordered, bare_global])) == 2
+
+
+def test_normalized_plan_ignores_ids_and_lambda_names(spark):
+    """A cosine built from Python-lambda Columns and the one written as SQL
+    text differ only in exprIds and lambda-variable names, so they normalize
+    to one string; a changed operator (``>= 0`` for ``> 0``) still shows."""
+    import operator
+
+    from pyspark.sql import functions as F
+
+    from qurious_spark.functions import vector as V
+    from qurious_spark.plans.inspect import normalized_plan
+
+    df = spark.range(4).selectExpr(
+        "array(CAST(id AS DOUBLE), 2.0D) AS a", "array(3.0D, CAST(-id AS DOUBLE)) AS b"
+    )
+
+    def norm(c):
+        return F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, v: acc + v * v))
+
+    def column_cosine(compare):
+        a, b = F.col("a"), F.col("b")
+        dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
+        denom = norm(a) * norm(b)
+        return df.select(F.when(compare(denom, 0), dot / denom).otherwise(F.lit(0.0)).alias("c"))
+
+    text = df.select(F.expr(V.cosine_sql("a", "b")).alias("c"))
+    column = column_cosine(operator.gt)
+    raw = [d._jdf.queryExecution().optimizedPlan().toString() for d in (text, column)]
+    assert raw[0] != raw[1]
+    assert normalized_plan(column) == normalized_plan(text)
+    assert normalized_plan(column_cosine(operator.ge)) != normalized_plan(text)

@@ -309,8 +309,9 @@ def test_shingles_sql_text_form(spark):
 
 
 def test_vector_sql_twins(spark):
-    """The SQL-text vector expressions (as_double/dot/norm twins) match the
-    Column/HOF forms bit-exactly, including zero and empty vectors."""
+    """The SQL-text vector expressions (dim=None folds) match the
+    Column/HOF compositions they replaced bit-exactly, including zero and
+    empty vectors."""
     from qurious_spark.functions import vector as V
 
     df = spark.createDataFrame(
@@ -322,12 +323,27 @@ def test_vector_sql_twins(spark):
         ],
         "id long, a array<double>, b array<double>",
     )
+
+    # the Column/HOF compositions, kept here as the reference
+    def dot(a, b):
+        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
+
+    def norm_sq(a):
+        return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
+
+    a, b = F.col("a"), F.col("b")
+    denom = F.sqrt(norm_sq(a)) * F.sqrt(norm_sq(b))
+    l2_sq = F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v
+    )
     hof = df.select(
         "id",
-        V.dot(F.col("a"), F.col("b")).alias("d"),
-        V.norm_sq(F.col("a")).alias("n"),
-        V.l2_norm(F.col("b")).alias("l"),
-        V.as_double(F.col("a")).alias("c"),
+        dot(a, b).alias("d"),
+        norm_sq(a).alias("n"),
+        F.sqrt(norm_sq(b)).alias("l"),
+        F.transform(a, lambda x: x.cast("double")).alias("c"),
+        F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0)).alias("cos"),
+        l2_sq.alias("l2sq"),
     ).collect()
     txt = df.selectExpr(
         "id",
@@ -335,6 +351,8 @@ def test_vector_sql_twins(spark):
         f"{V.norm_sq_sql('a')} AS n",
         f"{V.l2_norm_sql('b')} AS l",
         f"{V.as_double_sql('a')} AS c",
+        f"{V.cosine_sql('a', 'b')} AS cos",
+        f"{V.l2_sq_sql('a', 'b')} AS l2sq",
     ).collect()
     for h, t in zip(sorted(hof), sorted(txt)):
         assert h == t

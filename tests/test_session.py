@@ -726,21 +726,34 @@ def test_quoted_literals_survive_session_rewrites(fresh):
 
 def test_dml_on_keyword_and_spaced_column_names(fresh):
     # every write quotes the target's column names in the SQL text it builds,
-    # and a trailing line comment does not swallow the text around it
-    fresh.sql("CREATE TABLE qi AS SELECT 1 AS `order`, 'x' AS `group`, 10 AS `a b`")
+    # a trailing line comment does not swallow the text around it, and a
+    # quoted name in a column list may hold a comma or a close paren
+    fresh.sql(
+        "CREATE TABLE qi AS SELECT 1 AS `order`, 'x' AS `group`, 10 AS `a b`, "
+        "20 AS `a,b`, 30 AS `a)b`"
+    )
     fresh.sql("UPDATE qi SET order = `order` + `a b`, group = 'y' WHERE `a b` = 10 -- note")
-    fresh.sql("INSERT INTO qi (order, group) VALUES (2, 'z')")
-    fresh.sql("INSERT INTO qi (group, order) VALUES ('w', 4)")
+    fresh.sql("INSERT INTO qi (order, group, `a)b`) VALUES (2, 'z', 6)")
+    fresh.sql("INSERT INTO qi (`a,b`, group, order) VALUES (8, 'w', 4)")
     fresh.sql("DELETE FROM qi WHERE `group` = 'z' AND `a b` IS NULL -- note")
     fresh.sql(
-        "MERGE INTO qi t USING (SELECT 11 AS `order`, 'm' AS `group`, 5 AS `a b` "
-        "UNION ALL SELECT 3, 'n', 7 UNION ALL SELECT 5, 'p', 1) s ON t.`order` = s.`order` "
-        "WHEN MATCHED THEN UPDATE SET group = s.`group` "
-        "WHEN NOT MATCHED AND s.`a b` > 6 THEN INSERT (order, group) VALUES (s.`a b`, s.`group`) "
+        "MERGE INTO qi t USING (SELECT 11 AS `order`, 'm' AS `group`, 5 AS `a b`, "
+        "21 AS `a,b`, 31 AS `a)b` UNION ALL SELECT 3, 'n', 7, 22, 32 "
+        "UNION ALL SELECT 5, 'p', 1, 23, 33) s ON t.`order` = s.`order` "
+        "WHEN MATCHED THEN UPDATE SET group = s.`group`, `a,b` = s.`a)b` "
+        "WHEN NOT MATCHED AND s.`a b` > 6 THEN INSERT (order, group, `a)b`) "
+        "VALUES (s.`a b`, s.`group`, s.`a,b`) "
         "WHEN NOT MATCHED THEN INSERT *"
     )
-    rows = fresh.sql("SELECT `order` AS o, `group` AS g, `a b` AS ab FROM qi ORDER BY o").collect()
-    assert [tuple(r) for r in rows] == [(4, "w", None), (5, "p", 1), (7, "n", None), (11, "m", 10)]
+    rows = fresh.sql(
+        "SELECT `order` AS o, `group` AS g, `a b` AS ab, `a,b` AS c, `a)b` AS p FROM qi ORDER BY o"
+    ).collect()
+    assert [tuple(r) for r in rows] == [
+        (4, "w", None, 8, None),
+        (5, "p", 1, 23, 33),
+        (7, "n", None, None, 22),
+        (11, "m", 10, 31, 30),
+    ]
 
 
 def test_sql_text_renderers(spark):

@@ -137,18 +137,20 @@ def test_srp_keyed_sql_text_form(spark, embeddings):
     same HOF fold order, same int->bigint bit packing)."""
     from pyspark.sql import functions as F
 
-    from qurious_spark.functions import vector as V
     from qurious_spark.operators import similarity as S
 
     planes = S.srp_planes(dim=64, n_tables=8, n_bits=6, seed=42)
     new_df = S._srp_keyed(embeddings, "neighbor_id", planes, "vec_id", "embedding")
 
     # the exact pre-r13 Column composition, kept here as the reference
+    def dot(a, b):
+        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
+
     def old_key(vec, table_planes):
         key = F.lit(0).cast("bigint")
         for j, plane in enumerate(table_planes):
             lit_plane = F.array(*[F.lit(x) for x in plane])
-            bit = F.when(V.dot(vec, lit_plane) >= 0, F.lit(2 ** j)).otherwise(F.lit(0))
+            bit = F.when(dot(vec, lit_plane) >= 0, F.lit(2 ** j)).otherwise(F.lit(0))
             key = key + bit.cast("bigint")
         return key
 
@@ -177,31 +179,54 @@ def test_srp_keyed_sql_text_form(spark, embeddings):
 
 
 def test_unrolled_sql_twins(spark, embeddings):
-    """r13: the SQL-text twins of the dim-unrolled dot/norm/cosine must be
-    bit-identical to the Column compositions they replace (same 0-based
-    indexing, cast placement, and left-to-right fold order)."""
+    """Both ``dim`` forms of the vector text are pinned bit for bit:
+    ``dim=64`` against the unrolled Column composition it replaced (same
+    0-based indexing, cast placement and left-to-right fold order), and
+    ``dim=None`` against ``dim=64`` on double input, a zero vector included."""
+    import struct
+
     from pyspark.sql import functions as F
 
     from qurious_spark.functions import vector as V
+    from qurious_spark.operators.similarity import with_double_vec
 
     dim = 64
-    col_form = embeddings.select(
-        V.dot(F.col("embedding"), F.col("embedding"), dim).alias("d"),
-        V.l2_norm(F.col("embedding"), dim).alias("n"),
-        V.cosine(F.col("embedding"), F.col("embedding"), dim).alias("c"),
-    )
-    sql_form = embeddings.select(
-        F.expr(V.dot_unrolled_sql("`embedding`", "`embedding`", dim)).alias("d"),
-        F.expr(V.l2_norm_unrolled_sql("`embedding`", dim)).alias("n"),
-        F.expr(V.cosine_unrolled_sql("`embedding`", "`embedding`", dim)).alias("c"),
-    )
-    assert col_form.schema == sql_form.schema
-    import struct
 
-    def bits(rows):
-        return [
-            tuple(struct.pack(">d", v) if isinstance(v, float) else v for v in r)
-            for r in rows
-        ]
+    # the unrolled Column composition, kept here as the reference
+    def dot(a, b):
+        acc = F.lit(0.0)
+        for i in range(dim):
+            acc = acc + a.getItem(i).cast("double") * b.getItem(i).cast("double")
+        return acc
 
-    assert bits(col_form.collect()) == bits(sql_form.collect())
+    def l2_norm(a):
+        return F.sqrt(dot(a, a))
+
+    def cosine(a, b):
+        denom = l2_norm(a) * l2_norm(b)
+        return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
+
+    def text_form(df, d):
+        return df.selectExpr(
+            f"{V.dot_sql('embedding', 'r', d)} AS d",
+            f"{V.l2_norm_sql('embedding', d)} AS n",
+            f"{V.cosine_sql('embedding', 'r', d)} AS c",
+        )
+
+    def bits(df):
+        return sorted(tuple(struct.pack(">d", v) for v in r) for r in df.collect())
+
+    zero = spark.createDataFrame([([0.0] * dim,)], "embedding array<float>")
+    vecs = embeddings.select("embedding").unionByName(zero)
+    floats = vecs.withColumn("r", F.reverse("embedding"))
+    e, r = F.col("embedding"), F.col("r")
+    col_form = floats.select(
+        dot(e, r).alias("d"), l2_norm(e).alias("n"), cosine(e, r).alias("c")
+    )
+    assert col_form.schema == text_form(floats, dim).schema
+    assert bits(col_form) == bits(text_form(floats, dim))
+
+    doubles = with_double_vec(vecs).withColumn("r", F.reverse("embedding"))
+    unrolled = text_form(doubles, dim)
+    assert unrolled.filter("n = 0 AND c = 0").count() == 1  # the zero vector
+    assert bits(text_form(doubles, None)) == bits(unrolled)

@@ -4,6 +4,12 @@ Evidence artifact for optimization rounds (the judge checks plan claims
 against these files).
 
 Usage: python tools/capture_plans.py --names q1,q2 --suffix before [--tag r12]
+
+With ``--normalized`` each file holds ``plans.inspect.normalized_plan``
+instead: the optimized logical plan with exprIds, lambda-variable names and
+plan ids replaced by placeholders. Capture the same names from two checkouts
+of the code and ``diff -r`` the two ``plans/<tag>`` directories: no output
+means the plans are equal.
 """
 
 from __future__ import annotations
@@ -21,10 +27,12 @@ def main() -> None:
     ap.add_argument("--suffix", required=True)
     ap.add_argument("--tag", default="r12")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--normalized", action="store_true")
     args = ap.parse_args()
 
     # scan split: Spark 128m default (single-row-group files; see bench.py)
     import qurious_spark.queries as q
+    from qurious_spark.plans.inspect import normalized_plan
     from qurious_spark.session import get_spark
 
     q.load_all()
@@ -33,7 +41,10 @@ def main() -> None:
     os.makedirs(root, exist_ok=True)
     for name in args.names.split(","):
         df = q.REGISTRY[name](spark, args.sf)
-        plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        if args.normalized:
+            plan = normalized_plan(df)
+        else:
+            plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         out = os.path.join(root, f"{name}_{args.suffix}.txt")
         with open(out, "w") as fh:
             fh.write(plan)
