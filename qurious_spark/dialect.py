@@ -745,7 +745,7 @@ def rewrite_table_functions(session, text: str) -> str:
     DataFrame as a temp view named after a hash of the path (the reference
     derives table identity from a path hash too, table_relation.rs:41-45).
     """
-    from qurious_spark.sources.readers import read_csv_like
+    from qurious_spark.sources.readers import read_csv_like, read_parquet
 
     def register(fn: str, path: str, options: dict[str, object]) -> str:
         view = "file_" + re.sub(r"\W", "_", path).strip("_")
@@ -761,7 +761,7 @@ def rewrite_table_functions(session, text: str) -> str:
         elif fn == "read_orc":
             df = session.spark.read.orc(path)
         else:
-            df = session.spark.read.parquet(path)
+            df = read_parquet(session.spark, path)
         df.createOrReplaceTempView(view)
         return view
 

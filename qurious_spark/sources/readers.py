@@ -10,9 +10,30 @@ pushed filters, never an in-memory copy.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 TPCH_TABLES = (
     "region",
@@ -58,38 +79,165 @@ def read_csv_like(
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet reader that tolerates nanosecond timestamps.
+    """Parquet reader that takes its schema from the footer and tolerates
+    nanosecond timestamps.
+
+    The footer is read on the driver with pyarrow (metadata only, fine at
+    any scale) and turned into the schema Spark's own inference would give
+    (``footer_schema``), which is handed to ``spark.read.schema``. Inference
+    reads the same footer in a Spark job, so this read starts no job. A path
+    pyarrow cannot open as one file (a directory or a glob), or a footer
+    with a type ``footer_schema`` does not cover, is read with inference.
 
     Spark has no nanosecond timestamp type; with
-    ``spark.sql.legacy.parquet.nanosAsLong=true`` a timestamp[ns] column
-    arrives as long nanos-since-epoch. We detect such columns from the
-    parquet footer (driver-side, metadata-only — fine at any scale) and
-    convert them to timestamps inside the plan via ``timestamp_micros`` so
+    ``spark.sql.legacy.parquet.nanosAsLong=true`` a physical INT64
+    TIMESTAMP(NANOS) column arrives as long nanos-since-epoch, and is
+    converted to a timestamp inside the plan via ``timestamp_micros`` so
     everything stays lazy and JVM-side. The conf is set HERE, at runtime
     (verified runtime-settable), so the tolerance holds on any
-    SparkSession — not just ones built by our own get_spark helper.
+    SparkSession, not just ones built by our own get_spark helper.
     """
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
     try:
-        schema = pq.read_schema(path)
+        meta = pq.read_metadata(path)
     except Exception:
         return spark.read.parquet(path)
-    nano_cols = [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+    # INT96 also surfaces as arrow timestamp[ns], but Spark reads it as a
+    # timestamp: only the physical INT64 NANOS columns are nanos
+    nano_cols = [c.name for c in _top_level_leaves(meta).values() if _timestamp_unit(c) == "nanoseconds"]
+    if nano_cols:
+        # Without this a vanilla session throws "Illegal Parquet type: INT64
+        # (TIMESTAMP(NANOS,..))" at scan time.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:
+        reader = spark.read.schema(footer_schema(spark, meta))
+    except (TypeError, ValueError):
+        reader = spark.read
+    df = reader.parquet(path)
     if not nano_cols:
-        return spark.read.parquet(path)
-    # Without this a vanilla session throws "Illegal Parquet type: INT64
-    # (TIMESTAMP(NANOS,..))" at scan time.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+        return df
+    from qurious_spark.session import _ident
+
     # integer division: double division would lose precision on epoch-nanos
     # (~1.7e18 > 2^53) and round the microsecond up
-    exprs = [
-        F.timestamp_micros(F.expr(f"`{c}` div 1000")).alias(c) if c in nano_cols else F.col(c)
-        for c in df.columns
-    ]
-    return df.select(*exprs)
+    return df.selectExpr(
+        *(
+            f"timestamp_micros({_ident(c)} div 1000) AS {_ident(c)}" if c in nano_cols else _ident(c)
+            for c in df.columns
+        )
+    )
+
+
+# Spark keeps the schema it wrote under this footer key, and its inference
+# takes the key's schema over the parquet types when it is there.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+_ARROW_TO_SPARK = {
+    "bool": BooleanType(),
+    "int8": ByteType(),
+    "int16": ShortType(),
+    "int32": IntegerType(),
+    "int64": LongType(),
+    # Spark has no unsigned types: each goes up one range
+    "uint8": ShortType(),
+    "uint16": IntegerType(),
+    "uint32": LongType(),
+    "uint64": DecimalType(20, 0),
+    "float": FloatType(),
+    "double": DoubleType(),
+    "string": StringType(),
+    "large_string": StringType(),
+    "date32[day]": DateType(),
+    "date64[ms]": DateType(),
+}
+
+
+def footer_schema(spark: SparkSession, meta) -> StructType:
+    """The schema ``spark.read.parquet`` infers for the file whose footer
+    is ``meta`` (``pyarrow.parquet.read_metadata``), built on the driver.
+
+    The rules are Spark's: a file Spark wrote carries its schema under
+    ``_SPARK_SCHEMA_KEY``; otherwise each column maps by type, unsigned
+    integers go up one range, a tz-naive timestamp follows
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``, INT96 is a timestamp,
+    INT64 TIMESTAMP(NANOS) is a bigint (``nanosAsLong``), and
+    un-annotated binary follows ``spark.sql.parquet.binaryAsString``.
+    Every field is nullable. Raises ``TypeError`` for a type these rules do
+    not cover (time, duration, float16, a timestamp inside a nested type,
+    ...)."""
+    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        return StructType.fromJson(_all_nullable(json.loads(spark_json)))
+    leaves = _top_level_leaves(meta)
+    return StructType(
+        [
+            StructField(f.name, _spark_type(spark, f.type, leaves.get(f.name)))
+            for f in meta.schema.to_arrow_schema()
+        ]
+    )
+
+
+def _all_nullable(node):
+    """Spark's ``asNullable`` on a schema's JSON form."""
+    if isinstance(node, list):
+        return [_all_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    flags = ("nullable", "containsNull", "valueContainsNull")
+    return {k: True if k in flags else v if k == "metadata" else _all_nullable(v) for k, v in node.items()}
+
+
+def _top_level_leaves(meta) -> dict:
+    """Parquet leaf columns that are top-level fields, by name (a nested
+    leaf's path is longer than its name)."""
+    cols = (meta.schema.column(i) for i in range(meta.num_columns))
+    return {c.name: c for c in cols if c.path == c.name}
+
+
+def _timestamp_unit(leaf) -> str | None:
+    """``milliseconds``/``microseconds``/``nanoseconds`` for an INT64
+    timestamp leaf, else None."""
+    if leaf.physical_type != "INT64" or leaf.logical_type.type != "TIMESTAMP":
+        return None
+    return json.loads(leaf.logical_type.to_json())["timeUnit"]
+
+
+def _conf_on(spark: SparkSession, key: str) -> bool:
+    return spark.conf.get(key).lower() == "true"
+
+
+def _spark_type(spark: SparkSession, t, leaf) -> DataType:
+    """Spark type of arrow type ``t``; ``leaf`` is its parquet column when
+    the field is a top-level leaf, else None."""
+    import pyarrow as pa
+
+    if str(t) in _ARROW_TO_SPARK:
+        return _ARROW_TO_SPARK[str(t)]
+    if pa.types.is_dictionary(t):
+        return _spark_type(spark, t.value_type, leaf)
+    if pa.types.is_decimal128(t):
+        return DecimalType(t.precision, t.scale)
+    if str(t) in ("binary", "large_binary"):
+        return StringType() if _conf_on(spark, "spark.sql.parquet.binaryAsString") else BinaryType()
+    if pa.types.is_timestamp(t) and leaf is not None:
+        if leaf.physical_type == "INT96":
+            return TimestampType()
+        unit = _timestamp_unit(leaf)
+        if unit == "nanoseconds":
+            return LongType()
+        if unit is not None:
+            utc = json.loads(leaf.logical_type.to_json())["isAdjustedToUTC"]
+            if utc or not _conf_on(spark, "spark.sql.parquet.inferTimestampNTZ.enabled"):
+                return TimestampType()
+            return TimestampNTZType()
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return ArrayType(_spark_type(spark, t.value_type, None), True)
+    if pa.types.is_map(t):
+        return MapType(_spark_type(spark, t.key_type, None), _spark_type(spark, t.item_type, None), True)
+    if pa.types.is_struct(t):
+        return StructType([StructField(f.name, _spark_type(spark, f.type, None)) for f in t])
+    raise TypeError(f"no footer rule for parquet column type {t}")
 
 
 def read_auto(spark: SparkSession, path: str, **options) -> DataFrame:

@@ -1,4 +1,6 @@
-"""Nanosecond-parquet tolerance must not depend on session construction.
+"""Nanosecond-parquet tolerance must not depend on session construction,
+nor on whether the file is read through ``read_parquet`` or the SQL
+``read_parquet('…')`` table function.
 
 The reference loads parquet eagerly with whatever types Arrow hands it
 (qurious/src/datasource/file/parquet.rs:9-17); Spark instead REJECTS
@@ -8,12 +10,14 @@ SparkSession (one not built by our get_spark) still reads ns-typed files.
 """
 
 import datetime
+import glob
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from qurious_spark import Session
 from qurious_spark.sources.readers import read_parquet
 
 TS = [
@@ -36,11 +40,18 @@ def ns_parquet(tmp_path):
     return path
 
 
-def test_read_parquet_sets_nanos_conf_on_vanilla_session(spark, ns_parquet):
+def read_sql_table_function(spark, path):
+    """The SQL ``read_parquet('…')`` table function; a bare
+    ``spark.read.parquet`` there would return ts as bigint epoch-nanos."""
+    return Session(spark).sql(f"SELECT * FROM read_parquet('{path}')")
+
+
+@pytest.mark.parametrize("read", [read_parquet, read_sql_table_function], ids=["reader", "sql"])
+def test_read_parquet_sets_nanos_conf_on_vanilla_session(spark, ns_parquet, read):
     # Simulate a session that never went through get_spark: drop the conf.
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     try:
-        df = read_parquet(spark, ns_parquet)
+        df = read(spark, ns_parquet)
         assert dict(df.dtypes)["ts"] == "timestamp"
         rows = {r.event_id: r.ts for r in df.collect()}
         assert rows[1] == TS[0]
@@ -60,3 +71,23 @@ def test_read_parquet_plain_micros_untouched(spark, tmp_path):
     # column passes through without the nanos conversion projection
     assert dict(df.dtypes)["ts"] in ("timestamp", "timestamp_ntz")
     assert [r.ts for r in df.orderBy("ts").collect()] == [None, TS[0], TS[1]]
+
+
+def write_int96_part_file(spark, out_dir: str) -> str:
+    """One-row timestamp frame written by Spark with its default
+    ``outputTimestampType`` (INT96); the path of its single part file."""
+    spark.sql("SELECT 1 AS id, TIMESTAMP'2024-01-01 12:00:00.123456' AS ts").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(out_dir)
+    (part,) = glob.glob(os.path.join(out_dir, "part-*.parquet"))
+    return part
+
+
+def test_int96_is_not_nanos(spark, tmp_path):
+    # pyarrow reports INT96 as timestamp[ns] too; only physical INT64 NANOS
+    # columns take the nanos conversion
+    part = write_int96_part_file(spark, str(tmp_path / "int96"))
+    assert pq.read_metadata(part).schema.column(1).physical_type == "INT96"
+    df = read_parquet(spark, part)
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert [r.ts for r in df.collect()] == [datetime.datetime(2024, 1, 1, 12, 0, 0, 123456)]
