@@ -16,7 +16,8 @@ operator uses the classic two-pass trick:
    margin). Candidate volume is <= capacity * numPartitions rows, not
    the distinct-key count.
 2. **Exact recount** (tiny shuffle): broadcast-semi-join the input to the
-   candidate keys, exact-count only those, keep freq >= ratio * n.
+   candidate keys, exact-count only those, keep freq >= ratio * n (n a
+   cross-joined one-row count, so the whole operator is one lazy plan).
 
 The result is EXACT (no false positives or negatives), which is what
 makes it DuckDB-oracle-able — the approximation only bounds the candidate
@@ -33,6 +34,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from qurious_spark.session import _literal
 
 
 def mg_add(counters, vc, capacity: int):
@@ -81,15 +84,20 @@ def heavy_hitters(
     the superset guarantee; in min_count mode the effective ratio is
     min_count / count(df), so capacity stays O(n/min_count) and scales
     with the data automatically).
+
+    In ratio mode ``n = count(df)`` stays in the plan, a one-row count
+    cross-joined under the final filter, so building the result starts no
+    Spark job.
+    ``min_count`` mode sizes ``capacity`` from n on the driver: one count
+    job at build.
     """
     if (min_freq_ratio is None) == (min_count is None):
         raise ValueError("pass exactly one of min_freq_ratio / min_count")
     keyed = df.select(key_col)
-    n = df.count()
     if min_count is not None:
         if min_count < 1:
             raise ValueError("min_count must be >= 1")
-        effective_ratio = min(1.0, float(min_count) / max(n, 1))
+        effective_ratio = min(1.0, float(min_count) / max(df.count(), 1))
     else:
         if not (0 < min_freq_ratio <= 1):
             raise ValueError("min_freq_ratio must be in (0, 1]")
@@ -109,6 +117,12 @@ def heavy_hitters(
     )
     if min_count is not None:
         return counted.filter(F.col("freq") >= F.lit(int(min_count)))
-    return counted.filter(
-        F.col("freq").cast("double") >= F.lit(float(min_freq_ratio) * n)
+    # n from a one-row aggregate, cross-joined: its broadcast runs alongside
+    # the candidate stages (a scalar subquery would wait for them), and the
+    # filter takes the same double product ratio * n the oracle compares
+    n = keyed.selectExpr("count(1) AS __n")
+    return (
+        counted.crossJoin(n)
+        .where(f"CAST(freq AS DOUBLE) >= {_literal(float(min_freq_ratio))} * __n")
+        .drop("__n")
     )

@@ -10,6 +10,7 @@ hashing) the query is registered rows-only.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from qurious_spark.operators import dedup as D
 from qurious_spark.queries import df_query, register, table
@@ -323,8 +324,26 @@ def dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOC_STREAM_STAGE: dict[tuple[int, str], str] = {}
+_DOC_STREAM_STAGE: dict[tuple[int, str], tuple[str, StructType]] = {}
 _DOC_STREAM_RUNS = __import__("itertools").count()
+
+
+def doc_stream_stage(spark: SparkSession, sf_dir: str) -> tuple[str, StructType]:
+    """The documents table written once per (session, sf_dir) as a 4-file
+    parquet directory for the file stream to read, with its schema: the
+    schema of the frame that was written, so no build infers it again."""
+    import os
+    import tempfile
+
+    from qurious_spark.sources.readers import read_parquet
+
+    key = (id(spark), sf_dir)
+    if key not in _DOC_STREAM_STAGE:
+        d = os.path.join(tempfile.mkdtemp(prefix="qurious_docstream_"), "documents")
+        docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+        docs.repartition(4).write.mode("overwrite").parquet(d)
+        _DOC_STREAM_STAGE[key] = (d, docs.schema)
+    return _DOC_STREAM_STAGE[key]
 
 
 @df_query(
@@ -339,24 +358,13 @@ def dedup_stream_exact(spark, sf_dir):
     fingerprint (append mode, availableNow drain), and the surviving
     fingerprint SET — deterministic even though dropDuplicates keeps an
     arbitrary row per key — must equal the batch SELECT DISTINCT oracle."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from qurious_spark.operators.dedup import normalize
-    from qurious_spark.sources.readers import read_parquet
     from qurious_spark.streaming import run_to_memory
     from qurious_spark.streaming.dedup import stream_dedup_exact
 
-    key = (id(spark), sf_dir)
-    d = _DOC_STREAM_STAGE.get(key)
-    src = os.path.join(sf_dir, "documents.parquet")
-    if d is None:
-        d = os.path.join(tempfile.mkdtemp(prefix="qurious_docstream_"), "documents")
-        read_parquet(spark, src).repartition(4).write.mode("overwrite").parquet(d)
-        _DOC_STREAM_STAGE[key] = d
-    schema = spark.read.parquet(d).schema
+    d, schema = doc_stream_stage(spark, sf_dir)
     stream = spark.readStream.schema(schema).parquet(d)
     name = f"q_stream_dedup_{next(_DOC_STREAM_RUNS)}"
     kept = stream_dedup_exact(stream)
@@ -400,10 +408,13 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled up front, and corpus text is re-shingled ONLY for candidate
     rows (semi-join before the regex work). 13 corpus-dups + 8 batch-dups
     at sf0.01 — both origins exercised."""
-    from pyspark.sql import functions as F
-
     docs = table(spark, sf_dir, "documents")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0]  # 1-row driver scalar
-    corpus = docs.filter(F.col("doc_id") * 2 <= mid)
-    new = docs.filter(F.col("doc_id") * 2 > mid)
-    return D.incremental_near_dups(new, corpus, threshold=THRESH)
+
+    def half(op: str) -> DataFrame:
+        # the max doc id as a scalar subquery: the split stays in the plan
+        return spark.sql(
+            f"SELECT * FROM {{docs}} WHERE doc_id * 2 {op} (SELECT max(doc_id) FROM {{docs}})",
+            docs=docs,
+        )
+
+    return D.incremental_near_dups(half(">"), half("<="), threshold=THRESH)

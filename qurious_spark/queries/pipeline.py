@@ -385,11 +385,11 @@ def pipeline_shard_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipeline_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deequ-style data-quality gate (operators/quality.py): completeness,
-    uniqueness, value-range and referential-integrity checks — every column
-    metric from ONE aggregation over ONE scan, FK integrity via an
-    anti-join. The range check intentionally fails on this data (orders
-    above 100k exist) so the validator's fail path is hash-verified, not
-    just its rubber stamp."""
+    uniqueness, value-range and referential-integrity checks — every
+    metric from ONE aggregation over ONE scan, FK integrity via a left join
+    to the distinct customer keys, all in one lazy plan. The range check
+    intentionally fails on this data (orders above 100k exist) so the
+    validator's fail path is hash-verified, not just its rubber stamp."""
     from qurious_spark.operators.quality import quality_report
 
     orders = table(spark, sf_dir, "orders")

@@ -398,6 +398,9 @@ class ManagedTable:
 
     def _bump(self) -> None:
         self.version += 1
+        # every union appends its source's partitions, and a checkpoint
+        # keeps them all: hold the table to one partition per core
+        self.df = self.df.coalesce(self.df.sparkSession.sparkContext.defaultParallelism)
         if self.version % CHECKPOINT_EVERY == 0:
             # Truncate the union/filter plan chain; eager=True materializes
             # the table now so later reads plan against a flat scan instead

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -53,6 +54,20 @@ def pytest_collection_modifyitems(config, items):
             continue
         if "slow" in item.keywords or item.nodeid in _SLOW_NODE_IDS:
             item.add_marker(skip)
+
+
+@contextmanager
+def job_ids(spark, group: str):
+    """Collects the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    ids: list[int] = []
+    sc.setJobGroup(group, group, False)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids += sc.statusTracker().getJobIdsForGroup(group)
 
 
 @pytest.fixture(scope="session")

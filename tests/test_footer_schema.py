@@ -10,7 +10,6 @@ every query over the file could change.
 
 import datetime
 import os
-from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -24,7 +23,7 @@ from qurious_spark.queries.multimodal import (
 )
 from qurious_spark.queries.sources import write_uint_fixture
 from qurious_spark.sources.readers import TPCH_TABLES, footer_schema, load_tables, read_parquet
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, job_ids
 from tests.test_readers_ns import TS, write_int96_part_file
 
 NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
@@ -72,20 +71,6 @@ def test_uncovered_type_falls_back_to_inference(spark, tmp_path):
     assert read_parquet(spark, path).schema == spark.read.parquet(path).schema
     # a directory has no footer of its own: Spark lists it and infers
     assert read_parquet(spark, str(tmp_path)).count() == 2
-
-
-@contextmanager
-def job_ids(spark, group: str):
-    """Collects the ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    ids: list[int] = []
-    sc.setJobGroup(group, group, False)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids += sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_load_tables_starts_no_job(spark):

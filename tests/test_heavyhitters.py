@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from qurious_spark.operators.heavyhitters import heavy_hitters
+from tests.conftest import job_ids
 
 SF = "/root/testdata/sf0.001"
 
@@ -83,6 +84,36 @@ def test_heavy_hitters_min_count_matches_exact_groupby(spark, events):
         .collect()
     }
     assert got == exact and got
+
+
+@pytest.mark.parametrize(
+    "ratio, n, key_freq, kept",
+    [
+        (0.5, 10, 5, True),  # ratio * n is 5.0 exactly: freq == threshold is kept
+        (0.28, 25, 7, False),  # 0.28 * 25 is 7.000000000000001 in doubles
+    ],
+)
+def test_ratio_threshold_is_the_double_product(spark, ratio, n, key_freq, kept):
+    """n is counted inside the plan; the filter must compare freq with
+    the double product ratio * n, bit for bit."""
+    assert (key_freq >= ratio * n) == kept
+    rows = [("hot",)] * key_freq + [(f"k{i}",) for i in range(n - key_freq)]
+    df = spark.createDataFrame(rows, "k string")
+    got = {(r.k, r.freq) for r in heavy_hitters(df, "k", ratio).collect()}
+    assert (("hot", key_freq) in got) == kept
+    exact = {
+        (r.k, r.freq)
+        for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("freq"))
+        .filter(F.col("freq").cast("double") >= F.lit(ratio * n))
+        .collect()
+    }
+    assert got == exact
+
+
+def test_ratio_mode_build_starts_no_job(spark, events):
+    with job_ids(spark, "heavy-hitters:build") as ids:
+        heavy_hitters(events, "event_type", 0.199)
+    assert ids == []
 
 
 def test_count_min_sketch_bounds(spark, events):

@@ -782,3 +782,18 @@ def test_sql_text_renderers(spark):
     got, want = text.collect()[0], lit.collect()[0]
     for v, g, w in zip(values, got, want):
         assert w == v and g == v if v == v else math.isnan(w) and math.isnan(g)
+
+
+def test_partitions_stay_bounded_over_inserts(fresh, spark):
+    """Each INSERT unions its source's partitions into the table, and the
+    every-16 checkpoint keeps what it is given: the table is coalesced to
+    one partition per core at every write."""
+    fresh.sql("CREATE TABLE t_parts (x BIGINT, y VARCHAR)")
+    expected = []
+    for i in range(20):
+        rows = [(3 * i + j, f"r{i}") for j in range(3)]
+        fresh.sql("INSERT INTO t_parts VALUES " + ", ".join(f"({x}, '{y}')" for x, y in rows))
+        expected += rows
+    table = fresh.sql("SELECT x, y FROM t_parts")
+    assert table.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert sorted(map(tuple, table.collect())) == sorted(expected)
