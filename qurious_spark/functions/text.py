@@ -1,8 +1,20 @@
-"""Text-analysis column functions for large-scale training-data pipelines.
+"""Text-analysis expressions for large-scale training-data pipelines, as
+Spark SQL text.
 
-All pure ``pyspark.sql.functions`` expression builders — JVM-side, whole-stage
-codegen, no Python in the hot path. Designed for the ``documents`` table
-(doc_id, text, lang, source, n_chars) but applicable to any string column.
+Every function returns a SQL fragment, and its arguments are SQL fragments
+too (quote column names with backticks). Callers hand the text to
+``selectExpr``, ``F.expr`` or ``where``: one py4j round trip per
+expression, where a Column chain costs one per node and several per
+Python lambda. Higher-order functions are written as ``x -> …`` text and
+double literals carry a ``D`` suffix (a bare ``100.0`` is a DECIMAL in
+Spark SQL). Everything is a built-in JVM expression: whole-stage codegen,
+no Python in the hot path. Designed for the ``documents`` table (doc_id,
+text, lang, source, n_chars) but applicable to any string column.
+
+This module is the one definition of the text primitives (normalize,
+tokens, the k-token window builder, the md5 digest); the dedup, chunking,
+mixing and sampling operators and the text, pipeline and dedup queries all
+build on it.
 
 These are beyond the reference's surface (it has no string functions at all —
 SURVEY.md §2.3 "absent scalar-function surface"); they're first-class here
@@ -10,9 +22,6 @@ because a 100 TB Spark corpus pipeline needs them.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # A "BPE-ish" pre-tokenizer: letter runs, digit runs, single punctuation —
 # the shape GPT-2-style byte-pair pre-splitting produces.
@@ -30,132 +39,140 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def normalize(col: Column) -> Column:
+def _re(pattern: str) -> str:
+    """A regex as a SQL string literal (Spark unescapes backslashes)."""
+    return "'" + pattern.replace("\\", "\\\\") + "'"
+
+
+_WS = _re(r"\s+")
+
+
+def normalize(s: str) -> str:
     """Lowercase + whitespace-collapse + trim — canonical text form."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return f"trim(regexp_replace(lower({s}), {_WS}, ' '))"
 
 
-def tokens(col: Column) -> Column:
+def tokens(s: str) -> str:
     """Whitespace tokens of the normalized text (array<string>)."""
-    return F.split(normalize(col), " ")
+    return f"split({normalize(s)}, ' ')"
 
 
-def token_count(col: Column) -> Column:
+def token_count(s: str) -> str:
     """Whitespace token count (bigint)."""
-    return F.size(tokens(col)).cast("bigint")
+    return f"CAST(size({tokens(s)}) AS BIGINT)"
 
 
-def bpe_ish_token_count(col: Column) -> Column:
+def bpe_ish_token_count(s: str) -> str:
     """Count of BPE-ish pre-tokens (letter runs / digit runs / punct)."""
-    return F.size(F.regexp_extract_all(col, F.lit(BPE_ISH_RE), 0)).cast("bigint")
+    return f"CAST(size(regexp_extract_all({s}, {_re(BPE_ISH_RE)}, 0)) AS BIGINT)"
 
 
-def ngrams(col: Column, n: int) -> Column:
-    """n-token grams of the normalized text (array<string>); empty array
-    for docs shorter than n tokens.
+def k_windows(toks: str, k: int) -> str:
+    """Every run of ``k`` consecutive tokens of the array ``toks``, space-
+    joined (array<string>); empty when ``toks`` has fewer than ``k``.
 
-    arrays_zip over shifted copies (see operators/dedup.py shingles): a
-    lambda must not capture the token array, or Spark re-evaluates the
-    whole tokenization per gram — O(n²) per document."""
-    toks = tokens(col)
+    Built with ``arrays_zip`` over k shifted copies of the token array so
+    every lambda touches only its own element: Spark re-evaluates a
+    higher-order lambda's captured expressions per element, so the naive
+    ``transform(sequence, i -> slice(toks, i, k))`` form recomputes the
+    whole tokenization per window — O(n²) per document (4s for ONE
+    20k-token doc). This form is O(n·k)."""
     shifted = [toks] + [
-        F.slice(toks, i + 1, F.greatest(F.size(toks) - i, F.lit(0)))
-        for i in range(1, n)
+        f"slice({toks}, {i + 1}, greatest(size({toks}) - {i}, 0))" for i in range(1, k)
     ]
-    full = F.filter(
-        F.arrays_zip(*shifted), lambda s: s[str(n - 1)].isNotNull()
+    zipped = f"arrays_zip({', '.join(shifted)})"  # pads short arrays w/ NULLs
+    full = f"filter({zipped}, s -> s['{k - 1}'] IS NOT NULL)"
+    fields = ", ".join(f"s['{i}']" for i in range(k))
+    return f"transform({full}, s -> concat_ws(' ', {fields}))"
+
+
+def ngrams(s: str, n: int) -> str:
+    """n-token grams of the normalized text (array<string>); empty array
+    for docs shorter than n tokens."""
+    toks = tokens(s)
+    return (
+        f"CASE WHEN size({toks}) >= {n} THEN {k_windows(toks, n)} "
+        f"ELSE CAST(array() AS ARRAY<STRING>) END"
     )
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(full, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)])),
-    ).otherwise(F.array().cast("array<string>"))
 
 
-def type_token_ratio(col: Column) -> Column:
+def type_token_ratio(s: str) -> str:
     """Distinct-token fraction (Gopher-style repetition signal): low values
     mean the document repeats itself."""
-    toks = tokens(col)
-    return F.size(F.array_distinct(toks)) / F.size(toks)
+    toks = tokens(s)
+    return f"size(array_distinct({toks})) / size({toks})"
 
 
-def fingerprint(col: Column) -> Column:
+def fingerprint(s: str) -> str:
     """Deterministic document fingerprint: md5 of the normalized text.
 
     (The rolling-hash variant is ``minhash``'s shingle hash in
     operators/dedup.py; md5-of-normalized is the whole-document fingerprint.)
     """
-    return F.md5(normalize(col))
+    return f"md5({normalize(s)})"
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col).cast("bigint")
+def char_count(s: str) -> str:
+    return f"CAST(length({s}) AS BIGINT)"
 
 
-def punct_ratio(col: Column) -> Column:
+def _char_ratio(s: str, pattern: str) -> str:
+    """Fraction of characters matching ``pattern`` (0.0 when empty)."""
+    hits = f"length({s}) - length(regexp_replace({s}, {_re(pattern)}, ''))"
+    return f"CASE WHEN length({s}) > 0 THEN ({hits}) / length({s}) ELSE 0.0D END"
+
+
+def punct_ratio(s: str) -> str:
     """Fraction of characters that are punctuation (0.0 when empty)."""
-    n_punct = F.length(col) - F.length(F.regexp_replace(col, r"[^\w\s]", ""))
-    return F.when(F.length(col) > 0, n_punct / F.length(col)).otherwise(F.lit(0.0))
+    return _char_ratio(s, r"[^\w\s]")
 
 
-def uppercase_ratio(col: Column) -> Column:
-    n_upper = F.length(col) - F.length(F.regexp_replace(col, r"[A-Z]", ""))
-    return F.when(F.length(col) > 0, n_upper / F.length(col)).otherwise(F.lit(0.0))
+def uppercase_ratio(s: str) -> str:
+    return _char_ratio(s, r"[A-Z]")
 
 
-def mean_token_length(col: Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col: Column, stopwords: tuple[str, ...] = LANG_STOPWORDS["en"]) -> Column:
-    """Fraction of tokens that are (English, by default) stopwords."""
-    toks = tokens(col)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return F.when(F.size(toks) > 0, n_stop / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column) -> Column:
+def quality_score(s: str) -> str:
     """Composite quality heuristic in [0, 1]: rewards moderate length,
     penalizes punctuation soup and ALL-CAPS. Deterministic arithmetic only
     (oracle-replicable)."""
-    length_term = F.least(token_count(col) / F.lit(100.0), F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(col) * 4.0, F.lit(1.0))
-    upper_term = F.lit(1.0) - F.least(uppercase_ratio(col) * 4.0, F.lit(1.0))
-    return F.round((length_term + punct_term + upper_term) / 3.0, 6)
+    length_term = f"least({token_count(s)} / 100.0D, 1.0D)"
+    punct_term = f"(1.0D - least({punct_ratio(s)} * 4.0D, 1.0D))"
+    upper_term = f"(1.0D - least({uppercase_ratio(s)} * 4.0D, 1.0D))"
+    return f"round(({length_term} + {punct_term} + {upper_term}) / 3.0D, 6)"
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
+def lang_scores(s: str) -> dict[str, str]:
     """Per-language stopword-hit counts (the language-ID signal)."""
-    toks = tokens(col)
-
-    def matcher(sw: tuple[str, ...]):
-        return lambda t: t.isin(*sw)
-
+    toks = tokens(s)
+    words = {lang: ", ".join(f"'{w}'" for w in sw) for lang, sw in LANG_STOPWORDS.items()}
     return {
-        lang: F.size(F.filter(toks, matcher(sw))).cast("bigint")
-        for lang, sw in LANG_STOPWORDS.items()
+        lang: f"CAST(size(filter({toks}, x -> x IN ({ws}))) AS BIGINT)"
+        for lang, ws in words.items()
     }
 
 
-def lang_id(col: Column) -> Column:
+def lang_id(s: str) -> str:
     """Pick the language with the most stopword hits; ties and zero-hit texts
     resolve to 'und' (undetermined) / lexicographically-first winner, fully
     deterministic."""
-    scores = lang_scores(col)
-    pairs = F.array(
-        *[F.struct(score.alias("n"), F.lit(lang).alias("lang")) for lang, score in sorted(scores.items())]
+    pairs = ", ".join(
+        f"struct({score} AS n, '{lang}' AS lang)"
+        for lang, score in sorted(lang_scores(s).items())
     )
     # max by (n, then lexicographically-last lang loses): sort desc by n, asc by lang
-    best = F.array_sort(
-        pairs,
-        lambda a, b: F.when(a["n"] > b["n"], -1)
-        .when(a["n"] < b["n"], 1)
-        .when(a["lang"] < b["lang"], -1)
-        .when(a["lang"] > b["lang"], 1)
-        .otherwise(0),
-    )[0]
-    return F.when(best["n"] > 0, best["lang"]).otherwise(F.lit("und"))
+    order = (
+        "(a, b) -> CASE WHEN a['n'] > b['n'] THEN -1 WHEN a['n'] < b['n'] THEN 1 "
+        "WHEN a['lang'] < b['lang'] THEN -1 WHEN a['lang'] > b['lang'] THEN 1 ELSE 0 END"
+    )
+    best = f"array_sort(array({pairs}), {order})[0]"
+    return f"CASE WHEN {best}['n'] > 0 THEN {best}['lang'] ELSE 'und' END"
+
+
+def md5_int(s: str) -> str:
+    """First 15 hex digits of md5 as a bigint (60 bits) — the engine-neutral
+    string hash shared with the DuckDB oracle (queries/dedup.py
+    _duck_md5int)."""
+    return f"CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"
 
 
 # Winnowing (Schleimer/Wilkerson/Aiken, SIGMOD 2003 — the MOSS algorithm):
@@ -167,13 +184,7 @@ def lang_id(col: Column) -> Column:
 WINNOW_P = 2_147_483_647
 
 
-def _md5_int(col: Column) -> Column:
-    """First 15 hex digits of md5 as bigint — same engine-neutral hash as
-    operators/dedup.py md5_int (kept in sync with the DuckDB oracle)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def winnow_fingerprints(col: Column, k: int = 7, w: int = 4) -> Column:
+def winnow_fingerprints(s: str, k: int = 7, w: int = 4) -> str:
     """Sorted distinct winnowing fingerprints of the normalized text
     (array<bigint>).
 
@@ -181,147 +192,13 @@ def winnow_fingerprints(col: Column, k: int = 7, w: int = 4) -> Column:
     argument expressions per outer element, so the nested transform here
     recomputes the gram-hash array for EVERY window position — O(n²)
     interpreted md5 per row (~1s/doc at 1k grams). For corpus work use
-    :func:`winnow_fingerprint_pairs`, which hashes each gram once."""
-    s = normalize(col)
-    n = F.length(s)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-        lambda i: F.substring(s, i, k),
+    ``operators/dedup.py:winnow_fingerprint_pairs``, which hashes each gram
+    once."""
+    norm = normalize(s)
+    grams = f"transform(sequence(1, greatest(length({norm}) - {k} + 1, 1)), i -> substring({norm}, i, {k}))"
+    hashes = f"transform({grams}, g -> {md5_int('g')} % {WINNOW_P})"
+    mins = (
+        f"transform(sequence(1, greatest(size({hashes}) - {w} + 1, 1)), "
+        f"j -> array_min(slice({hashes}, j, {w})))"
     )
-    hashes = F.transform(grams, lambda g: _md5_int(g) % WINNOW_P)
-    mins = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(hashes) - w + 1, F.lit(1))),
-        lambda j: F.array_min(F.slice(hashes, j, w)),
-    )
-    return F.array_sort(F.array_distinct(mins))
-
-
-def winnow_fingerprint_pairs(
-    df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 7,
-    w: int = 4,
-):
-    """(id, fingerprint) pairs of the winnowing sketch — the SCALE path.
-
-    The array-valued :func:`winnow_fingerprints` nests higher-order lambdas,
-    and Spark evaluates a lambda's argument expressions per outer element —
-    the gram-hash array is recomputed for every window position, O(n²)
-    interpreted md5 per document. This variant computes each gram hash ONCE
-    (posexplode, then hash per exploded row — plain codegen'd expressions)
-    and takes window minima with a key-partitioned ROWS window, O(n·w) per
-    document and one shuffle on the document id. Use this form for joins
-    and aggregates; the array form is fine for short strings.
-    """
-    from pyspark.sql import Window
-
-    # explode POSITIONS, not a gram array built by a lambda that captures
-    # the normalized string (that form re-runs the normalize regex per
-    # gram — O(n·|s|) per doc). The Generate's child computes __s once per
-    # input row; the substring below runs once per exploded row.
-    base = df.select(F.col(id_col), normalize(F.col(text_col)).alias("__s"))
-    ex = base.select(
-        F.col(id_col),
-        "__s",
-        F.posexplode(
-            F.sequence(
-                F.lit(1), F.greatest(F.length("__s") - k + 1, F.lit(1))
-            )
-        ).alias("__pos", "__i"),
-    )
-    h = ex.select(
-        F.col(id_col),
-        F.col("__pos"),
-        (
-            _md5_int(F.substring(F.col("__s"), F.col("__i"), F.lit(k)))
-            % WINNOW_P
-        ).alias("__hv"),
-    )
-    fwd = Window.partitionBy(id_col).orderBy("__pos").rowsBetween(0, w - 1)
-    part = Window.partitionBy(id_col)
-    return (
-        h.withColumn("__wm", F.min("__hv").over(fwd))
-        .withColumn("__n", F.count("*").over(part))
-        # windows that extend past the last gram are not selection windows
-        # (except when the doc has fewer than w grams: single window)
-        .filter(
-            (F.col("__pos") <= F.col("__n") - w) | (F.col("__pos") == 0)
-        )
-        .select(F.col(id_col), F.col("__wm").alias("fingerprint"))
-        .distinct()
-    )
-
-
-def duplicated_spans(
-    df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 60,
-    cross_doc_only: bool = False,
-):
-    """Exact duplicated-substring spans (the Lee et al. 2022 "Deduplicating
-    Training Data" shape): every maximal character range of the normalized
-    text whose ``min_len``-grams also occur elsewhere in the corpus.
-
-    Suffix arrays don't distribute; the equivalent Spark-first pipeline is:
-    hash EVERY ``min_len``-gram position (posexplode positions + substring —
-    each gram hashed once, the winnow_fingerprint_pairs anti-recompute
-    pattern), keep hashes occurring >= 2 times (``cross_doc_only`` demands
-    two distinct documents, else within-doc repetition counts too), and
-    merge the surviving fixed-length windows into maximal spans with a
-    per-document lag window (linear per doc, keys spread across executors).
-    Any duplicated substring of length >= min_len is covered by at least one
-    surviving gram window, so the merged spans are exactly the maximal
-    duplicated ranges at gram resolution. Hashes are 60-bit md5 prefixes —
-    collision odds ~2^-60 per pair; exact-match verification of spans can be
-    layered on for adversarial corpora.
-
-    Returns (id_col, span_start, span_end): 1-based char offsets into the
-    NORMALIZED text, end exclusive.
-    """
-    from pyspark.sql import Window
-
-    L = int(min_len)
-    if L < 2:
-        raise ValueError("min_len must be >= 2")
-    base = df.select(F.col(id_col), normalize(F.col(text_col)).alias("__s")).filter(
-        F.length("__s") >= L
-    )
-    ex = base.select(
-        F.col(id_col),
-        "__s",
-        F.explode(F.sequence(F.lit(1), F.length("__s") - L + 1)).alias("__pos"),
-    )
-    h = ex.select(
-        F.col(id_col),
-        F.col("__pos"),
-        _md5_int(F.substring(F.col("__s"), F.col("__pos"), L)).alias("__h"),
-    )
-    agg = [F.count("*").alias("__n")]
-    if cross_doc_only:
-        agg.append(F.count_distinct(F.col(id_col)).alias("__nd"))
-    freq = h.groupBy("__h").agg(*agg)
-    dup = freq.filter(
-        (F.col("__nd") >= 2) if cross_doc_only else (F.col("__n") >= 2)
-    ).select("__h")
-    pos_dup = h.join(dup, "__h").select(F.col(id_col), F.col("__pos"))
-    w = Window.partitionBy(id_col).orderBy("__pos")
-    grouped = (
-        pos_dup.withColumn("__prev", F.lag("__pos").over(w))
-        .withColumn(
-            "__brk",
-            F.when(
-                F.col("__prev").isNull() | (F.col("__pos") > F.col("__prev") + L),
-                1,
-            ).otherwise(0),
-        )
-        .withColumn(
-            "__gid",
-            F.sum("__brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
-    return grouped.groupBy(id_col, "__gid").agg(
-        F.min("__pos").cast("bigint").alias("span_start"),
-        (F.max("__pos") + L).cast("bigint").alias("span_end"),
-    ).select(id_col, "span_start", "span_end")
+    return f"array_sort(array_distinct({mins}))"

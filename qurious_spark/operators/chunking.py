@@ -8,9 +8,10 @@ Greenfield operator (no reference counterpart — the reference engine,
 qurious/src/logical/plan/mod.rs:50-71, has no text surface at all); designed
 Spark-first:
 
-- tokenization, window-start generation (``F.sequence``) and slicing
-  (``F.slice`` + ``array_join``) are all built-in JVM expressions — no
-  Python in the hot path, whole-stage codegen applies end-to-end;
+- tokenization (functions/text.py ``tokens``), window-start generation
+  (``sequence``) and slicing (``slice`` + ``array_join``) are all built-in
+  JVM expressions, written as SQL text — no Python in the hot path,
+  whole-stage codegen applies end-to-end;
 - the explode multiplies rows ~n_tokens/stride per doc, but each output row
   carries only (doc_id, chunk_idx, chunk text) — there is no shuffle at all
   unless the caller adds one downstream, so the operator scales linearly
@@ -19,8 +20,7 @@ Spark-first:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from qurious_spark.functions.text import tokens
 
@@ -47,20 +47,15 @@ def chunk_documents(
     # NULL text behaves like an empty document (one empty chunk) instead of
     # propagating NULL through size() (-1 under legacy sizeOfNull) and the
     # window arithmetic
-    toks: Column = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    n = F.size(toks)
-    starts = F.sequence(
-        F.lit(1), F.greatest(n - F.lit(overlap), F.lit(1)), F.lit(stride)
-    )
-    exploded = docs.select(
-        *id_cols,
-        toks.alias("__toks"),
-        F.posexplode(starts).alias("chunk_idx", "__start"),
-    )
-    piece = F.slice(F.col("__toks"), F.col("__start"), chunk_size)
-    return exploded.select(
-        *id_cols,
-        F.col("chunk_idx").cast("bigint").alias("chunk_idx"),
-        F.array_join(piece, " ").alias("chunk"),
-        F.size(piece).cast("bigint").alias("n_chunk_tokens"),
+    toks = tokens(f"coalesce(`{text_col}`, '')")
+    starts = f"sequence(1, greatest(size({toks}) - {overlap}, 1), {stride})"
+    ids = [f"`{c}`" for c in id_cols]
+    piece = f"slice(__toks, __start, {chunk_size})"
+    return docs.selectExpr(
+        *ids, f"{toks} AS __toks", f"posexplode({starts}) AS (chunk_idx, __start)"
+    ).selectExpr(
+        *ids,
+        "CAST(chunk_idx AS BIGINT) AS chunk_idx",
+        f"array_join({piece}, ' ') AS chunk",
+        f"CAST(size({piece}) AS BIGINT) AS n_chunk_tokens",
     )

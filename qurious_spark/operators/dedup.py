@@ -25,9 +25,10 @@ operators are the beyond-reference scope required for training-data work.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from qurious_spark.functions import text as T
 from qurious_spark.plans.inspect import plan_bytes
 
 # MinHash parameters — shared with the DuckDB oracle generator.
@@ -48,65 +49,33 @@ def _hash_params() -> list[tuple[int, int]]:
 HASH_PARAMS = _hash_params()
 
 
-def normalize(col: Column) -> Column:
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-
-
-def tokens(col: Column) -> Column:
-    return F.split(normalize(col), " ")
-
-
-def shingles(col_sql: str, k: int = 3) -> Column:
-    """Distinct k-token shingles (array<string>); whole-document shingle for
-    texts shorter than k tokens. Pure array expressions — no explode.
-
-    Built with ``arrays_zip`` over k shifted copies of the token array so
-    every lambda touches only its own element: Spark re-evaluates a
-    higher-order lambda's captured expressions per element, so the naive
-    ``transform(sequence, i -> slice(toks, i, k))`` form recomputes the
-    whole tokenization per window — O(n²) per document (4s for ONE
-    20k-token doc). This form is O(n·k).
-
-    ``col_sql`` is the source column as a SQL fragment (callers pass the
-    backtick-quoted column name). The whole shingle tree is emitted as ONE
-    SQL-text expression — a single py4j round trip instead of ~40 Column
-    calls plus two Python-lambda HOF constructions (r12 profiling: ~0.5 s
-    of driver latency per build on a py4j-degraded host, ~70 ms healthy).
-    The text parses to the same analyzed expression the Column form built
-    (the token subtree mirrors ``tokens``/``normalize`` above; differential
-    pin: tests/test_prep_ops.py::test_shingles_sql_text_form)."""
-    toks = f"split(trim(regexp_replace(lower({col_sql}), '\\\\s+', ' ')), ' ')"
-    shifted = [toks] + [
-        f"slice({toks}, {i + 1}, greatest(size({toks}) - {i}, 0))"
-        for i in range(1, k)
-    ]
-    zipped = f"arrays_zip({', '.join(shifted)})"  # pads short arrays w/ NULLs
-    full = f"filter({zipped}, s -> s['{k - 1}'] IS NOT NULL)"
-    fields = ", ".join(f"s['{i}']" for i in range(k))
-    windows = f"transform({full}, s -> concat_ws(' ', {fields}))"
-    return F.expr(
-        f"array_distinct(CASE WHEN size({toks}) >= {k} THEN {windows} "
+def shingles(col_sql: str, k: int = 3) -> str:
+    """Distinct k-token shingles (array<string>) as SQL text; whole-document
+    shingle for texts shorter than k tokens. Pure array expressions — no
+    explode; the windows are functions/text.py ``k_windows`` (O(n·k) per
+    document, see there). ``col_sql`` is the source column as a SQL
+    fragment (callers pass the backtick-quoted column name)."""
+    toks = T.tokens(col_sql)
+    return (
+        f"array_distinct(CASE WHEN size({toks}) >= {k} THEN {T.k_windows(toks, k)} "
         f"ELSE array(array_join({toks}, ' ')) END)"
     )
-
-
-def md5_int(col: Column) -> Column:
-    """First 15 hex digits of md5 as a bigint (60 bits) — the engine-neutral
-    string hash shared with the DuckDB oracle."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
 _SPREAD_PROBE_CACHE: dict[tuple[int, int], tuple[int, int]] = {}
 
 # Local floor for bytes of input per spread partition. At 64 KiB the sf0.1
-# documents table (0.6 MB) spreads ~9 ways instead of a flat
-# defaultParallelism=32 — measured 1.7x faster end-to-end on the minhash
-# pipeline (fewer tasks/persist blocks/shuffle map outputs across its ~14
-# stages dominate the lost core fan-out at this size). Any real corpus is
-# orders of magnitude past the floor, where the target saturates at the
-# session's parallelism and, on a cluster whose scan is already wide,
-# spread stays a no-op. Never a semantics input (the partitioning-
-# independence gate runs the registry at perturbed widths).
+# documents table (0.6 MB) spreads ~9 ways, capped at defaultParallelism.
+# Measured on a 4-vCPU host (local[3], sf0.1, median of 5 interleaved runs,
+# spread against the identity): text_duplicate_spans 6.28 s vs 14.57 s,
+# text_winnow_overlap 3.13 s vs 5.38 s, dedup_minhash_pairs 1.24 s vs
+# 1.98 s, dedup_simhash_pairs 1.93 s vs 2.28 s, text_pii_redact 0.44 s vs
+# 0.85 s; light entries are flat (text_quality 0.33 s vs 0.38 s,
+# dedup_exact 0.41 s vs 0.38 s). Any real corpus is orders of magnitude
+# past the floor, where the target saturates at the session's parallelism
+# and, on a cluster whose scan is already wide, spread stays a no-op. Never
+# a semantics input (the partitioning-independence gate runs the registry
+# at perturbed widths).
 SPREAD_PARTITION_BYTES = 1 << 16
 
 
@@ -118,17 +87,19 @@ def spread(df: DataFrame) -> DataFrame:
     width is size-aware: ceil(input bytes / SPREAD_PARTITION_BYTES) capped at
     defaultParallelism, so tiny inputs don't fan out into mostly-empty tasks.
 
-    ``df.rdd.getNumPartitions()`` is DRIVER-SIDE METADATA ONLY — it builds
-    the RDD lineage object but launches no job and moves no data. It must
-    stay out of per-row/hot paths (materializing ``df.rdd`` in an executor
-    path would bypass whole-stage codegen); tests/test_conventions.py pins
-    this as the package's only ``.rdd`` access.
+    ``df.rdd.getNumPartitions()`` runs on the driver and reads no rows of
+    ``df`` itself, but it plans ``df`` physically: when that plan holds a
+    subquery or an AQE exchange, the probe runs them as Spark jobs
+    (``dedup_incremental``'s first build in a session starts 4 jobs, all
+    from its two probes; a plain scan starts none). It must stay out of
+    per-row/hot paths (materializing ``df.rdd`` in an executor path would
+    bypass whole-stage codegen); tests/test_conventions.py pins this as the
+    package's only ``.rdd`` access.
 
-    r12 optimization (driver-side work): the RDD-conversion probe costs
-    ~100 ms of driver planning per call, and operators call spread on the
-    same scan every invocation. The (partition count, size estimate) probe
-    is memoized per (session, semantically-equal plan); a stale hit can only
-    mis-size the repartition target (parallelism, never results — the
+    The (partition count, size estimate) probe is memoized per (session,
+    semantically-equal plan), so later builds over the same input start no
+    job and skip the RDD conversion; a stale hit can only mis-size the
+    repartition target (parallelism, never results — the
     partitioning-independence gate pins that), and only for a plan whose
     underlying files changed within one session."""
     spark = df.sparkSession
@@ -149,8 +120,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
-
-
 # --------------------------------------------------------------------------- #
 # Pipeline operators (DataFrame -> DataFrame)
 # --------------------------------------------------------------------------- #
@@ -161,7 +130,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     md5 digest (fixed 32 bytes/row), not the full text — at 100 TB the
     shuffle payload is ids + digests only."""
     return (
-        spread(df).select(F.col(id_col), F.md5(normalize(F.col(text_col))).alias("__fp"))
+        spread(df).selectExpr(f"`{id_col}`", f"{T.fingerprint(f'`{text_col}`')} AS __fp")
         .groupBy("__fp")
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count"))
         .drop("__fp")
@@ -186,10 +155,10 @@ def prefix_dedup(
     Returns one row per prefix group: keeper id (lowest), ``dup_count``,
     and the prefix digest for joining back.
     """
-    prefix = F.concat_ws(" ", F.slice(tokens(F.col(text_col)), 1, n_tokens))
+    prefix = f"concat_ws(' ', slice({T.tokens(f'`{text_col}`')}, 1, {n_tokens}))"
     return (
         spread(df)
-        .select(F.col(id_col), F.md5(prefix).alias("prefix_fp"))
+        .selectExpr(f"`{id_col}`", f"md5({prefix}) AS prefix_fp")
         .groupBy("prefix_fp")
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count"))
     )
@@ -218,14 +187,10 @@ def decontaminate(
     equi-join. Shingle hashing uses md5_int (engine-neutral, shared with
     the DuckDB oracle).
     """
-    tr = spread(train).select(
-        F.col(id_col), F.explode(shingles(f"`{text_col}`", n)).alias("__g")
-    ).select(F.col(id_col), md5_int(F.col("__g")).alias("__gh"))
-    ev = (
-        eval_df.select(F.explode(shingles(f"`{text_col}`", n)).alias("__g"))
-        .select(md5_int(F.col("__g")).alias("__gh"))
-        .distinct()
-    )
+    grams = f"explode({shingles(f'`{text_col}`', n)}) AS __g"
+    gram_hash = f"{T.md5_int('__g')} AS __gh"
+    tr = spread(train).selectExpr(f"`{id_col}`", grams).selectExpr(f"`{id_col}`", gram_hash)
+    ev = eval_df.selectExpr(grams).selectExpr(gram_hash).distinct()
     if broadcast_eval:
         ev = F.broadcast(ev)
     contaminated = (
@@ -252,7 +217,7 @@ def jaccard_pairs(
     (prefix filtering) — makes the join skew-proof at corpus scale at the cost
     of missing pairs that ONLY share ultra-common shingles.
     """
-    sh = spread(df).select(F.col(id_col).alias("id"), F.explode(shingles(f"`{text_col}`", k)).alias("sh"))
+    sh = spread(df).selectExpr(f"`{id_col}` AS id", f"explode({shingles(f'`{text_col}`', k)}) AS sh")
     if max_shingle_freq is not None:
         hot = sh.groupBy("sh").count().filter(F.col("count") > max_shingle_freq).select("sh")
         sh = sh.join(F.broadcast(hot), "sh", "left_anti")
@@ -290,7 +255,7 @@ def minhash_signatures(
     only (id, 16 bigints) thanks to map-side partial MINs, so the pattern
     holds at corpus scale.
     """
-    sh = spread(df).select(F.col(id_col), shingles(f"`{text_col}`", k).alias("shs"))
+    sh = spread(df).selectExpr(f"`{id_col}`", f"{shingles(f'`{text_col}`', k)} AS shs")
     return _signatures_from_shingles(sh, id_col)
 
 
@@ -304,7 +269,7 @@ def _signatures_from_shingles(sh_df: DataFrame, id_col: str) -> DataFrame:
     pass and on every batch of an incremental pipeline)."""
     ex = sh_df.selectExpr(f"`{id_col}`", "explode(shs) AS s").selectExpr(
         f"`{id_col}`",
-        f"CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P} AS h",
+        f"{T.md5_int('s')} % {MINHASH_P} AS h",
     )
     return ex.groupBy(id_col).agg(
         *[
@@ -379,9 +344,7 @@ def minhash_dedup_pairs(
     from qurious_spark.operators.caching import persist_rotating
 
     sh = persist_rotating(
-        spread(df).select(
-            F.col(id_col).alias("id"), shingles(f"`{text_col}`", k).alias("shs")
-        ),
+        spread(df).selectExpr(f"`{id_col}` AS id", f"{shingles(f'`{text_col}`', k)} AS shs"),
         "minhash_shingle_frame",
     )
     sig_df = _signatures_from_shingles(sh, "id").withColumnRenamed("id", id_col)
@@ -409,9 +372,9 @@ def simhash_fingerprints(
 ) -> DataFrame:
     """32-bit SimHash via explode + one codegen'd aggregate with 32 per-bit
     vote SUMs (same scale shape as minhash_signatures)."""
-    ex = spread(df).select(
-        F.col(id_col), F.explode(shingles(f"`{text_col}`", k)).alias("s")
-    ).withColumn("h", md5_int(F.col("s")))
+    ex = spread(df).selectExpr(
+        f"`{id_col}`", f"explode({shingles(f'`{text_col}`', k)}) AS s"
+    ).withColumn("h", F.expr(T.md5_int("s")))
     # single SQL-text expressions per aggregate / the final fold — one py4j
     # round trip each instead of ~8 per bit (see _signatures_from_shingles)
     votes = ex.groupBy(id_col).agg(
@@ -475,8 +438,8 @@ def minhash_lsh_ml(
     approxSimilarityJoin prunes via LSH OR-amplification."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    with_sh = spread(df).select(F.col(id_col), shingles(f"`{text_col}`").alias("shs")).filter(
-        F.size("shs") > 0
+    with_sh = spread(df).selectExpr(f"`{id_col}`", f"{shingles(f'`{text_col}`')} AS shs").where(
+        "size(shs) > 0"
     )
     tf = HashingTF(inputCol="shs", outputCol="features", numFeatures=1 << 18)
     feats = tf.transform(with_sh)
@@ -521,9 +484,7 @@ def incremental_near_dups(
     from qurious_spark.operators.caching import persist_rotating
 
     sh_new = persist_rotating(
-        spread(new_df).select(
-            F.col(id_col).alias("id"), shingles(f"`{text_col}`", k).alias("shs")
-        ),
+        spread(new_df).selectExpr(f"`{id_col}` AS id", f"{shingles(f'`{text_col}`', k)} AS shs"),
         "incr_new_shingles",
     )  # read by: signature agg, band probe (via sigs), and BOTH verify sides
     sig_new = _signatures_from_shingles(sh_new, "id")
@@ -553,7 +514,7 @@ def incremental_near_dups(
     sh_c = (
         spread(corpus_df)
         .join(c_ids, id_col)
-        .select(F.col(id_col).alias("id"), shingles(f"`{text_col}`", k).alias("shs"))
+        .selectExpr(f"`{id_col}` AS id", f"{shingles(f'`{text_col}`', k)} AS shs")
     )
     # verify each candidate against the text of the SIDE it came from: a
     # doc id present in both the corpus and the batch would otherwise join
@@ -579,3 +540,112 @@ def incremental_near_dups(
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "dup_of", "jaccard", "origin")
     )
+
+
+# --------------------------------------------------------------------------- #
+# Character-gram pipelines: winnowing pairs and exact duplicated spans
+# --------------------------------------------------------------------------- #
+
+
+def winnow_fingerprint_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 7,
+    w: int = 4,
+) -> DataFrame:
+    """(id, fingerprint) pairs of the winnowing sketch — the SCALE path.
+
+    The array-valued functions/text.py ``winnow_fingerprints`` nests
+    higher-order lambdas, and Spark evaluates a lambda's argument expressions
+    per outer element — the gram-hash array is recomputed for every window
+    position, O(n²) interpreted md5 per document. This variant computes each
+    gram hash ONCE (posexplode, then hash per exploded row — plain codegen'd
+    expressions) and takes window minima with a key-partitioned ROWS window,
+    O(n·w) per document and one shuffle on the document id. Use this form
+    for joins and aggregates; the array form is fine for short strings.
+    """
+    ident = f"`{id_col}`"
+    # explode POSITIONS, not a gram array built by a lambda that captures
+    # the normalized string (that form re-runs the normalize regex per
+    # gram — O(n·|s|) per doc). The Generate's child computes __s once per
+    # input row; the substring below runs once per exploded row.
+    h = (
+        df.selectExpr(ident, f"{T.normalize(f'`{text_col}`')} AS __s")
+        .selectExpr(
+            ident, "__s", f"posexplode(sequence(1, greatest(length(__s) - {k} + 1, 1))) AS (__pos, __i)"
+        )
+        .selectExpr(ident, "__pos", f"{T.md5_int(f'substring(__s, __i, {k})')} % {T.WINNOW_P} AS __hv")
+    )
+    fwd = Window.partitionBy(id_col).orderBy("__pos").rowsBetween(0, w - 1)
+    part = Window.partitionBy(id_col)
+    return (
+        h.withColumn("__wm", F.min("__hv").over(fwd))
+        .withColumn("__n", F.count("*").over(part))
+        # windows that extend past the last gram are not selection windows
+        # (except when the doc has fewer than w grams: single window)
+        .where(f"__pos <= __n - {w} OR __pos = 0")
+        .selectExpr(ident, "__wm AS fingerprint")
+        .distinct()
+    )
+
+
+def duplicated_spans(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    min_len: int = 60,
+    cross_doc_only: bool = False,
+) -> DataFrame:
+    """Exact duplicated-substring spans (the Lee et al. 2022 "Deduplicating
+    Training Data" shape): every maximal character range of the normalized
+    text whose ``min_len``-grams also occur elsewhere in the corpus.
+
+    Suffix arrays don't distribute; the equivalent Spark-first pipeline is:
+    hash EVERY ``min_len``-gram position (explode positions + substring —
+    each gram hashed once, the :func:`winnow_fingerprint_pairs`
+    anti-recompute pattern), keep hashes occurring >= 2 times
+    (``cross_doc_only`` demands two distinct documents, else within-doc
+    repetition counts too), and merge the surviving fixed-length windows
+    into maximal spans with a per-document lag window (linear per doc, keys
+    spread across executors). Any duplicated substring of length >= min_len
+    is covered by at least one surviving gram window, so the merged spans
+    are exactly the maximal duplicated ranges at gram resolution. Hashes are
+    60-bit md5 prefixes — collision odds ~2^-60 per pair; exact-match
+    verification of spans can be layered on for adversarial corpora.
+
+    Returns (id_col, span_start, span_end): 1-based char offsets into the
+    NORMALIZED text, end exclusive.
+    """
+    L = int(min_len)
+    if L < 2:
+        raise ValueError("min_len must be >= 2")
+    ident = f"`{id_col}`"
+    h = (
+        df.selectExpr(ident, f"{T.normalize(f'`{text_col}`')} AS __s")
+        .where(f"length(__s) >= {L}")
+        .selectExpr(ident, "__s", f"explode(sequence(1, length(__s) - {L} + 1)) AS __pos")
+        .selectExpr(ident, "__pos", f"{T.md5_int(f'substring(__s, __pos, {L})')} AS __h")
+    )
+    agg = [F.count("*").alias("__n")]
+    if cross_doc_only:
+        agg.append(F.count_distinct(F.col(id_col)).alias("__nd"))
+    freq = h.groupBy("__h").agg(*agg)
+    dup = freq.where("__nd >= 2" if cross_doc_only else "__n >= 2").select("__h")
+    pos_dup = h.join(dup, "__h").select(id_col, "__pos")
+    w = Window.partitionBy(id_col).orderBy("__pos")
+    grouped = (
+        pos_dup.withColumn("__prev", F.lag("__pos").over(w))
+        .withColumn(
+            "__brk",
+            F.expr(f"CASE WHEN __prev IS NULL OR __pos > __prev + {L} THEN 1 ELSE 0 END"),
+        )
+        .withColumn(
+            "__gid",
+            F.sum("__brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        )
+    )
+    return grouped.groupBy(id_col, "__gid").agg(
+        F.expr("CAST(min(__pos) AS BIGINT) AS span_start"),
+        F.expr(f"CAST(max(__pos) + {L} AS BIGINT) AS span_end"),
+    ).select(id_col, "span_start", "span_end")

@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from qurious_spark.operators.dedup import md5_int
-from qurious_spark.operators.sampling import HASH_M, _slot
+from qurious_spark.functions.text import md5_int
+from qurious_spark.operators.sampling import HASH_M, _slot_sql
 
 
 def mix_corpora(
@@ -48,15 +48,12 @@ def mix_corpora(
         # raise (tools/empty_sweep.py)
         thr = 0 if n == 0 else min(HASH_M, -(-HASH_M * quota // n))  # ceil, capped
         cols = keep_cols or df.columns
+        mix_key = f"concat_ws('#', {i}, CAST(`{id_col}` AS STRING))"
         part = (
-            df.filter(_slot(id_col) < F.lit(int(thr)))
+            df.where(f"{_slot_sql(id_col)} < {int(thr)}")
             .select(*cols)
             .withColumn("src", F.lit(i).cast("bigint"))
-            .withColumn(
-                "mix_slot",
-                md5_int(F.concat_ws("#", F.lit(i), F.col(id_col).cast("string")))
-                % HASH_M,
-            )
+            .withColumn("mix_slot", F.expr(f"{md5_int(mix_key)} % {HASH_M}"))
         )
         out = part if out is None else out.unionByName(part)
     if out is None:

@@ -16,7 +16,7 @@ deterministic, engine-neutral (md5-ordered) alternatives:
   row_number — correct when strata are modest (the window sorts each
   stratum in one task).
 
-Both orderings use the shared md5→bigint digest (operators/dedup.md5_int),
+Both orderings use the shared md5→bigint digest (functions/text.py md5_int),
 so the DuckDB oracle reproduces the exact row set.
 """
 
@@ -25,14 +25,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from qurious_spark.operators.dedup import md5_int
+from qurious_spark.functions.text import md5_int
 
 # Hash-space modulus; divides rows into M deterministic slots.
 HASH_M = 1_000_000
 
 
+def _slot_sql(id_col: str) -> str:
+    return f"{md5_int(f'CAST(`{id_col}` AS STRING)')} % {HASH_M}"
+
+
 def _slot(id_col: str) -> F.Column:
-    return md5_int(F.col(id_col).cast("string")) % HASH_M
+    return F.expr(_slot_sql(id_col))
 
 
 def stratified_sample_hash(
@@ -93,11 +97,10 @@ def weighted_sample_ares(
     them is the only behavior that keeps the sample well-defined.
     """
     df = df.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
-    u = (md5_int(F.col(id_col).cast("string")) % HASH_M + 0.5) / float(HASH_M)
-    key = F.round(
-        F.pow(u, 1.0 / F.col(weight_col).cast("double")), 9
-    ).alias("__key")
-    keyed = df.withColumn("__key", key)
+    u = f"({_slot_sql(id_col)} + 0.5D) / {float(HASH_M)}D"
+    keyed = df.withColumn(
+        "__key", F.expr(f"round(power({u}, 1.0D / CAST(`{weight_col}` AS DOUBLE)), 9)")
+    )
     if stratum_col is not None:
         w = Window.partitionBy(stratum_col).orderBy(
             F.col("__key").desc(), F.col(id_col).asc()

@@ -358,9 +358,7 @@ def dedup_stream_exact(spark, sf_dir):
     fingerprint (append mode, availableNow drain), and the surviving
     fingerprint SET — deterministic even though dropDuplicates keeps an
     arbitrary row per key — must equal the batch SELECT DISTINCT oracle."""
-    from pyspark.sql import functions as F
-
-    from qurious_spark.operators.dedup import normalize
+    from qurious_spark.functions.text import fingerprint
     from qurious_spark.streaming import run_to_memory
     from qurious_spark.streaming.dedup import stream_dedup_exact
 
@@ -369,7 +367,7 @@ def dedup_stream_exact(spark, sf_dir):
     name = f"q_stream_dedup_{next(_DOC_STREAM_RUNS)}"
     kept = stream_dedup_exact(stream)
     result = run_to_memory(
-        kept.select(F.md5(normalize(F.col("text"))).alias("fp")),
+        kept.selectExpr(f"{fingerprint('`text`')} AS fp"),
         name,
         output_mode="append",
     )

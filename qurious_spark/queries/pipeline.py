@@ -22,7 +22,7 @@ from qurious_spark.functions import text as T
 from qurious_spark.operators import sampling as SA
 from qurious_spark.queries import df_query, table
 from qurious_spark.queries.dedup import _duck_md5int
-from qurious_spark.queries.text import _NORM, _TOKS
+from qurious_spark.queries.text import _NORM, _TEXT, _TOKS
 
 LANGS = ("en", "de", "fr")
 K_PER_LANG = 10
@@ -79,12 +79,12 @@ def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language filter → quality gate → exact dedup → stratified sample,
     composed from functions/text.py + operators/sampling.py."""
     docs = table(spark, sf_dir, "documents")
-    feat = docs.select(
+    feat = docs.selectExpr(
         "doc_id",
         "lang",
-        T.fingerprint(F.col("text")).alias("fp"),
-        T.token_count(F.col("text")).alias("n_tokens"),
-        T.quality_score(F.col("text")).alias("quality"),
+        f"{T.fingerprint(_TEXT)} AS fp",
+        f"{T.token_count(_TEXT)} AS n_tokens",
+        f"{T.quality_score(_TEXT)} AS quality",
     )
     filtered = feat.filter(
         F.col("lang").isin(*LANGS) & (F.col("quality") >= MIN_QUALITY)
@@ -132,11 +132,10 @@ def pipeline_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix sum (operators/packing.py) — the oracle states the
     same cumsum as ONE global window, proving the distributed decomposition
     is exact."""
-    from qurious_spark.functions.text import token_count
     from qurious_spark.operators.packing import pack_documents
 
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", token_count(F.col("text")).alias("tok")
+    docs = table(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"{T.token_count(_TEXT)} AS tok"
     )
     packed = pack_documents(docs, "tok", ctx_len=CTX_LEN)
     return (
@@ -310,7 +309,7 @@ def pipeline_split_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("split", "source")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum(T.token_count(F.col("text"))).cast("bigint").alias("total_tokens"),
+            F.expr(f"CAST(sum({T.token_count(_TEXT)}) AS BIGINT) AS total_tokens"),
         )
     )
 

@@ -201,7 +201,7 @@ def heavy_hitters_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     n_docs = docs.count()
-    grams = docs.select(F.explode(shingles("`text`", 2)).alias("g"))
+    grams = docs.selectExpr(f"explode({shingles('`text`', 2)}) AS g")
     return heavy_hitters(
         grams, "g", min_count=max(1, math.ceil(n_docs / 50))
     ).orderBy("g")

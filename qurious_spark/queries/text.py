@@ -1,8 +1,10 @@
 """Text-analysis queries over the ``documents`` table (oracle-checked).
 
-Spark side uses the expression builders in qurious_spark.functions.text
-(pure JVM column expressions); the DuckDB oracle replicates the exact same
-arithmetic so results hash-match.
+The Spark side builds its expressions from the SQL text in
+qurious_spark.functions.text (handed to ``selectExpr``) and its
+character-gram pipelines from operators/dedup.py; relations (joins,
+windows, aggregates) stay DataFrame operations. The DuckDB oracle
+replicates the exact same arithmetic so results hash-match.
 """
 
 from __future__ import annotations
@@ -11,9 +13,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qurious_spark.functions import text as T
-from qurious_spark.operators.dedup import spread
+from qurious_spark.operators.dedup import duplicated_spans, spread, winnow_fingerprint_pairs
 from qurious_spark.queries import df_query, table
 
+# The documents text column as a SQL fragment for the functions/text.py builders.
+_TEXT = "`text`"
 # Shared DuckDB snippets replicating functions/text.py definitions.
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _TOKS = f"string_split({_NORM}, ' ')"
@@ -22,24 +26,24 @@ _TOKS = f"string_split({_NORM}, ' ')"
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents scan, widened to the session's parallelism.
 
-    r12 optimization (guide §2.6 idle capacity): the local single-file
-    parquet scans as 1-2 partitions, which serializes regex/gram-heavy
-    per-document map stages onto one or two cores — measured 10.4s on
-    text_duplicate_spans and 4.9s on text_winnow_overlap at sf0.1 (2.3s
-    each after; 94.7s -> 11.2s and 24.0s -> 4.1s at the 10x sf1 shape).
-    ``spread`` (operators/dedup.py, the same adapter every dedup operator
-    uses) repartitions size-aware (64 KiB/partition floor, capped at
-    defaultParallelism) and is a no-op on a cluster scan that already
-    arrives wide; results are row-wise / key-aggregated and
+    Guide §2.6 idle capacity: the local single-file parquet scans as 1-2
+    partitions, which serializes regex/gram-heavy per-document map stages
+    onto one or two cores. ``spread`` (operators/dedup.py, the same adapter
+    every dedup operator uses) repartitions size-aware (64 KiB/partition
+    floor, capped at defaultParallelism) and is a no-op on a cluster scan
+    that already arrives wide; results are row-wise / key-aggregated and
     partitioning-independent (pinned by the partitioning-perturbation
-    gate).
+    gate). Measured on a 4-vCPU host (local[3], sf0.1, median of 5
+    interleaved runs, spread against the identity): text_duplicate_spans
+    6.28 s vs 14.57 s, text_winnow_overlap 3.13 s vs 5.38 s,
+    text_pii_redact 0.44 s vs 0.85 s, text_quality 0.33 s vs 0.38 s.
 
     Applied ONLY where the pre-shuffle per-row work is heavy (quality,
     lang_id, repetition, chunking, PII redaction, winnowing, duplicate
     spans). The light-map or explode-into-shuffle entries (token_count,
-    fingerprint, stats_by_source, vocab_doc_freq, tfidf) measured 0.02-0.1s
-    SLOWER with the extra exchange + wider shuffle-map fan-out and keep the
-    narrow scan."""
+    fingerprint, stats_by_source, vocab_doc_freq, tfidf) keep the narrow
+    scan: on the old 32-core host they measured 0.02-0.1s SLOWER with the
+    extra exchange + wider shuffle-map fan-out."""
     return spread(table(spark, sf_dir, "documents"))
 
 
@@ -55,11 +59,11 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return docs.select(
+    return docs.selectExpr(
         "doc_id",
-        T.token_count(F.col("text")).alias("n_tokens"),
-        T.bpe_ish_token_count(F.col("text")).alias("n_bpe_tokens"),
-        T.char_count(F.col("text")).alias("n_chars_measured"),
+        f"{T.token_count(_TEXT)} AS n_tokens",
+        f"{T.bpe_ish_token_count(_TEXT)} AS n_bpe_tokens",
+        f"{T.char_count(_TEXT)} AS n_chars_measured",
     )
 
 
@@ -72,7 +76,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return docs.select("doc_id", T.fingerprint(F.col("text")).alias("fp"))
+    return docs.selectExpr("doc_id", f"{T.fingerprint(_TEXT)} AS fp")
 
 
 @df_query(
@@ -98,7 +102,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_wide(spark, sf_dir)
-    return docs.select("doc_id", T.quality_score(F.col("text")).alias("quality"))
+    return docs.selectExpr("doc_id", f"{T.quality_score(_TEXT)} AS quality")
 
 
 def _duck_lang_id() -> str:
@@ -131,10 +135,7 @@ def _duck_lang_id() -> str:
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_wide(spark, sf_dir)
     return (
-        docs.select(
-            F.col("lang").alias("actual_lang"),
-            T.lang_id(F.col("text")).alias("predicted_lang"),
-        )
+        docs.selectExpr("lang AS actual_lang", f"{T.lang_id(_TEXT)} AS predicted_lang")
         .groupBy("actual_lang", "predicted_lang")
         .agg(F.count("*").alias("cnt"))
     )
@@ -156,7 +157,7 @@ def text_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(T.token_count(F.col("text"))).cast("bigint").alias("total_tokens"),
+        F.expr(f"CAST(sum({T.token_count(_TEXT)}) AS BIGINT) AS total_tokens"),
         F.round(F.avg(F.length("text")), 4).alias("avg_chars"),
         F.max("n_chars").cast("bigint").alias("max_declared_chars"),
     )
@@ -185,7 +186,7 @@ def vocab_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary: document frequency + total term frequency per
     token (top 100 by df)."""
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok"))
+    toks = docs.selectExpr("doc_id", f"explode({T.tokens(_TEXT)}) AS tok")
     return (
         toks.groupBy("tok")
         .agg(
@@ -229,7 +230,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     query DAG. ``count + 1.0`` promotes to the same double the Python
     literal produced, so values are bit-identical."""
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok"))
+    toks = docs.selectExpr("doc_id", f"explode({T.tokens(_TEXT)}) AS tok")
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = toks.groupBy("tok").agg(F.count_distinct("doc_id").alias("df"))
     n = table(spark, sf_dir, "documents").agg(
@@ -294,22 +295,18 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence fraction of the most frequent 2-/3-gram. The n-gram passes
     shuffle (doc_id, gram) with map-side partial counts; the three signals
     join back on doc_id (co-partitioned aggregations, no wide rows)."""
-    from qurious_spark.functions.text import ngrams, type_token_ratio
-
     docs = _docs_wide(spark, sf_dir)
 
     def top_frac(n: int, name: str) -> DataFrame:
         return (
-            docs.select("doc_id", F.explode(ngrams(F.col("text"), n)).alias("g"))
+            docs.selectExpr("doc_id", f"explode({T.ngrams(_TEXT, n)}) AS g")
             .groupBy("doc_id", "g")
             .agg(F.count("*").alias("c"))
             .groupBy("doc_id")
             .agg((F.max("c") / F.sum("c")).alias(name))
         )
 
-    ttr = docs.select(
-        "doc_id", F.round(type_token_ratio(F.col("text")), 6).alias("ttr")
-    )
+    ttr = docs.selectExpr("doc_id", f"round({T.type_token_ratio(_TEXT)}, 6) AS ttr")
     return (
         ttr.join(top_frac(2, "f2"), "doc_id", "left")
         .join(top_frac(3, "f3"), "doc_id", "left")
@@ -520,9 +517,8 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives token reflows word-shingle dedup misses. Guarantee: any shared
     substring >= k+w-1 chars shares a fingerprint. Uses the explode+window
     pair path (each gram hashed ONCE; the nested-lambda array form is
-    O(n^2) per doc — see winnow_fingerprint_pairs docstring)."""
-    from qurious_spark.functions.text import winnow_fingerprint_pairs
-
+    O(n^2) per doc — see the operators/dedup.py winnow_fingerprint_pairs
+    docstring)."""
     docs = _docs_wide(spark, sf_dir)
     pairs = winnow_fingerprint_pairs(docs)
     return pairs.groupBy("doc_id").agg(
@@ -588,7 +584,6 @@ def text_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     share plenty of RARE fingerprints. Fingerprints in more than
     WINNOW_MAX_FP_DF documents are dropped before the self-join (both
     engines apply the identical cap, so the oracle stays exact)."""
-    from qurious_spark.functions.text import winnow_fingerprint_pairs
     from qurious_spark.operators.caching import persist_rotating
 
     docs = _docs_wide(spark, sf_dir)
@@ -654,12 +649,10 @@ def text_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicated-substring spans (functions/text.py duplicated_spans,
+    """Exact duplicated-substring spans (operators/dedup.py duplicated_spans,
     the Lee et al. 2022 exact complement to the winnowing sketch): maximal
     normalized-text ranges whose 60-grams occur >= 2 times in the corpus.
     Every gram is hashed once (posexplode pattern); span merging is a
     per-document lag window."""
-    from qurious_spark.functions.text import duplicated_spans
-
     docs = _docs_wide(spark, sf_dir)
     return duplicated_spans(docs, min_len=60)

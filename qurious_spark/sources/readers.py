@@ -10,6 +10,7 @@ pushed filters, never an in-memory copy.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 
@@ -93,19 +94,36 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     ``spark.sql.legacy.parquet.nanosAsLong=true`` a physical INT64
     TIMESTAMP(NANOS) column arrives as long nanos-since-epoch, and is
     converted to a timestamp inside the plan via ``timestamp_micros`` so
-    everything stays lazy and JVM-side. The conf is set HERE, at runtime
-    (verified runtime-settable), so the tolerance holds on any
+    everything stays lazy and JVM-side: a top-level column directly, a list
+    of them element-wise. A nanos timestamp nested anywhere else (a struct,
+    a map, a list of lists) would come back as silent epoch-nanos bigints,
+    so it raises ``TypeError`` naming the column. The conf is set HERE, at
+    runtime (verified runtime-settable), so the tolerance holds on any
     SparkSession, not just ones built by our own get_spark helper.
     """
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
         meta = pq.read_metadata(path)
+        fields = _fields(meta)
     except Exception:
         return spark.read.parquet(path)
     # INT96 also surfaces as arrow timestamp[ns], but Spark reads it as a
     # timestamp: only the physical INT64 NANOS columns are nanos
-    nano_cols = [c.name for c in _top_level_leaves(meta).values() if _timestamp_unit(c) == "nanoseconds"]
+    nano_cols: dict[str, str] = {}
+    for field, leaves in fields:
+        if not any(_timestamp_unit(c) == "nanoseconds" for c in leaves):
+            continue
+        if pa.types.is_timestamp(field.type):
+            nano_cols[field.name] = "timestamp_micros({} div 1000)"
+        elif _is_list(field.type) and pa.types.is_timestamp(field.type.value_type):
+            nano_cols[field.name] = "transform({}, x -> timestamp_micros(x div 1000))"
+        else:
+            raise TypeError(
+                f"parquet column {field.name!r} ({field.type}) nests a nanosecond "
+                "timestamp; only a top-level column or a list of them is converted"
+            )
     if nano_cols:
         # Without this a vanilla session throws "Illegal Parquet type: INT64
         # (TIMESTAMP(NANOS,..))" at scan time.
@@ -123,7 +141,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     # (~1.7e18 > 2^53) and round the microsecond up
     return df.selectExpr(
         *(
-            f"timestamp_micros({_ident(c)} div 1000) AS {_ident(c)}" if c in nano_cols else _ident(c)
+            f"{nano_cols[c].format(_ident(c))} AS {_ident(c)}" if c in nano_cols else _ident(c)
             for c in df.columns
         )
     )
@@ -163,17 +181,16 @@ def footer_schema(spark: SparkSession, meta) -> StructType:
     ``spark.sql.parquet.inferTimestampNTZ.enabled``, INT96 is a timestamp,
     INT64 TIMESTAMP(NANOS) is a bigint (``nanosAsLong``), and
     un-annotated binary follows ``spark.sql.parquet.binaryAsString``.
-    Every field is nullable. Raises ``TypeError`` for a type these rules do
-    not cover (time, duration, float16, a timestamp inside a nested type,
-    ...)."""
+    Every field is nullable. A timestamp inside a list takes the rule of its
+    leaf. Raises ``TypeError`` for a type these rules do not cover (time,
+    duration, float16, a timestamp inside a struct or map, ...)."""
     spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
     if spark_json is not None:
         return StructType.fromJson(_all_nullable(json.loads(spark_json)))
-    leaves = _top_level_leaves(meta)
     return StructType(
         [
-            StructField(f.name, _spark_type(spark, f.type, leaves.get(f.name)))
-            for f in meta.schema.to_arrow_schema()
+            StructField(f.name, _spark_type(spark, f.type, leaves[0] if len(leaves) == 1 else None))
+            for f, leaves in _fields(meta)
         ]
     )
 
@@ -188,11 +205,33 @@ def _all_nullable(node):
     return {k: True if k in flags else v if k == "metadata" else _all_nullable(v) for k, v in node.items()}
 
 
-def _top_level_leaves(meta) -> dict:
-    """Parquet leaf columns that are top-level fields, by name (a nested
-    leaf's path is longer than its name)."""
-    cols = (meta.schema.column(i) for i in range(meta.num_columns))
-    return {c.name: c for c in cols if c.path == c.name}
+def _fields(meta) -> list[tuple]:
+    """(arrow field, its parquet leaf columns) for each top-level field.
+    Parquet stores the leaves depth-first in schema order, so each field
+    takes as many as its type has."""
+    cols = iter(meta.schema.column(i) for i in range(meta.num_columns))
+    fields = [(f, list(itertools.islice(cols, _leaf_count(f.type)))) for f in meta.schema.to_arrow_schema()]
+    if next(cols, None) is not None or any(not leaves for _, leaves in fields):
+        raise ValueError("parquet leaf columns do not match the arrow schema")
+    return fields
+
+
+def _leaf_count(t) -> int:
+    import pyarrow as pa
+
+    if pa.types.is_struct(t):
+        return sum(_leaf_count(f.type) for f in t)
+    if pa.types.is_map(t):
+        return _leaf_count(t.key_type) + _leaf_count(t.item_type)
+    if _is_list(t):
+        return _leaf_count(t.value_type)
+    return 1
+
+
+def _is_list(t) -> bool:
+    import pyarrow as pa
+
+    return pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t)
 
 
 def _timestamp_unit(leaf) -> str | None:
@@ -209,7 +248,8 @@ def _conf_on(spark: SparkSession, key: str) -> bool:
 
 def _spark_type(spark: SparkSession, t, leaf) -> DataType:
     """Spark type of arrow type ``t``; ``leaf`` is its parquet column when
-    the field is a top-level leaf, else None."""
+    the top-level field has one leaf (a primitive or a list of them), else
+    None."""
     import pyarrow as pa
 
     if str(t) in _ARROW_TO_SPARK:
@@ -231,8 +271,8 @@ def _spark_type(spark: SparkSession, t, leaf) -> DataType:
             if utc or not _conf_on(spark, "spark.sql.parquet.inferTimestampNTZ.enabled"):
                 return TimestampType()
             return TimestampNTZType()
-    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
-        return ArrayType(_spark_type(spark, t.value_type, None), True)
+    if _is_list(t):
+        return ArrayType(_spark_type(spark, t.value_type, leaf), True)
     if pa.types.is_map(t):
         return MapType(_spark_type(spark, t.key_type, None), _spark_type(spark, t.item_type, None), True)
     if pa.types.is_struct(t):

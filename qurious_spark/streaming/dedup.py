@@ -19,11 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from qurious_spark.operators.dedup import normalize
+from qurious_spark.functions.text import fingerprint
 
 
 def _with_fingerprint(stream: DataFrame, text_col: str) -> DataFrame:
-    return stream.withColumn("__fp", F.md5(normalize(F.col(text_col))))
+    return stream.withColumn("__fp", F.expr(fingerprint(f"`{text_col}`")))
 
 
 def stream_dedup_exact(stream: DataFrame, text_col: str = "text") -> DataFrame:

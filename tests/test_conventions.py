@@ -95,8 +95,10 @@ def test_no_dataframe_round_over_double_cast():
 def test_rdd_access_is_metadata_only_in_spread():
     """``.rdd`` builds RDD lineage and escapes whole-stage codegen — the
     package's single allowed use is spread()'s driver-side
-    ``getNumPartitions()`` probe (round-8 judge hardening note). Any new
-    ``.rdd`` access must be justified here."""
+    ``getNumPartitions()`` probe. That probe reads no rows, but it plans its
+    input physically and so runs the input's subqueries and AQE exchanges
+    as jobs, once per input per session (spread memoizes it; see its
+    docstring). Any new ``.rdd`` access must be justified here."""
     import re
 
     pkg = os.path.join(os.path.dirname(QUERIES_DIR))
@@ -158,17 +160,21 @@ _VECTOR_LAYER = (
     "operators/clustering.py",
     "queries/vector.py",
 )
+# The text layer: the modules that build text expressions.
+_TEXT_LAYER = (
+    "functions/text.py",
+    "operators/dedup.py",
+    "queries/text.py",
+    "operators/chunking.py",
+)
+_PKG = os.path.dirname(QUERIES_DIR)
 
 
-def test_vector_functions_import_no_pyspark():
-    """functions/vector.py builds SQL text only, so it needs nothing from
-    pyspark; a Column form next to the text would be a second way to build
-    the same expression."""
+def _pyspark_imports(rel: str) -> list[str]:
     import ast
 
-    path = os.path.join(os.path.dirname(QUERIES_DIR), "functions", "vector.py")
     bad = []
-    for node in ast.walk(ast.parse(open(path).read())):
+    for node in ast.walk(ast.parse(open(os.path.join(_PKG, rel)).read())):
         if isinstance(node, ast.Import):
             mods = [a.name for a in node.names]
         elif isinstance(node, ast.ImportFrom):
@@ -176,21 +182,17 @@ def test_vector_functions_import_no_pyspark():
         else:
             continue
         bad += [f"line {node.lineno}: {m}" for m in mods if m.split(".")[0] == "pyspark"]
-    assert not bad, f"functions/vector.py imports from pyspark: {bad}"
+    return bad
 
 
-def test_vector_layer_passes_no_python_lambdas():
-    """The vector layer writes higher-order functions as SQL text
-    (``x -> ...``). A Python lambda passed to F.transform and its kind costs
-    several py4j round trips to build and brings back the Column twin of a
-    text expression."""
+def _python_lambda_hofs(rels: tuple[str, ...]) -> list[str]:
+    """``F.<hof>(..., lambda ...)`` calls in the given package modules."""
     import ast
 
-    hofs = {"transform", "aggregate", "zip_with", "filter", "exists", "forall"}
-    pkg = os.path.dirname(QUERIES_DIR)
+    hofs = {"transform", "aggregate", "zip_with", "filter", "exists", "forall", "array_sort"}
     bad = []
-    for rel in _VECTOR_LAYER:
-        for node in ast.walk(ast.parse(open(os.path.join(pkg, rel)).read())):
+    for rel in rels:
+        for node in ast.walk(ast.parse(open(os.path.join(_PKG, rel)).read())):
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
@@ -203,4 +205,58 @@ def test_vector_layer_passes_no_python_lambdas():
                 )
             ):
                 bad.append(f"{rel}:{node.lineno}: F.{node.func.attr}")
+    return bad
+
+
+def test_vector_functions_import_no_pyspark():
+    """functions/vector.py builds SQL text only, so it needs nothing from
+    pyspark; a Column form next to the text would be a second way to build
+    the same expression."""
+    bad = _pyspark_imports("functions/vector.py")
+    assert not bad, f"functions/vector.py imports from pyspark: {bad}"
+
+
+def test_vector_layer_passes_no_python_lambdas():
+    """The vector layer writes higher-order functions as SQL text
+    (``x -> ...``). A Python lambda passed to F.transform and its kind costs
+    several py4j round trips to build and brings back the Column twin of a
+    text expression."""
+    bad = _python_lambda_hofs(_VECTOR_LAYER)
     assert not bad, f"Python lambdas passed to higher-order functions: {bad}"
+
+
+def test_text_functions_import_no_pyspark():
+    """functions/text.py builds SQL text only (like functions/vector.py), so
+    it needs nothing from pyspark: no Column form of a text expression."""
+    bad = _pyspark_imports("functions/text.py")
+    assert not bad, f"functions/text.py imports from pyspark: {bad}"
+
+
+def test_text_layer_passes_no_python_lambdas():
+    """The text layer writes higher-order functions as SQL text (``x ->
+    ...``), including array_sort's comparator in lang_id."""
+    bad = _python_lambda_hofs(_TEXT_LAYER)
+    assert not bad, f"Python lambdas passed to higher-order functions: {bad}"
+
+
+def test_text_primitives_have_one_definition():
+    """normalize, tokens, the md5 digest and the k-token window builder are
+    defined once, as SQL text in functions/text.py; every other module calls
+    them. (The DuckDB oracle snippets are written for another engine and
+    use neither needle.)"""
+    import ast
+
+    primitives = {"normalize", "tokens", "md5_int", "k_windows"}
+    bad = []
+    for path in glob.glob(os.path.join(_PKG, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, _PKG)
+        if rel == os.path.join("functions", "text.py"):
+            continue
+        src = open(path).read()
+        bad += [
+            f"{rel}:{node.lineno}: def {node.name}"
+            for node in ast.walk(ast.parse(src))
+            if isinstance(node, ast.FunctionDef) and node.name.lstrip("_") in primitives
+        ]
+        bad += [f"{rel}: {n}" for n in ("conv(substring(md5(", "arrays_zip(") if n in src]
+    assert not bad, f"a second copy of a text primitive: {bad}"

@@ -42,6 +42,8 @@ def parquet_files(spark, tmp_path_factory) -> dict[str, str]:
         files[name] = str(d / f"{name}.parquet")
         pq.write_table(pa.table({"id": [1, 2, 3], "ts": pa.array(TS, pa.timestamp(unit, tz))}), files[name])
     files["int96"] = write_int96_part_file(spark, str(d / "int96"))
+    files["ns_list"] = str(d / "ns_list.parquet")
+    pq.write_table(pa.table({"id": [1], "tss": pa.array([TS], pa.list_(pa.timestamp("ns")))}), files["ns_list"])
     return files
 
 

@@ -19,7 +19,7 @@ def docs(spark):
 
     return (
         read_parquet(spark, f"{SF}/documents.parquet")
-        .select("doc_id", token_count(F.col("text")).alias("tok"))
+        .selectExpr("doc_id", f"{token_count('`text`')} AS tok")
         .cache()
     )
 

@@ -205,7 +205,7 @@ def test_incremental_near_dups_overlapping_ids_no_duplicate_pairs(spark):
 
 
 def test_duplicated_spans_finds_shared_and_repeated_substrings(spark):
-    from qurious_spark.functions.text import duplicated_spans
+    from qurious_spark.operators.dedup import duplicated_spans
 
     shared = "the quick brown fox jumps over the lazy dog while the band plays on"
     rep = "abcdefghij klmnopqrst uvwxyz0123 456789abcd efghijklmn"
@@ -238,8 +238,8 @@ def test_duplicated_spans_finds_shared_and_repeated_substrings(spark):
 
 
 def test_duplicated_spans_offsets_slice_to_identical_text(spark):
-    from qurious_spark.functions.text import duplicated_spans, normalize
-    from pyspark.sql import functions as F
+    from qurious_spark.functions.text import normalize
+    from qurious_spark.operators.dedup import duplicated_spans
 
     shared = "zero one two three four five six seven eight nine ten eleven"
     docs = spark.createDataFrame(
@@ -249,7 +249,7 @@ def test_duplicated_spans_offsets_slice_to_identical_text(spark):
     spans = {r.doc_id: r for r in duplicated_spans(docs, min_len=30).collect()}
     norm = {
         r.doc_id: r.s
-        for r in docs.select("doc_id", normalize(F.col("text")).alias("s")).collect()
+        for r in docs.selectExpr("doc_id", f"{normalize('`text`')} AS s").collect()
     }
     cut = lambda d: norm[d][spans[d].span_start - 1 : spans[d].span_end - 1]
     assert shared in cut(1) and shared in cut(2)
@@ -295,8 +295,8 @@ def test_shingles_sql_text_form(spark):
     for k in (2, 3, 5):
         got = {
             r.doc_id: tuple(r.shs) if r.shs is not None else None
-            for r in docs.select(
-                "doc_id", shingles("`text`", k).alias("shs")
+            for r in docs.selectExpr(
+                "doc_id", f"{shingles('`text`', k)} AS shs"
             ).collect()
         }
         want = {

@@ -91,3 +91,25 @@ def test_int96_is_not_nanos(spark, tmp_path):
     df = read_parquet(spark, part)
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert [r.ts for r in df.collect()] == [datetime.datetime(2024, 1, 1, 12, 0, 0, 123456)]
+
+
+def test_list_of_nanos_converts_element_wise(spark, tmp_path):
+    # a list<timestamp[ns]> column used to come back as array<bigint>
+    # epoch-nanos; each element now takes the top-level conversion
+    path = str(tmp_path / "ns_list.parquet")
+    pq.write_table(pa.table({"id": [1], "tss": pa.array([TS], pa.list_(pa.timestamp("ns")))}), path)
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    try:
+        df = read_parquet(spark, path)
+        assert dict(df.dtypes)["tss"] == "array<timestamp>"
+        assert [r.tss for r in df.collect()] == [TS]
+    finally:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def test_deeper_nested_nanos_raises(spark, tmp_path):
+    path = str(tmp_path / "ns_struct_list.parquet")
+    inner = pa.struct([("at", pa.timestamp("ns"))])
+    pq.write_table(pa.table({"id": [1], "evs": pa.array([[{"at": TS[0]}]], pa.list_(inner))}), path)
+    with pytest.raises(TypeError, match="evs"):
+        read_parquet(spark, path)

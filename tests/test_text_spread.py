@@ -37,7 +37,6 @@ def _bits(rows):
 
 def test_text_quality_widens_and_matches_unspread(spark):
     import qurious_spark.queries as q
-    from pyspark.sql import functions as F
     from qurious_spark.functions import text as T
 
     q.load_all()
@@ -52,8 +51,8 @@ def test_text_quality_widens_and_matches_unspread(spark):
     wide = q.REGISTRY["text_quality"](spark, "/root/testdata/sf0.1")
     plan01 = wide._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" in plan01, plan01[:500]
-    narrow = q.table(spark, SF, "documents").select(
-        "doc_id", T.quality_score(F.col("text")).alias("quality")
+    narrow = q.table(spark, SF, "documents").selectExpr(
+        "doc_id", f"{T.quality_score('`text`')} AS quality"
     )
     assert tiny.schema == narrow.schema
     assert sorted(_bits(tiny.collect())) == sorted(_bits(narrow.collect()))
@@ -61,7 +60,7 @@ def test_text_quality_widens_and_matches_unspread(spark):
 
 def test_duplicate_spans_widened_matches_unspread(spark):
     import qurious_spark.queries as q
-    from qurious_spark.functions.text import duplicated_spans
+    from qurious_spark.operators.dedup import duplicated_spans
 
     q.load_all()
     q.ensure_views(spark, SF)
@@ -81,7 +80,7 @@ def test_tfidf_broadcast_count_matches_literal_count(spark):
     q.ensure_views(spark, SF)
     new = q.REGISTRY["text_tfidf_top_terms"](spark, SF)
     docs = q.table(spark, SF, "documents")
-    toks = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok"))
+    toks = docs.selectExpr("doc_id", f"explode({T.tokens('`text`')}) AS tok")
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = toks.groupBy("tok").agg(F.count_distinct("doc_id").alias("df"))
     n_docs = docs.count()

@@ -1,8 +1,8 @@
-"""Winnowing fingerprints (functions/text.py)."""
+"""Winnowing fingerprints: the array form (functions/text.py) against the
+pair path (operators/dedup.py)."""
 
-from pyspark.sql import functions as F
-
-from qurious_spark.functions.text import winnow_fingerprints, winnow_fingerprint_pairs
+from qurious_spark.functions.text import winnow_fingerprints
+from qurious_spark.operators.dedup import winnow_fingerprint_pairs
 
 K, W = 7, 4
 
@@ -29,8 +29,8 @@ def test_pair_path_matches_array_path(spark):
     )
     arr = {
         r.doc_id: set(r.fp)
-        for r in df.select(
-            "doc_id", winnow_fingerprints(F.col("text"), k=K, w=W).alias("fp")
+        for r in df.selectExpr(
+            "doc_id", f"{winnow_fingerprints('`text`', k=K, w=W)} AS fp"
         ).collect()
     }
     assert _fp_sets(spark, texts) == arr
