@@ -22,8 +22,6 @@ import re
 
 from pyspark.sql import DataFrame
 
-from qurious_spark.plans.inspect import plan_bytes
-
 
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate ``df``'s lineage; reliable iff SPARK_GRAFT_CHECKPOINT_DIR set."""
@@ -45,27 +43,6 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
             "checkpoint dir — set the env before the first checkpoint call"
         )
     return df.checkpoint(eager=eager)
-
-
-# Minimum ESTIMATED input bytes before checkpoint_if_large materializes a
-# twice-consumed intermediate (1 GiB). Below it, recomputing the
-# branch (an extra local scan of a few MB) is cheaper than a checkpoint
-# job + block writes (measured +0.18s on tpch_q15 at sf0.1); above it, the
-# second full pass over the input dwarfs materializing the small aggregate.
-MATERIALIZE_BYTES = 1 << 30
-
-
-def checkpoint_if_large(df: DataFrame, size_of: DataFrame) -> DataFrame:
-    """Materialize ``df`` iff recomputing it would re-read a large input.
-
-    ``size_of`` is the frame whose Catalyst size estimate stands in for the
-    recompute cost (typically the big-table scan feeding ``df``). Each
-    invocation materializes fresh (localCheckpoint / reliable checkpoint per
-    the shim) — nothing is reused across invocations.
-    """
-    if plan_bytes(size_of) >= MATERIALIZE_BYTES:
-        return checkpoint(df)
-    return df
 
 
 def _base_dir(path: str) -> str:

@@ -5,17 +5,17 @@ SSNs and IP addresses before the data is packed. Greenfield operator (the
 reference engine has no text surface); Spark-first design:
 
 - detection and masking are chained ``regexp_count`` / ``regexp_replace``
-  JVM expressions — map-only, no shuffle, no Python; at 100 TB this runs
-  inside whole-stage codegen at scan speed;
+  JVM expressions, returned as Spark SQL text (one py4j round trip per
+  expression; hand it to ``selectExpr`` or ``F.expr``) — map-only, no
+  shuffle, no Python; at 100 TB this runs inside whole-stage codegen at
+  scan speed. The patterns go in as raw ``r'…'`` literals: a plain Spark
+  string literal would unescape their backslashes;
 - the patterns are deliberately restricted to syntax that Java regex and
   RE2-family engines (DuckDB) interpret identically — no backreferences,
   no lookarounds — so the DuckDB oracle replicates them verbatim.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Pattern order matters: emails before phones (digits in local parts),
 # SSNs before phones (a phone pattern must not half-consume an SSN).
@@ -27,19 +27,21 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def pii_count(col: Column, kind: str) -> Column:
-    """Occurrences of one PII kind (``email``/``ssn``/``phone``/``ip``)."""
+def pii_count(text: str, kind: str) -> str:
+    """Occurrences of one PII kind (``email``/``ssn``/``phone``/``ip``) in
+    the string SQL expression ``text``, as SQL text."""
     for name, pat, _ in PII_PATTERNS:
         if name == kind:
-            return F.regexp_count(col, F.lit(pat)).cast("bigint")
+            return f"CAST(regexp_count({text}, r'{pat}') AS BIGINT)"
     raise ValueError(f"unknown PII kind: {kind}")
 
 
-def redact_pii(col: Column) -> Column:
-    """Mask every PII kind, applying patterns in :data:`PII_PATTERNS` order."""
-    out = col
+def redact_pii(text: str) -> str:
+    """``text`` with every PII kind masked, applying patterns in
+    :data:`PII_PATTERNS` order, as SQL text."""
+    out = text
     for _, pat, token in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, token)
+        out = f"regexp_replace({out}, r'{pat}', '{token}')"
     return out
 
 

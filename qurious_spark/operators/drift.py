@@ -11,8 +11,9 @@ the previous snapshot and the new one:
   > 0.25 shifted).
 
 Scale shape: schema drift is metadata-only (no jobs); PSI is one
-aggregation per side over fixed edges (a `CASE`-bucketed groupBy — map-side
-combine, shuffle carries one row per bucket), never a sort or quantile job.
+aggregation per side over fixed edges (a groupBy on one `CASE WHEN` text —
+map-side combine, shuffle carries one row per bucket), never a sort or
+quantile job.
 Fixed edges are the deliberate choice: quantile-derived edges would make
 the two sides' buckets incomparable across runs.
 """
@@ -48,18 +49,18 @@ def _bucketed_fractions(df: DataFrame, col: str, edges: Sequence[float]) -> Data
     """(bucket, frac) over fixed edges; bucket 0 = below first edge,
     len(edges) = above last. NULLs are excluded (monitor them with a
     completeness check — operators/quality.py)."""
-    b = F.lit(len(edges))
-    for i, e in enumerate(reversed(edges)):
-        b = F.when(F.col(col) < F.lit(float(e)), F.lit(len(edges) - 1 - i)).otherwise(b)
+    c = f"`{col}`"
+    arms = "".join(
+        f"WHEN {c} < CAST('{float(e)!r}' AS DOUBLE) THEN {i} " for i, e in enumerate(edges)
+    )
+    bucket = f"CASE {arms}ELSE {len(edges)} END" if edges else "0"
     counted = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(b.alias("bucket"))
+        df.where(f"{c} IS NOT NULL")
+        .groupBy(F.expr(f"{bucket} AS bucket"))
         .agg(F.count("*").alias("__c"))
     )
     total = counted.agg(F.sum("__c").alias("__t"))
-    return counted.crossJoin(F.broadcast(total)).select(
-        "bucket", (F.col("__c") / F.col("__t")).alias("frac")
-    )
+    return counted.crossJoin(F.broadcast(total)).selectExpr("bucket", "__c / __t AS frac")
 
 
 def psi(

@@ -22,14 +22,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def qgrams(col, q: int = 2):
-    """Distinct q-grams of a string (array<string>); strings shorter than q
-    collapse to themselves."""
-    n = F.length(col)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - q + 1), lambda i: col.substr(i, F.lit(q))
+def qgrams(s: str, q: int = 2) -> str:
+    """Distinct q-grams of the string SQL expression ``s`` (array<string>),
+    as SQL text; strings shorter than q collapse to themselves."""
+    return (
+        f"array_distinct(CASE WHEN length({s}) >= {q} "
+        f"THEN transform(sequence(1, length({s}) - {q} + 1), i -> substr({s}, i, {q})) "
+        f"ELSE array({s}) END)"
     )
-    return F.array_distinct(F.when(n >= q, grams).otherwise(F.array(col)))
 
 
 def fuzzy_join(
@@ -56,11 +56,11 @@ def fuzzy_join(
     """
     lg = left.select(
         F.struct(*[F.col(c) for c in left.columns]).alias("__l"),
-        F.explode(qgrams(F.col(left_col), q)).alias("__g"),
+        F.explode(F.expr(qgrams(f"`{left_col}`", q))).alias("__g"),
     )
     rg = right.select(
         F.struct(*[F.col(c) for c in right.columns]).alias("__r"),
-        F.explode(qgrams(F.col(right_col), q)).alias("__g"),
+        F.explode(F.expr(qgrams(f"`{right_col}`", q))).alias("__g"),
     )
     if max_gram_freq is not None:
         hot = (

@@ -11,7 +11,6 @@ long format with a stack() projection — driver never sees row data.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
@@ -23,33 +22,27 @@ def profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     dtypes = dict(df.dtypes)
     cols = list(cols or df.columns)
     # positional (index-based) aliases: the source column name appears only
-    # as an escaped literal in stack(), never as an identifier, so names
-    # containing quotes/spaces/dots profile fine
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    # as a backtick-quoted identifier in the aggregates and an escaped
+    # literal in stack(), so names containing quotes/spaces/dots profile fine
+    aggs = ["count(1) AS __n"]
     for i, c in enumerate(cols):
+        q = "`" + c.replace("`", "``") + "`"
         is_num = dtypes[c] in _NUMERIC or dtypes[c].startswith("decimal")
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).cast("bigint").alias(f"__nulls_{i}"))
-        aggs.append(F.count_distinct(F.col(c)).cast("bigint").alias(f"__nd_{i}"))
-        if is_num:
-            aggs.append(F.min(F.col(c)).cast("double").alias(f"__min_{i}"))
-            aggs.append(F.max(F.col(c)).cast("double").alias(f"__max_{i}"))
-            aggs.append(F.avg(F.col(c)).cast("double").alias(f"__avg_{i}"))
-        else:
-            aggs.append(F.lit(None).cast("double").alias(f"__min_{i}"))
-            aggs.append(F.lit(None).cast("double").alias(f"__max_{i}"))
-            aggs.append(F.lit(None).cast("double").alias(f"__avg_{i}"))
-    one = df.agg(*aggs)
+        aggs.append(f"CAST(sum(CASE WHEN {q} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS __nulls_{i}")
+        aggs.append(f"CAST(count(DISTINCT {q}) AS BIGINT) AS __nd_{i}")
+        for stat in ("min", "max", "avg"):
+            v = f"{stat}({q})" if is_num else "NULL"
+            aggs.append(f"CAST({v} AS DOUBLE) AS __{stat}_{i}")
+    one = df.selectExpr(*aggs)
     stack_args = []
     for i, c in enumerate(cols):
-        lit = c.replace("'", "''")
+        lit = c.replace("\\", "\\\\").replace("'", "''")
         stack_args.append(f"'{lit}', __nulls_{i}, __nd_{i}, __min_{i}, __max_{i}, __avg_{i}")
-    stacked = one.select(
-        F.col("__n").alias("n_rows"),
-        F.expr(
-            f"stack({len(cols)}, "
-            + ", ".join(stack_args)
-            + ") AS (col_name, n_nulls, n_distinct, min_v, max_v, avg_v)"
-        ),
+    stacked = one.selectExpr(
+        "__n AS n_rows",
+        f"stack({len(cols)}, "
+        + ", ".join(stack_args)
+        + ") AS (col_name, n_nulls, n_distinct, min_v, max_v, avg_v)",
     )
     return stacked.select(
         "col_name", "n_rows", "n_nulls", "n_distinct", "min_v", "max_v", "avg_v"

@@ -9,17 +9,13 @@ whether int8 is acceptable for a given embedding family.
 Greenfield (no reference counterpart; the reference has no array types at
 all — SURVEY §1.2 "No nested types"). Spark-first: everything is
 ``transform`` / ``aggregate`` higher-order array expressions over the
-native ``array<float>`` column — map-only, no shuffle, no Python UDF.
+native ``array<float>`` column, written as SQL text (``x -> …``, doubles
+with a ``D`` suffix) — map-only, no shuffle, no Python UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def _absmax(vec: Column) -> Column:
-    return F.array_max(F.transform(vec, lambda x: F.abs(x)))
+from pyspark.sql import DataFrame
 
 
 def quantize_int8(
@@ -32,17 +28,12 @@ def quantize_int8(
 
     All-zero vectors get scale 0 and all-zero codes (division guarded).
     """
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    scale = _absmax(vec) / F.lit(127.0)
-    safe = F.when(scale == 0.0, F.lit(1.0)).otherwise(scale)
-    codes = F.transform(vec, lambda x: F.round(x / safe).cast("int"))
-    recon = F.zip_with(codes, vec, lambda c, x: (c.cast("double") * safe - x))
-    mse = F.aggregate(
-        recon, F.lit(0.0), lambda acc, e: acc + e * e
-    ) / F.size(vec)
-    return df.select(
-        F.col(id_col),
-        scale.alias("scale"),
-        codes.alias("codes"),
-        mse.alias("mse"),
+    vec = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    scale = f"array_max(transform({vec}, x -> abs(x))) / 127.0D"
+    safe = f"CASE WHEN {scale} = 0.0D THEN 1.0D ELSE {scale} END"
+    codes = f"transform({vec}, x -> CAST(round(x / {safe}) AS INT))"
+    recon = f"zip_with({codes}, {vec}, (c, x) -> CAST(c AS DOUBLE) * {safe} - x)"
+    mse = f"aggregate({recon}, 0.0D, (acc, e) -> acc + e * e) / size({vec})"
+    return df.selectExpr(
+        f"`{id_col}`", f"{scale} AS scale", f"{codes} AS codes", f"{mse} AS mse"
     )

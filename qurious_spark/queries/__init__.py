@@ -51,8 +51,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from qurious_spark.plans.inspect import plan_bytes
-
 REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -118,33 +116,22 @@ def sql_query(name: str, spark_sql: str, duck_sql: str | None = None) -> None:
 
 
 # --------------------------------------------------------------------------- #
-# Size-gated single-partition final sort (optimization round 13, guide §2.4
-# "an orderBy used only to make output deterministic" + VERDICT r12 task 6).
+# Single-partition final sort.
 #
 # A global ORDER BY without LIMIT plans Exchange(rangepartitioning), which
-# costs TWO extra jobs per execution: the RangePartitioner's sampling pass
-# over the sort input plus the sort-shuffle stage itself — ~0.1-0.2 s of
-# fixed per-query orchestration locally (measured: tpch_q1 0.687→0.484 s,
-# tpch_q5 1.020→0.911 s interleaved A/B, jobs 4→2 / 9→7) that dwarfs the
-# actual sort whenever the sorted frame is a handful of aggregate rows.
-#
-# The rewrite (``/*+ COALESCE(1) */ ... SORT BY`` — identical rows, order,
-# and schema; the sort collapses to one task) is applied ONLY when the
-# Catalyst size estimate of the query's INPUT (``size_of``) is below
-# SORT1_BYTES (1 GiB) — the same estimate-gated pattern as
-# checkpoint.checkpoint_if_large. The gate exists because the coalesce
-# also collapses the narrow stage UNDER the sort (the final-aggregate merge)
-# to one task reading one partial row per (group x map task): harmless when
-# the input is MBs, but at cluster scale (map tasks ~ input/128 MB) that is
-# a single-reducer straggler — exactly the blanket-coalesce(1) anti-pattern
-# VERDICT r11/r12 rejected. Above the gate the plan is the untouched wide
-# ORDER BY. Applied only to queries whose sorted output is provably bounded
-# (group-by over an enumerable domain) so even the below-gate single task
-# is O(bound) rows; never to top-n (LIMIT already plans
+# costs two extra jobs per execution: the RangePartitioner's sampling pass
+# plus the sort-shuffle stage. When the sorted frame is a handful of
+# aggregate rows that fixed cost dwarfs the sort itself, so these queries
+# sort as ``/*+ COALESCE(1) */ ... SORT BY`` instead: identical rows, order
+# and schema, one sort task. Against plain ORDER BY on a 4-vCPU host
+# (``local[3]``, sf0.1, 9 alternating pairs, medians): tpch_q1 0.344 vs
+# 0.413 s, q5 0.823 vs 0.919 s, q7 0.587 vs 0.703 s, q11 0.400 vs 0.490 s,
+# q13 0.284 vs 0.298 s. The coalesce also collapses the stage under the
+# sort to one task, so it is applied only where the sorted output is
+# bounded (a group-by over a small domain or a threshold-filtered few
+# percent of one), never to top-n (LIMIT already plans
 # TakeOrderedAndProject, no sampling job).
 # --------------------------------------------------------------------------- #
-
-SORT1_BYTES = 1 << 30
 
 # name -> (inner_sql, pin_order_by): every registered final-sort query, with
 # the pieces needed to reconstruct the original one-statement form for the
@@ -152,26 +139,21 @@ SORT1_BYTES = 1 << 30
 FINAL_SORT_FORMS: dict[str, tuple[str, str]] = {}
 
 
-def final_sort_small(df: DataFrame, order_by: str, size_of: DataFrame) -> DataFrame:
-    """Apply the query's final ORDER BY; single-partition form below the gate.
+def final_sort_small(df: DataFrame, order_by: str) -> DataFrame:
+    """Apply the query's final ORDER BY as a single-partition sort.
 
     ``order_by`` is the ORDER BY clause as SQL text over ``df``'s columns.
-    ``size_of`` is the frame whose Catalyst size estimate stands in for the
-    query's input scale (typically the fact table). Both branches produce
-    identical rows in identical order with identical schemas (pinned per
+    Rows, order and schema equal the plain ORDER BY form (pinned per
     query)."""
-    if plan_bytes(size_of) < SORT1_BYTES:
-        sql = f"SELECT /*+ COALESCE(1) */ * FROM {{df}} SORT BY {order_by}"
-    else:
-        sql = f"SELECT * FROM {{df}} ORDER BY {order_by}"
-    return df.sparkSession.sql(sql, df=df)
+    return df.sparkSession.sql(
+        f"SELECT /*+ COALESCE(1) */ * FROM {{df}} SORT BY {order_by}", df=df
+    )
 
 
 def sql_query_final_sort(
     name: str,
     inner_sql: str,
     order_by: str,
-    size_of_table: str = "lineitem",
     duck_sql: str | None = None,
     pin_order_by: str | None = None,
 ) -> None:
@@ -184,9 +166,7 @@ def sql_query_final_sort(
 
     def fn(spark: SparkSession, sf_dir: str, _sql=inner_sql, _ob=order_by) -> DataFrame:
         ensure_views(spark, sf_dir)
-        return final_sort_small(
-            spark.sql(_sql), _ob, size_of=spark.table(size_of_table)
-        )
+        return final_sort_small(spark.sql(_sql), _ob)
 
     register(name, fn, duck_sql if duck_sql is not None else full)
     FINAL_SORT_FORMS[name] = (inner_sql, pin_order_by or order_by)
@@ -224,9 +204,8 @@ def load_all() -> None:
 # The driver hash-checks a bounded prefix (~50 entries) of ``queries()``.
 # Since round 4 this prefix ROTATES each round: first it grew the set of
 # entries that have EVER had a green driver row (complete since r8 — every
-# registry entry has a hard-signal green; GAPS.md is the per-round ledger),
-# and since r10 it cycles the STALEST cohort back through so no entry's
-# newest driver green ages out. Everything outside the prefix keeps
+# registry entry has a hard-signal green), and since r10 it cycles the
+# STALEST cohort back through so no entry's newest driver green ages out. Everything outside the prefix keeps
 # registration order and stays covered every round by the local oracle gate
 # (tools/check_correctness.py) + pytest.
 DRIVER_PRIORITY: tuple[str, ...] = (

@@ -383,21 +383,17 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qurious_spark.functions.redact import pii_count, redact_pii
 
     docs = _docs_wide(spark, sf_dir)
-    salted = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com or +1-555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        F.lit(" ssn 123-45-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+    salted = (
+        "concat(text, ' contact user', CAST(doc_id AS STRING),"
+        " '@example.com or +1-555-', lpad(CAST(doc_id % 10000 AS STRING), 4, '0'),"
+        " ' ssn 123-45-', lpad(CAST(doc_id % 10000 AS STRING), 4, '0'))"
     )
-    return docs.select(
+    return docs.selectExpr(
         "doc_id",
-        pii_count(salted, "email").alias("n_emails"),
-        pii_count(salted, "phone").alias("n_phones"),
-        pii_count(salted, "ssn").alias("n_ssns"),
-        F.md5(redact_pii(salted)).alias("redacted_fp"),
+        f"{pii_count(salted, 'email')} AS n_emails",
+        f"{pii_count(salted, 'phone')} AS n_phones",
+        f"{pii_count(salted, 'ssn')} AS n_ssns",
+        f"md5({redact_pii(salted)}) AS redacted_fp",
     )
 
 

@@ -25,7 +25,6 @@ from qurious_spark.queries import (
     sql_query,
     sql_query_final_sort,
 )
-from qurious_spark.plans.inspect import plan_bytes
 
 # --------------------------------------------------------------------------- #
 # Money-sum via bounded integer unit sums (optimization round 12, guide §1.2
@@ -51,17 +50,6 @@ from qurious_spark.plans.inspect import plan_bytes
 # type SUM(DECIMAL(p,s)) would have produced, so every downstream expression
 # (ROUND, division, double cast) is unchanged. ~15 ns/row instead of ~300.
 # --------------------------------------------------------------------------- #
-
-
-# Minimum ESTIMATED input bytes before q2/q17 switch from the plain
-# decorrelated SQL to the semi-join-restricted form (r13, VERDICT r12 task
-# 5; same estimate-gated pattern as checkpoint.checkpoint_if_large). The
-# restriction is a 100 TB win — it drops ~98% of the rows feeding the
-# decorrelated MIN/AVG aggregate and the outer join — but BELOW the gate its
-# extra part scans and broadcast build cost more than they save (interleaved
-# A/B at sf0.1: q2 0.636→0.432 s, q17 0.530→0.406 s plain vs restricted).
-# Both forms are bit-equal (tests/test_moneysum.py pins each path).
-RESTRICT_BYTES = 1 << 30
 
 
 def _unit_expr(x: str, s: int) -> str:
@@ -132,10 +120,10 @@ _Q1_ORACLE = """
     ORDER BY l_returnflag, l_linestatus
     """
 
-# r13 optimization: the final ORDER BY goes through final_sort_small (two
-# fewer jobs per execution below the size gate; see queries/__init__.py).
-# Output is bounded by the (l_returnflag, l_linestatus) domain — single
-# digits of rows at any scale factor.
+# The final ORDER BY goes through final_sort_small (two fewer jobs per
+# execution; see queries/__init__.py). Output is bounded by the
+# (l_returnflag, l_linestatus) domain — single digits of rows at any scale
+# factor.
 sql_query_final_sort(
     "tpch_q1",
     f"""
@@ -174,13 +162,11 @@ sql_query_final_sort(
 # so quotients landing near a half-point in the 5th decimal diverge by 1
 # ulp of the 4th decimal (4/914 rows at sf0.1). Scaling first makes the
 # half-point exactly representable, where both engines round identically.
-# r12 optimization: same decorrelation-restriction as tpch_q17 — Catalyst
-# turns the correlated MIN into a full-lineitem per-partkey aggregate, but
-# only PROMO/size<15 partkeys (a part-KEY-determined predicate) can join, so
-# the Spark side broadcast-semi-joins lineitem to those partkeys before both
-# the MIN aggregate and the outer rows. Per-partkey row sets are unchanged →
-# identical MINs, row-identical output (pin:
-# tests/test_moneysum.py::test_q2_matches_original).
+# One text serves Spark and the oracle. Catalyst decorrelates the MIN into
+# a full-lineitem per-partkey aggregate; restricting lineitem to the
+# PROMO/size<15 partkeys first (a broadcast semi-join) gave the same rows
+# but lost on a 4-vCPU host at sf0.1: 0.438 vs 0.387 s plain (9 alternating
+# pairs, medians). Pin: tests/test_moneysum.py::test_q2_matches_original.
 _Q2_ORACLE = """
     SELECT p.p_partkey, p.p_name, s.s_name,
            ROUND(l.l_extendedprice / l.l_quantity * 10000) / 10000 AS unit_cost
@@ -192,57 +178,7 @@ _Q2_ORACLE = """
           FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey
       )
     """
-
-
-@df_query("tpch_q2", _Q2_ORACLE)
-def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_views(spark, sf_dir)
-    li = spark.table("lineitem")
-    # r13: below the input-size gate the plain correlated-subquery SQL wins
-    # (Catalyst's decorrelated aggregate over a few MB costs less than the
-    # restriction's extra part scans — A/B in the gate-constant header);
-    # above it the r12 semi-join restriction pays for itself ~50x over.
-    if plan_bytes(li) < RESTRICT_BYTES:
-        return spark.sql(_Q2_ORACLE)
-    # the semi-filtered fact frame as ONE SQL text (r12 driver-latency pass;
-    # same plan and broadcast hint, bit-equality held by the existing pin)
-    li_f = spark.sql(
-        """
-        SELECT /*+ BROADCAST(pk) */ l_partkey, l_suppkey, l_extendedprice, l_quantity
-        FROM lineitem
-        LEFT SEMI JOIN (
-            SELECT p_partkey FROM part
-            WHERE p_type = 'PROMO' AND p_size < 15
-        ) pk ON l_partkey = pk.p_partkey
-        """
-    )
-    # li_f feeds BOTH the MIN aggregate and the outer join; materialize the
-    # narrow semi-filtered frame once when the lineitem input is cluster-
-    # sized (local no-op below the gate; pin covers the materialized path)
-    from qurious_spark.checkpoint import checkpoint_if_large
-
-    li_f = checkpoint_if_large(li_f, size_of=li)
-    min_pp = li_f.groupBy("l_partkey").agg(
-        F.expr("MIN(l_extendedprice / l_quantity) AS __min_uc")
-    )
-    p = (
-        spark.table("part")
-        .where(F.expr("p_type = 'PROMO' AND p_size < 15"))
-        .select("p_partkey", "p_name")
-    )
-    s = spark.table("supplier").select("s_suppkey", "s_name")
-    return (
-        li_f.join(min_pp, "l_partkey")
-        .filter(F.expr("l_extendedprice / l_quantity = __min_uc"))
-        .join(p, F.expr("l_partkey = p_partkey"))
-        .join(s, F.expr("l_suppkey = s_suppkey"))
-        .selectExpr(
-            "p_partkey",
-            "p_name",
-            "s_name",
-            "ROUND(l_extendedprice / l_quantity * 10000) / 10000 AS unit_cost",
-        )
-    )
+sql_query("tpch_q2", _Q2_ORACLE)
 
 # Q3 — shipping priority (reference q3.slt). Adapted: o_shippriority column
 # absent, dropped from the select list; top-10 with unique tiebreaker.
@@ -266,7 +202,7 @@ sql_query(
 # Q4 — order priority checking (reference q4.slt). Adapted: the original
 # EXISTS predicate l_commitdate < l_receiptdate is unavailable; "late line"
 # is l_shipdate > o_orderdate + 60 days. Keeps the EXISTS→semi-join shape.
-# r13: final sort via final_sort_small — output bounded by the 5-value
+# Final sort via final_sort_small — output bounded by the 5-value
 # o_orderpriority domain.
 sql_query_final_sort(
     "tpch_q4",
@@ -300,7 +236,7 @@ sql_query_final_sort(
 )
 
 # Q5 — local supplier volume (reference q5.slt). Unmodified shape (6-way join).
-# r13: final sort via final_sort_small — output bounded by the nation domain
+# Final sort via final_sort_small — output bounded by the nation domain
 # (25 rows at any scale factor).
 sql_query_final_sort(
     "tpch_q5",
@@ -337,7 +273,7 @@ sql_query(
 
 # Q7 — volume shipping between two nations (reference q7.slt). Unmodified
 # shape (nation self-join x2 + year extraction).
-# r13: final sort via final_sort_small — output bounded by 2 nation pairs x
+# Final sort via final_sort_small — output bounded by 2 nation pairs x
 # the 7-year order-date domain.
 sql_query_final_sort(
     "tpch_q7",
@@ -364,7 +300,7 @@ sql_query_final_sort(
 # Q8 — national market share (reference q8.slt). Adapted: part filter uses
 # the testdata's single-word p_type vocabulary. Keeps the CASE-inside-
 # aggregate-ratio shape.
-# r13: final sort via final_sort_small — output bounded by the order-date
+# Final sort via final_sort_small — output bounded by the order-date
 # year domain (7 rows).
 sql_query_final_sort(
     "tpch_q8",
@@ -397,7 +333,7 @@ sql_query_final_sort(
 # '%ring%' (not TPC-H's color words): the driver testdata's part names are
 # adjective+noun pairs ("small ring", "hot bolt", ...), so a color token
 # matches zero rows and the query would be vacuously green.
-# r13: final sort via final_sort_small — output bounded by the nation x
+# Final sort via final_sort_small — output bounded by the nation x
 # order-year domain (25 x 7 = 175 rows).
 sql_query_final_sort(
     "tpch_q9",
@@ -467,9 +403,9 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle replaces. Bit-equality vs the df form is pinned
     # (tests/test_moneysum.py::test_q10_matches_original, incl. a non-UTC
     # session-TZ sweep for the to_timestamp -> TIMESTAMP literal swap).
-    # r13: the final sort is the single-partition form at every scale: the
-    # sorted frame is structurally <= 20 rows (the `top` CTE's LIMIT
-    # survives the two inner joins), so it needs no size gate.
+    # The final sort is the single-partition form: the sorted frame is
+    # structurally <= 20 rows (the `top` CTE's LIMIT survives the two inner
+    # joins).
     ensure_views(spark, sf_dir)
     return spark.sql(
         """
@@ -560,16 +496,15 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_partkey", "CAST(ROUND(pv_dec, 2) AS DOUBLE) AS part_value"
         )
     )
-    # r13: size-gated final sort. Below the gate the coalesced task carries
-    # the ~2.5% of partkeys the threshold keeps — a few hundred rows at
-    # bench SFs; above it the plan keeps the wide range sort (the output
-    # grows with the part domain, so it is NOT domain-bounded like q1/q5).
-    return final_sort_small(out, "part_value DESC, l_partkey", size_of=li)
+    # Single-partition final sort: the coalesced task carries the ~2.5% of
+    # partkeys the threshold keeps (49 / 514 / 5140 rows at sf0.01/0.1/1).
+    # That grows with the part domain, unlike q1/q5's fixed domains.
+    return final_sort_small(out, "part_value DESC, l_partkey")
 
 # Q12 — shipping modes and order priority (reference q12.slt). Adapted: no
 # l_shipmode/l_receiptdate; buckets lines by shipping delay instead, keeping
 # the CASE-sum-over-join shape.
-# r13: final sort via final_sort_small — output bounded by the 2-value
+# Final sort via final_sort_small — output bounded by the 2-value
 # ship_bucket domain. (The original ORDER BY 1 is positional; the sort
 # column list names it, the pin keeps the positional spelling.)
 sql_query_final_sort(
@@ -649,13 +584,11 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(oc, F.col("c_custkey") == F.col("o_custkey"), "left")
         .select(F.coalesce(F.col("n_orders"), F.lit(0)).alias("c_count"))
     )
-    # r13: size-gated final sort over the order-count histogram (support =
-    # distinct per-customer order counts — dozens of rows at bench SFs;
-    # above the gate the wide range sort stays).
+    # Single-partition final sort over the order-count histogram (support =
+    # distinct per-customer order counts — dozens of rows at bench SFs).
     return final_sort_small(
         per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist")),
         "custdist DESC, c_count DESC",
-        size_of=spark.table("orders"),
     )
 
 # Q14 — promo revenue share: conditional aggregation ratio over one month.
@@ -678,23 +611,20 @@ sql_query(
 # Q15 — top supplier: CTE in place of the original CREATE VIEW revenue0;
 # scalar-MAX subquery over the same CTE.
 #
-# r12 optimization (guide §1.2 step 1 — don't compute things twice; §5
-# lineage materialization): Spark inlines the CTE, so the SQL form scans the
-# filtered lineitem TWICE and runs the per-suppkey aggregation twice
-# (plans/r12/tpch_q15_before.txt: two lineitem scans, two HashAggregate
-# pairs; exchange reuse can NOT deduplicate them — the executed plan shows 0
-# ReusedExchange because the main-query copy carries the join-inferred
+# Spark inlines the CTE, so the SQL form scans the filtered lineitem TWICE
+# and runs the per-suppkey aggregation twice (plans/r12/tpch_q15_before.txt:
+# two lineitem scans, two HashAggregate pairs; exchange reuse can NOT
+# deduplicate them — the main-query copy carries the join-inferred
 # isnotnull(l_suppkey) pushdown and narrower pruning than the scalar-subquery
-# copy, so the exchanges never canonicalize equal). At cluster scale that is
-# a whole extra pass + aggregation of the fact table. The Spark side
-# aggregates revenue0 ONCE and materializes it through the checkpoint shim
-# (supplier-grained: ~|supplier| rows — MBs where lineitem is TBs); the MAX
-# re-aggregates the materialized rows to one row (same 1-row-broadcast shape
-# as tpch_q11 — never an unpartitioned window) and equality-joins back.
-# Decimal sums are exact and associative, so the reused aggregate is
-# bit-identical to the inlined copy it replaces (pin:
-# tests/test_moneysum.py::test_q15_matches_original; the DuckDB oracle keeps
-# the original CTE text).
+# copy, so the exchanges never canonicalize equal). The DataFrame form below
+# still plans both copies, for the same reason; what it changes is the
+# join shape: the MAX is a one-row aggregate broadcast into a cross join
+# (same shape as tpch_q11 — never an unpartitioned window), and the winners
+# are broadcast to the supplier scan. On a 4-vCPU host at sf0.1 it was no
+# slower than the CTE text in two runs of 9 alternating pairs (medians
+# 0.424 vs 0.516 s, then 0.377 vs 0.387 s). Decimal sums are exact and
+# associative, so both copies are bit-identical to the inlined ones (pin: tests/test_moneysum.py::test_q15_matches_original; the
+# DuckDB oracle keeps the original CTE text).
 _Q15_ORACLE = """
     WITH revenue0 AS (
         SELECT l_suppkey AS supplier_no,
@@ -715,10 +645,7 @@ _Q15_ORACLE = """
 
 @df_query("tpch_q15", _Q15_ORACLE)
 def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qurious_spark.checkpoint import checkpoint_if_large
-
     ensure_views(spark, sf_dir)
-    li = spark.table("lineitem")
     # the filtered aggregate as ONE SQL text (r12 driver-latency pass — one
     # py4j round trip; same plan, bit-equality held by the existing pins)
     rev = spark.sql(
@@ -731,13 +658,6 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY l_suppkey
         """
     )
-    # rev is consumed twice (winners + MAX) and exchange reuse cannot
-    # deduplicate the copies (see header). Materialize the supplier-grained
-    # aggregate ONCE when the lineitem input is big enough that a second
-    # pass costs more than the checkpoint job; below the threshold the
-    # double-scan of a few MB is cheaper (A/B in OPTIMIZATION_r12.md).
-    # Recomputed fresh per invocation — nothing persists across runs.
-    rev = checkpoint_if_large(rev, size_of=li)
     mx = rev.agg(F.max("total_revenue").alias("__mx"))
     winners = (
         rev.crossJoin(F.broadcast(mx))
@@ -750,16 +670,14 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_name",
         "CAST(ROUND(total_revenue, 2) AS DOUBLE) AS total_revenue",
     )
-    # r13: size-gated final sort. Below the gate coalesce(1) also collapses
-    # the supplier-scan probe side of the broadcast join to one task — fine
-    # for a sub-GiB input, a scan-serializer at cluster sizes, hence the
-    # same gate as the checkpoint above.
-    return final_sort_small(out, "s_suppkey", size_of=li)
+    # Single-partition final sort; coalesce(1) also collapses the
+    # supplier-scan probe side of the broadcast join to one task.
+    return final_sort_small(out, "s_suppkey")
 
 # Q16 — part/supplier relationship count: COUNT(DISTINCT) + NOT IN subquery.
 # (partsupp → lineitem as the part-supplier link; comment filter → negative
 # account balance.)
-# r13: final sort via final_sort_small — output bounded by the filtered part
+# Final sort via final_sort_small — output bounded by the filtered part
 # attribute domain (25 brands x 150 types x the 8 listed sizes).
 sql_query_final_sort(
     "tpch_q16",
@@ -782,17 +700,13 @@ sql_query_final_sort(
 
 # Q17 — small-quantity-order revenue: correlated scalar AVG subquery.
 #
-# r12 optimization (guide §3.2 shape — reduce the big side first): Catalyst
-# decorrelates the AVG subquery into a FULL-lineitem aggregate
-# (plans/r12/tpch_q17_before.txt scan (9): every partkey aggregated, no
-# brand filter pushed in) even though only Brand#13 partkeys (~2% of parts)
-# can ever join. p_partkey is part's key, so restricting the aggregate to
-# Brand#13 partkeys keeps every row of every qualifying partkey — each
-# per-partkey AVG is unchanged exactly. The Spark side broadcast-semi-joins
-# lineitem to the filtered part keys BEFORE both the aggregate and the main
-# join; at scale that drops ~98% of aggregated/shuffled rows. Row-identical
-# output (pin: tests/test_moneysum.py::test_q17_matches_original; the
-# oracle keeps the correlated-subquery text).
+# One text serves Spark and the oracle. Catalyst decorrelates the AVG
+# subquery into a FULL-lineitem aggregate (plans/r12/tpch_q17_before.txt
+# scan (9): every partkey aggregated, no brand filter pushed in) even though
+# only Brand#13 partkeys (~2% of parts) can join. Restricting lineitem to
+# those partkeys first (a broadcast semi-join) gave the same rows but did
+# not win on a 4-vCPU host at sf0.1: 0.452 vs 0.451 s plain (9 alternating
+# pairs, medians). Pin: tests/test_moneysum.py::test_q17_matches_original.
 _Q17_ORACLE = """
     SELECT ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 4) AS avg_yearly
     FROM lineitem l, part p
@@ -803,44 +717,7 @@ _Q17_ORACLE = """
           WHERE l2.l_partkey = p.p_partkey
       )
     """
-
-
-@df_query("tpch_q17", _Q17_ORACLE)
-def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_views(spark, sf_dir)
-    li = spark.table("lineitem")
-    # r13: same input-size gate as tpch_q2 (see RESTRICT_BYTES) —
-    # plain correlated SQL below it, the r12 restriction above it.
-    if plan_bytes(li) < RESTRICT_BYTES:
-        return spark.sql(_Q17_ORACLE)
-    # one broadcast semi-join restricts BOTH consumers to Brand#13 partkeys
-    # (ONE SQL text — r12 driver-latency pass; same plan, pin-held)
-    li_b13 = spark.sql(
-        """
-        SELECT /*+ BROADCAST(pk) */ l_partkey, l_quantity, l_extendedprice
-        FROM lineitem
-        LEFT SEMI JOIN (
-            SELECT p_partkey FROM part WHERE p_brand = 'Brand#13'
-        ) pk ON l_partkey = pk.p_partkey
-        """
-    )
-    # li_b13 feeds both the AVG aggregate and the main join; materialize the
-    # semi-filtered frame once at cluster input sizes (local no-op)
-    from qurious_spark.checkpoint import checkpoint_if_large
-
-    li_b13 = checkpoint_if_large(li_b13, size_of=li)
-    avg_pp = li_b13.groupBy("l_partkey").agg(
-        F.avg("l_quantity").alias("__avg_qty")
-    )
-    return (
-        li_b13.join(avg_pp, "l_partkey")
-        .filter(F.expr("l_quantity < 0.2 * __avg_qty"))
-        .agg(
-            F.expr(
-                "ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 4) AS avg_yearly"
-            )
-        )
-    )
+sql_query("tpch_q17", _Q17_ORACLE)
 
 # Q18 — large-volume customers: IN over a HAVING subquery + top-n.
 #
@@ -916,9 +793,8 @@ sql_query(
 
 # Q20 — potential part promotion: nested IN subqueries with HAVING.
 # (partsupp availqty → total shipped quantity per supplier.)
-# r13: final sort via final_sort_small — output bounded by the HAVING-
-# filtered supplier set (like q11/q13 it grows with the domain, so the
-# size gate, not a domain bound, keeps cluster plans wide).
+# Final sort via final_sort_small — output bounded by the HAVING-filtered
+# supplier set (like q11 it grows with the domain).
 sql_query_final_sort(
     "tpch_q20",
     """
@@ -954,7 +830,7 @@ sql_query_final_sort(
 # was late" = exactly one late supplier; every counted l1 row is late, so
 # its supplier IS that one late supplier and numwait = its late-row count).
 # Because each intermediate has exactly one consumer, one lineitem pass is
-# structural — no exchange-reuse or materialization gate needed — and on a
+# structural — no exchange reuse or materialization needed — and on a
 # cluster, where li⋈o plans as a sort-merge join on l_orderkey, BOTH
 # aggregations are satisfied by the join's hashpartitioning(l_orderkey)
 # output and add zero exchanges. Row-for-row identical output
@@ -1035,9 +911,8 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q22 — global sales opportunity: substring-derived code + uncorrelated AVG
 # subquery + NOT EXISTS anti join. (c_phone country code → custkey mod 10;
 # "no orders" → "no urgent orders" so the result is non-empty at test SFs.)
-# r13: final sort via final_sort_small — output bounded by the 10-value
-# cntrycode domain (custkey % 10). The fact inputs here are customer+orders;
-# orders is the larger, so it carries the size gate.
+# Final sort via final_sort_small — output bounded by the 10-value
+# cntrycode domain (custkey % 10).
 sql_query_final_sort(
     "tpch_q22",
     """
@@ -1056,7 +931,6 @@ sql_query_final_sort(
     GROUP BY cntrycode
     """,
     order_by="cntrycode",
-    size_of_table="orders",
     duck_sql="""
     SELECT cntrycode, count(*) AS numcust, CAST(SUM(CAST(acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
     FROM (

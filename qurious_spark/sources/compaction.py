@@ -67,11 +67,10 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 8):
     def bucket(col: str, boundaries: list[float]):
         # index = number of boundaries <= value; O(2^bits) comparisons per
         # row inside codegen — bits=8 → 255 branch-free terms
-        arr = F.array(*[F.lit(float(b)) for b in boundaries])
-        return F.aggregate(
-            arr,
-            F.lit(0),
-            lambda acc, b: acc + F.when(F.col(col).cast("double") >= b, 1).otherwise(0),
+        arr = ", ".join(f"CAST('{float(b)!r}' AS DOUBLE)" for b in boundaries)
+        return F.expr(
+            f"aggregate(array({arr}), 0, "
+            f"(acc, b) -> acc + CASE WHEN CAST(`{col}` AS DOUBLE) >= b THEN 1 ELSE 0 END)"
         )
 
     idx = [bucket(c, cuts[i]) for i, c in enumerate(cols)]

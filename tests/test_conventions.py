@@ -189,7 +189,10 @@ def _python_lambda_hofs(rels: tuple[str, ...]) -> list[str]:
     """``F.<hof>(..., lambda ...)`` calls in the given package modules."""
     import ast
 
-    hofs = {"transform", "aggregate", "zip_with", "filter", "exists", "forall", "array_sort"}
+    hofs = {
+        "transform", "aggregate", "reduce", "zip_with", "filter", "exists", "forall",
+        "array_sort", "map_filter", "map_zip_with", "transform_keys", "transform_values",
+    }
     bad = []
     for rel in rels:
         for node in ast.walk(ast.parse(open(os.path.join(_PKG, rel)).read())):
@@ -237,6 +240,41 @@ def test_text_layer_passes_no_python_lambdas():
     ...``), including array_sort's comparator in lang_id."""
     bad = _python_lambda_hofs(_TEXT_LAYER)
     assert not bad, f"Python lambdas passed to higher-order functions: {bad}"
+
+
+def test_package_passes_no_python_lambdas():
+    """No module of the package passes a Python lambda to a higher-order
+    function: each is written as ``x -> ...`` SQL text, so building it is
+    one py4j round trip instead of several per lambda."""
+    rels = tuple(
+        os.path.relpath(path, _PKG)
+        for path in glob.glob(os.path.join(_PKG, "**", "*.py"), recursive=True)
+    )
+    bad = _python_lambda_hofs(rels)
+    assert not bad, f"Python lambdas passed to higher-order functions: {bad}"
+
+
+def test_redact_functions_import_no_pyspark():
+    """functions/redact.py builds SQL text only, like the text and vector
+    layers."""
+    bad = _pyspark_imports("functions/redact.py")
+    assert not bad, f"functions/redact.py imports from pyspark: {bad}"
+
+
+def test_redact_patterns_reach_spark_verbatim(spark):
+    """A plain Spark string literal unescapes backslashes (``'\\.'`` is
+    ``.``, which matches any character), so every PII pattern must reach
+    the analyzed plan character for character."""
+    from qurious_spark.functions.redact import PII_PATTERNS, pii_count, redact_pii
+
+    def plan(text):
+        df = spark.range(1).selectExpr("'' AS t").selectExpr(f"{text} AS out")
+        return df._jdf.queryExecution().analyzed().toString()
+
+    redacted = plan(redact_pii("t"))
+    missing = [pat for _, pat, _ in PII_PATTERNS if pat not in redacted]
+    missing += [pat for kind, pat, _ in PII_PATTERNS if pat not in plan(pii_count("t", kind))]
+    assert not missing, f"patterns altered on the way into Spark: {missing}"
 
 
 def test_text_primitives_have_one_definition():

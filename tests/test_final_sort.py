@@ -1,11 +1,9 @@
-"""Bit-exact pins for the r13 size-gated final sort (queries/__init__.py
+"""Bit-exact pins for the single-partition final sort (queries/__init__.py
 final_sort_small).
 
 Every converted query must produce the EXACT same rows, in the EXACT same
 order, with the EXACT same schema as the original single-statement ORDER BY
-form — on BOTH sides of the size gate (``/*+ COALESCE(1) */ ... SORT BY``
-below, plain ORDER BY above). The gate constant is read per call, so both
-branches are exercised inside one session.
+form, while its plan sorts as ``/*+ COALESCE(1) */ ... SORT BY``.
 """
 
 from __future__ import annotations
@@ -53,36 +51,17 @@ def test_sql_final_sort_queries_match_original(spark):
         assert_frames_bit_equal(original, q.REGISTRY[name](spark, SF))
 
 
-def test_final_sort_above_gate_is_plain_orderby(spark, monkeypatch):
-    """Forcing the gate low (threshold 0 => nothing is 'small') must fall
-    back to the untouched wide ORDER BY plan — and still match."""
+def test_final_sort_below_gate_plans_no_range_exchange(spark):
+    """Every final-sort query plans Coalesce(1) and NO rangepartitioning
+    exchange (that exchange plus the RangePartitioner sampling job are
+    exactly the two jobs the rewrite removes). tpch_q10 writes the same
+    form in its own text: it sorts at most its LIMIT 20 rows (rows pinned
+    by tests/test_moneysum.py::test_q10_matches_original)."""
     import qurious_spark.queries as q
 
     q.load_all()
     q.ensure_views(spark, SF)
-    name, (inner, order_by) = next(iter(q.FINAL_SORT_FORMS.items()))
-    monkeypatch.setattr(q, "SORT1_BYTES", 0)
-    above = q.REGISTRY[name](spark, SF)
-    plan = above._jdf.queryExecution().optimizedPlan().toString()
-    assert "Coalesce" not in plan, "gate=0 must keep the wide sort"
-    original = spark.sql(f"{inner}\n    ORDER BY {order_by}")
-    assert_frames_bit_equal(original, above)
-    # tpch_q10 sorts at most its LIMIT 20 rows: single-partition, no gate
-    # (rows pinned by tests/test_moneysum.py::test_q10_matches_original)
-    q10 = q.REGISTRY["tpch_q10"](spark, SF)._jdf.queryExecution().executedPlan().toString()
-    assert "Coalesce" in q10 and "rangepartitioning" not in q10
-
-
-def test_final_sort_below_gate_plans_no_range_exchange(spark, monkeypatch):
-    """Below the gate the plan must carry Coalesce(1) and NO
-    rangepartitioning exchange (that exchange plus the RangePartitioner
-    sampling job are exactly the two jobs the rewrite removes)."""
-    import qurious_spark.queries as q
-
-    q.load_all()
-    q.ensure_views(spark, SF)
-    monkeypatch.setattr(q, "SORT1_BYTES", 1 << 40)
-    for name in q.FINAL_SORT_FORMS:
+    for name in [*q.FINAL_SORT_FORMS, "tpch_q10", "tpch_q11", "tpch_q13", "tpch_q15"]:
         df = q.REGISTRY[name](spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "rangepartitioning" not in plan, f"{name}: range sort survived"
@@ -90,17 +69,23 @@ def test_final_sort_below_gate_plans_no_range_exchange(spark, monkeypatch):
 
 
 def test_df_final_sort_queries_match_orderby(spark, monkeypatch):
-    """The df-form call sites (tpch_q11/q13/q15) must match their own
-    ORDER BY variant on both gate branches."""
+    """The df-form call sites (tpch_q11/q13/q15) must match the same query
+    built with a plain ORDER BY in place of final_sort_small."""
     import qurious_spark.queries as q
+    import qurious_spark.queries.tpch as tpch
+
+    def order_by_form(df, order_by):
+        return df.sparkSession.sql(f"SELECT * FROM {{df}} ORDER BY {order_by}", df=df)
 
     q.load_all()
     q.ensure_views(spark, SF)
     for name in ("tpch_q11", "tpch_q13", "tpch_q15"):
-        monkeypatch.setattr(q, "SORT1_BYTES", 0)
-        wide = q.REGISTRY[name](spark, SF)
-        monkeypatch.setattr(q, "SORT1_BYTES", 1 << 40)
         small = q.REGISTRY[name](spark, SF)
+        with monkeypatch.context() as m:
+            m.setattr(tpch, "final_sort_small", order_by_form)
+            wide = q.REGISTRY[name](spark, SF)
+        plan = wide._jdf.queryExecution().optimizedPlan().toString()
+        assert "Coalesce" not in plan, f"{name}: the ORDER BY form is not wide"
         assert_frames_bit_equal(wide, small)
 
 

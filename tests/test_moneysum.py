@@ -128,14 +128,9 @@ def test_q21_matches_original(spark):
     assert_frames_bit_equal(old_df, new_df)
 
 
-def test_q17_matches_original(spark, monkeypatch):
-    """The brand-restricted q17 aggregate must reproduce the correlated-
-    subquery SQL bit-for-bit (the per-partkey AVG set is unchanged because
-    p_partkey is part's key). The restriction is size-gated since r13
-    (plain SQL below tpch.RESTRICT_BYTES); forcing the gate to 0 keeps
-    this pin on the non-trivial restricted path — the one a cluster input
-    takes."""
-    monkeypatch.setattr("qurious_spark.queries.tpch.RESTRICT_BYTES", 0)
+def test_q17_matches_original(spark):
+    """The registered q17 must reproduce the correlated-subquery SQL
+    bit-for-bit."""
     import qurious_spark.queries as q
 
     q.load_all()
@@ -214,46 +209,9 @@ def test_q15_matches_original(spark):
     assert_frames_bit_equal(old_df, new_df)
 
 
-def test_q15_matches_original_materialized(spark, monkeypatch):
-    """Same pin with checkpoint.MATERIALIZE_BYTES=0: the checkpoint_if_large
-    path (taken at cluster-scale input sizes) must produce the identical
-    frame — materialization must never change values or schema."""
-    import qurious_spark.queries as q
-
-    monkeypatch.setattr("qurious_spark.checkpoint.MATERIALIZE_BYTES", 0)
-    q.load_all()
-    q.ensure_views(spark, SF)
-    new_df = q.REGISTRY["tpch_q15"](spark, SF)
-    # the checkpointed frame must really be lineage-truncated (the whole
-    # point at scale: the fact table is not re-scanned for the MAX branch)
-    assert "LogicalRDD" in new_df._jdf.queryExecution().optimizedPlan().toString()
-    old_df = spark.sql(
-        """
-        WITH revenue0 AS (
-            SELECT l_suppkey AS supplier_no,
-                   SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,4))) AS total_revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-              AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-            GROUP BY l_suppkey
-        )
-        SELECT s.s_suppkey, s.s_name,
-               CAST(ROUND(r.total_revenue, 2) AS DOUBLE) AS total_revenue
-        FROM supplier s, revenue0 r
-        WHERE s.s_suppkey = r.supplier_no
-          AND r.total_revenue = (SELECT MAX(total_revenue) FROM revenue0)
-        ORDER BY s.s_suppkey
-        """
-    )
-    assert_frames_bit_equal(old_df, new_df)
-
-
-def test_q2_matches_original(spark, monkeypatch):
-    """The partkey-restricted q2 MIN aggregate must reproduce the
-    correlated-subquery SQL row-for-row (order-insensitive — the query has
-    no ORDER BY). Gate forced to 0 so the pin exercises the restricted
-    path (see test_q17_matches_original)."""
-    monkeypatch.setattr("qurious_spark.queries.tpch.RESTRICT_BYTES", 0)
+def test_q2_matches_original(spark):
+    """The registered q2 must reproduce the correlated-subquery SQL
+    row-for-row (order-insensitive — the query has no ORDER BY)."""
     import qurious_spark.queries as q
 
     q.load_all()
@@ -347,44 +305,6 @@ def test_q10_matches_original(spark):
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
     )
     assert_frames_bit_equal(old_df, new_df)
-
-
-def test_materialized_paths_match(spark, monkeypatch):
-    """checkpoint.MATERIALIZE_BYTES=0 forces every checkpoint_if_large site
-    (q2 li_f, q17 li_b13 — the path taken at cluster input sizes); each
-    query must still reproduce its original SQL bit-for-bit. q21 no longer
-    has a materialization site (its single-consumer rewrite makes one
-    lineitem pass structural) but stays in the sweep to prove the gate
-    cannot perturb it."""
-    monkeypatch.setattr("qurious_spark.checkpoint.MATERIALIZE_BYTES", 0)
-    test_q2_matches_original(spark, monkeypatch)
-    test_q17_matches_original(spark, monkeypatch)
-    test_q21_matches_original(spark)
-
-
-def test_q2_q17_restriction_gate_switches_plans(spark, monkeypatch):
-    """r13 size gate wiring: below tpch.RESTRICT_BYTES the builders
-    return the plain decorrelated SQL (ONE part scan); forcing the gate to 0
-    plans the semi-join restriction (a SECOND part scan feeding the
-    broadcast keys). Both paths' results are pinned bit-equal by
-    test_q2/q17_matches_original."""
-    import qurious_spark.queries as q
-
-    q.load_all()
-    q.ensure_views(spark, SF)
-
-    def part_scans(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.count("part.parquet")
-
-    monkeypatch.setattr("qurious_spark.queries.tpch.RESTRICT_BYTES", 1 << 40)
-    assert part_scans(q.REGISTRY["tpch_q2"](spark, SF)) == 1
-    assert part_scans(q.REGISTRY["tpch_q17"](spark, SF)) == 1
-    monkeypatch.setattr("qurious_spark.queries.tpch.RESTRICT_BYTES", 0)
-    # the restriction adds at least one extra part scan (the broadcast key
-    # side); q2 plans a third (its semi filter feeds two consumers)
-    assert part_scans(q.REGISTRY["tpch_q2"](spark, SF)) >= 2
-    assert part_scans(q.REGISTRY["tpch_q17"](spark, SF)) >= 2
 
 
 @pytest.mark.parametrize(

@@ -24,7 +24,8 @@ def test_profile_stats_and_single_scan(spark):
 
 
 def test_profile_handles_hostile_column_names(spark):
-    df = spark.createDataFrame([(1, 2.0)], ["a'b", "c d"])
+    df = spark.createDataFrame([(1, 2.0, 3, "x")], ["a'b", "c d", "e.f", "g`\\h"])
     rows = {r.col_name: r for r in profile(df).collect()}
-    assert set(rows) == {"a'b", "c d"}
+    assert set(rows) == {"a'b", "c d", "e.f", "g`\\h"}
     assert rows["a'b"].n_nulls == 0 and rows["c d"].avg_v == 2.0
+    assert rows["e.f"].max_v == 3.0 and rows["g`\\h"].n_distinct == 1
