@@ -19,6 +19,11 @@ mutations build union/filter plans lazily and checkpoint (the shim in
 qurious_spark/checkpoint.py: local by default, reliable when
 SPARK_GRAFT_CHECKPOINT_DIR is set) after a
 mutation-depth threshold so plan size stays bounded (SURVEY.md §7.4.5).
+
+A DML statement starts a Spark job only for a check that must fail at the
+statement: NOT NULL on a constrained table, MERGE's cardinality check, and
+COPY TO's write. The one-row ``count`` it returns is a lazy plan over its
+source, run only when the caller collects it.
 """
 
 from __future__ import annotations
@@ -410,11 +415,11 @@ class ManagedTable:
         for v in [v for v in self.snapshots if v <= self.version - SNAPSHOT_KEEP]:
             del self.snapshots[v]
 
-    def insert_df(self, source: DataFrame, columns: list[str] | None = None) -> int:
+    def insert_df(self, source: DataFrame, columns: list[str] | None = None) -> None:
         """INSERT INTO .. [(cols)] SELECT/VALUES: align columns, fill
-        defaults, cast to target types, then union."""
+        defaults, cast to target types, then union. Starts no job unless
+        the table declares NOT NULL."""
         target_schema = self.df.schema
-        n = source.count()
         names = columns or [f.name for f in target_schema]
         if len(names) != len(source.columns):
             into = "column list" if columns else f"table {self.name}"
@@ -427,7 +432,6 @@ class ManagedTable:
         self._check_notnull(aligned, "INSERT")
         self.df = self.df.unionByName(aligned)
         self._bump()
-        return n
 
     def delete_where(self, predicate: str | None) -> None:
         if predicate is None:
@@ -707,7 +711,7 @@ class Session:
             # with an existing t
             if self._normalize_name(stmt.table) in self.tables:
                 if stmt.if_not_exists:
-                    return self._count_df(0)
+                    return self._count_df(None)
                 raise ValueError(f"table already exists: {stmt.table}")
             if stmt.query:  # CTAS
                 df = self.sql(stmt.query)
@@ -725,10 +729,10 @@ class Session:
             self._put_table(
                 stmt.table, ManagedTable(stmt.table, df, defaults, notnull)
             )
-            return self._count_df(0)
+            return self._count_df(None)
         if kind == "drop_table":
             self._drop_table(stmt.table, stmt.if_exists)
-            return self._count_df(0)
+            return self._count_df(None)
         if kind == "insert":
             mt = self._get_managed(stmt.table)
             if stmt.query.strip().upper().startswith("VALUES"):
@@ -736,20 +740,20 @@ class Session:
             else:
                 source = self.sql(stmt.query)
             cols = stmt.columns_list and _resolve_columns(stmt.columns_list, mt.df.columns, stmt.table)
-            n = mt.insert_df(source, cols)
+            mt.insert_df(source, cols)
             self._put_table(mt.name, mt)
-            return self._count_df(n)
+            return self._count_df(source)
         if kind == "delete":
             mt = self._get_managed(stmt.table)
             mt.delete_where(stmt.predicate)
             self._put_table(mt.name, mt)
-            return self._count_df(0)
+            return self._count_df(None)
         if kind == "update":
             mt = self._get_managed(stmt.table)
             cols = _resolve_columns(stmt.assignments, mt.df.columns, stmt.table)
             mt.update_set(dict(zip(cols, stmt.assignments.values())), stmt.predicate)
             self._put_table(mt.name, mt)
-            return self._count_df(0)
+            return self._count_df(None)
         if kind == "merge":
             return self._execute_merge(stmt)
         if kind == "copy_to":
@@ -771,7 +775,7 @@ class Session:
                 if stmt.options.get("delimiter"):
                     writer = writer.option("sep", stmt.options["delimiter"])
             writer.format(fmt).save(stmt.path)  # the parser admits csv/json/orc/parquet
-            return self._count_df(df.count())
+            return self._count_df(df)
         if kind == "copy_from":
             from qurious_spark.sources.readers import read_csv_like
 
@@ -784,9 +788,9 @@ class Session:
                 schema=mt.df.schema,
                 multiline=bool(stmt.options.get("multiline", False)),
             )
-            n = mt.insert_df(src)
+            mt.insert_df(src)
             self._put_table(mt.name, mt)
-            return self._count_df(n)
+            return self._count_df(src)
         raise ValueError(f"unsupported statement kind: {kind}")
 
     def merge_into(self, merge_sql: str, source_df: DataFrame | None = None) -> DataFrame:
@@ -809,7 +813,9 @@ class Session:
         handles every MATCHED arm (first-match-wins via one CASE per
         column), ONE left anti join produces the NOT MATCHED inserts; both
         are key-equi joins Catalyst can run as broadcast or shuffle hash.
-        No collect; the new table state stays a lazy plan.
+        No collect; the new table state and the returned source row count
+        stay lazy plans. The cardinality check is the statement's one job
+        (NOT NULL checks add one each, on a constrained table only).
 
         The arms are SQL text in ``selectExpr``/``where``: a CASE picks the
         winning arm ``__w``, and one CASE per column applies it. The joins
@@ -857,7 +863,8 @@ class Session:
             return df.selectExpr(*items)
 
         # SQL-standard cardinality check: a target row may match at most one
-        # source row (nondeterministic update otherwise). One count job.
+        # source row (nondeterministic update otherwise). It must raise at
+        # the statement, so it is the one eager job.
         tagged = mt.df.selectExpr("*", "monotonically_increasing_id() AS __tid").alias(talias)
         dup = join(tagged, source, "inner").groupBy("__tid").count().where("count > 1")
         if dup.limit(1).count():
@@ -901,7 +908,7 @@ class Session:
         mt.df = updated.unionByName(inserted) if inserted is not None else updated
         mt._bump()
         self._put_table(mt.name, mt)
-        return self._count_df(src.count())
+        return self._count_df(src)
 
     def _get_managed(self, name: str) -> ManagedTable:
         key = self._normalize_name(name)
@@ -909,7 +916,13 @@ class Session:
             raise ValueError(f"not a managed table: {name}")
         return self.tables[key]
 
-    def _count_df(self, n: int) -> DataFrame:
-        """DML result shape: single `count` column (reference:
-        qurious/src/utils/batch.rs:13 make_count_batch)."""
-        return self.spark.createDataFrame([(n,)], "count bigint")
+    def _count_df(self, source: DataFrame | None) -> DataFrame:
+        """DML result shape: one row, one bigint ``count`` column
+        (reference: qurious/src/utils/batch.rs:13 make_count_batch) — the
+        row count of ``source``, else 0. A lazy plan: ``source``'s analyzed
+        plan is bound already, so the write that re-registers its table's
+        view does not change what this counts. The SQL constant needs no
+        Python worker, unlike ``createDataFrame``'s local rows."""
+        if source is None:
+            return self.spark.sql("SELECT CAST(0 AS BIGINT) AS count")
+        return source.selectExpr("count(1) AS count")

@@ -97,7 +97,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     everything stays lazy and JVM-side: a top-level column directly, a list
     of them element-wise. A nanos timestamp nested anywhere else (a struct,
     a map, a list of lists) would come back as silent epoch-nanos bigints,
-    so it raises ``TypeError`` naming the column. The conf is set HERE, at
+    so it raises ``TypeError`` naming the column. A TIME column (Spark
+    reads none) raises ``ValueError`` naming it. The conf is set HERE, at
     runtime (verified runtime-settable), so the tolerance holds on any
     SparkSession, not just ones built by our own get_spark helper.
     """
@@ -113,6 +114,12 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     # timestamp: only the physical INT64 NANOS columns are nanos
     nano_cols: dict[str, str] = {}
     for field, leaves in fields:
+        if any(c.logical_type.type == "TIME" for c in leaves):
+            # inference would fail later with PARQUET_TYPE_ILLEGAL
+            raise ValueError(
+                f"parquet column {field.name!r} ({field.type}) holds a TIME value, "
+                "which Spark cannot read"
+            )
         if not any(_timestamp_unit(c) == "nanoseconds" for c in leaves):
             continue
         if pa.types.is_timestamp(field.type):

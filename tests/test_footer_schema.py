@@ -10,6 +10,7 @@ every query over the file could change.
 
 import datetime
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -73,6 +74,21 @@ def test_uncovered_type_falls_back_to_inference(spark, tmp_path):
     assert read_parquet(spark, path).schema == spark.read.parquet(path).schema
     # a directory has no footer of its own: Spark lists it and infers
     assert read_parquet(spark, str(tmp_path)).count() == 2
+
+
+@pytest.mark.parametrize(
+    "name, arrow_type, shown",
+    [("at", pa.time64("us"), "time64[us]"), ("ats", pa.list_(pa.time32("ms")), "list<element: time32[ms]>")],
+    ids=["time64", "list_time32"],
+)
+def test_time_column_raises_naming_it(spark, tmp_path, name, arrow_type, shown):
+    """Spark reads no parquet TIME; inference would die at the scan with
+    PARQUET_TYPE_ILLEGAL, not naming the column."""
+    path = str(tmp_path / "time.parquet")
+    value = [1000] if pa.types.is_list(arrow_type) else 1000
+    pq.write_table(pa.table({"id": [1], name: pa.array([value], arrow_type)}), path)
+    with pytest.raises(ValueError, match=re.escape(f"'{name}' ({shown})")):
+        read_parquet(spark, path)
 
 
 def test_load_tables_starts_no_job(spark):

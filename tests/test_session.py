@@ -12,6 +12,8 @@ from decimal import Decimal
 
 import pytest
 
+from tests.conftest import job_ids
+
 
 @pytest.fixture()
 def fresh(session):
@@ -797,3 +799,121 @@ def test_partitions_stay_bounded_over_inserts(fresh, spark):
     table = fresh.sql("SELECT x, y FROM t_parts")
     assert table.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
     assert sorted(map(tuple, table.collect())) == sorted(expected)
+
+
+# -- the count a DML statement returns --------------------------------- #
+# Only a check that must fail at the statement starts a Spark job; the
+# one-row ``count`` result is a lazy plan over the statement's source.
+
+
+def test_insert_self_select_count_is_pre_insert_rows(fresh):
+    """The count's plan is bound when the statement runs: re-registering
+    the table's view, later writes and the every-16 checkpoint do not
+    change it."""
+    from qurious_spark.session import CHECKPOINT_EVERY
+
+    fresh.sql("CREATE TABLE t_self (a BIGINT)")
+    fresh.sql("INSERT INTO t_self VALUES (1), (2), (3)")
+    res = fresh.sql("INSERT INTO t_self SELECT a + 10 FROM t_self")
+    for i in range(CHECKPOINT_EVERY):
+        fresh.sql(f"INSERT INTO t_self VALUES ({100 + i})")
+    # a checkpoint fell between the statement and the collect
+    assert 2 < CHECKPOINT_EVERY <= fresh.tables["t_self"].version
+    assert res.collect()[0]["count"] == 3
+    assert fresh.sql("SELECT count(*) AS c FROM t_self").collect()[0].c == 6 + CHECKPOINT_EVERY
+
+
+def test_merge_count_is_source_rows_after_later_writes(fresh):
+    fresh.sql("CREATE TABLE mc_tgt (k BIGINT, v BIGINT)")
+    fresh.sql("INSERT INTO mc_tgt VALUES (1, 10), (2, 20)")
+    res = fresh.sql(
+        "MERGE INTO mc_tgt t USING (SELECT * FROM VALUES (1, 11), (3, 30), (4, 40) AS s(k, v)) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)"
+    )
+    fresh.sql("DELETE FROM mc_tgt")
+    fresh.sql("INSERT INTO mc_tgt VALUES (5, 50)")
+    assert res.collect()[0]["count"] == 3
+
+
+def test_dml_statements_start_no_job(fresh, spark, tmp_path):
+    src = tmp_path / "rows.tbl"
+    src.write_text("1|a\n2|b\n")
+    fresh.sql("CREATE TABLE t_jobs (k INT, s VARCHAR)")
+    fresh.sql("CREATE TABLE t_jobs_src (k INT, s VARCHAR)")
+    for stmt in (
+        "INSERT INTO t_jobs VALUES (1, 'x'), (2, 'y')",
+        "INSERT INTO t_jobs SELECT k + 10, s FROM t_jobs",
+        "UPDATE t_jobs SET s = 'z' WHERE k > 10",
+        "DELETE FROM t_jobs WHERE k = 1",
+        f"COPY t_jobs_src FROM '{src}' (DELIMITER '|')",
+    ):
+        with job_ids(spark, "dml-jobs:" + stmt.split()[0]) as ids:
+            fresh.sql(stmt)
+        assert ids == [], stmt
+
+
+def test_merge_starts_only_its_cardinality_check(fresh, spark, monkeypatch):
+    DataFrame = type(spark.range(1))  # the classic subclass defines count
+
+    fresh.sql("CREATE TABLE mj_tgt (k BIGINT, v BIGINT)")
+    fresh.sql("INSERT INTO mj_tgt VALUES (1, 10), (2, 20)")
+    counted = []
+    count = DataFrame.count
+    monkeypatch.setattr(DataFrame, "count", lambda df: counted.append(df) or count(df))
+    with job_ids(spark, "dml-jobs:merge") as merge_ids:
+        fresh.sql(
+            "MERGE INTO mj_tgt t USING (SELECT * FROM VALUES (1, 11), (3, 30) AS s(k, v)) s "
+            "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v "
+            "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)"
+        )
+    monkeypatch.undo()
+    assert len(counted) == 1  # the check is the statement's one action
+    with job_ids(spark, "dml-jobs:merge-check") as check_ids:
+        counted[0].count()
+    assert 0 < len(merge_ids) == len(check_ids)
+
+
+@pytest.mark.parametrize("case", ["insert_not_null", "merge_two_matches", "copy_missing_path"])
+def test_violations_raise_at_the_statement(fresh, tmp_path, case):
+    """Nothing is collected: the statement itself raises."""
+    fresh.sql("CREATE TABLE rv_t (k BIGINT NOT NULL, v VARCHAR)")
+    fresh.sql("INSERT INTO rv_t VALUES (1, 'a')")
+    stmt, error = {
+        "insert_not_null": ("INSERT INTO rv_t VALUES (NULL, 'b')", "NOT NULL"),
+        "merge_two_matches": (
+            "MERGE INTO rv_t t USING (SELECT * FROM VALUES (1), (1) AS s(k)) s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = 'm'",
+            "more than one source row",
+        ),
+        "copy_missing_path": (f"COPY rv_t FROM '{tmp_path / 'missing.csv'}'", "PATH_NOT_FOUND|does not exist"),
+    }[case]
+    with pytest.raises(Exception, match=error):
+        fresh.sql(stmt)
+    assert [tuple(r) for r in fresh.sql("SELECT k, v FROM rv_t").collect()] == [(1, "a")]
+
+
+def test_every_dml_kind_returns_one_bigint_count(fresh, tmp_path):
+    src = tmp_path / "rows.csv"
+    src.write_text("7,g\n")
+    statements = [
+        ("CREATE TABLE k_t (k BIGINT, v VARCHAR)", 0),
+        ("CREATE TABLE IF NOT EXISTS k_t (k BIGINT)", 0),
+        ("CREATE TABLE k_ctas AS SELECT 1 AS k", 0),
+        ("INSERT INTO k_t VALUES (1, 'a'), (2, 'b')", 2),
+        ("INSERT INTO k_t (k) SELECT k + 2 FROM k_t", 2),
+        ("UPDATE k_t SET v = 'u' WHERE k = 1", 0),
+        ("DELETE FROM k_t WHERE k = 2", 0),
+        (
+            "MERGE INTO k_t t USING (SELECT 1 AS k) s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = 'm'",
+            1,
+        ),
+        (f"COPY k_t FROM '{src}'", 1),
+        (f"COPY k_t TO '{tmp_path / 'out'}' (FORMAT PARQUET)", 4),
+        ("DROP TABLE k_ctas", 0),
+    ]
+    for stmt, n in statements:
+        res = fresh.sql(stmt)
+        assert res.dtypes == [("count", "bigint")], stmt
+        assert [tuple(r) for r in res.collect()] == [(n,)], stmt
