@@ -23,13 +23,16 @@ mutation-depth threshold so plan size stays bounded (SURVEY.md §7.4.5).
 A DML statement starts a Spark job only for a check that must fail at the
 statement: NOT NULL on a constrained table, MERGE's cardinality check, and
 COPY TO's write. The one-row ``count`` it returns is a lazy plan over its
-source, run only when the caller collects it.
+source, run only when the caller collects it, unless counting the source
+may raise (``_may_raise``): then it runs before the write, so a source that
+fails at run time fails its statement and leaves the table unchanged.
 """
 
 from __future__ import annotations
 
 import dataclasses
 import itertools
+import json
 import math
 import os
 import re
@@ -136,6 +139,72 @@ def _case(arms: list[tuple[str, str]], otherwise: str | None = None) -> str | No
         return otherwise
     whens = " ".join(f"WHEN {_group(c)} THEN {v}" for c, v in arms)
     return f"CASE {whens} ELSE {otherwise} END" if otherwise else f"CASE {whens} END"
+
+
+# Catalyst tree nodes, by class under ``org.apache.spark.sql.``, that never
+# raise at run time. An ANSI cast or arithmetic can, and so can a UDF, a
+# scalar subquery or a plan node that runs user code.
+_NEVER_RAISE = frozenset({
+    *(
+        "catalyst.expressions." + n
+        for n in (
+            "aggregate.AggregateExpression", "aggregate.Count", "Alias", "And", "AttributeReference",
+            "CaseWhen", "Coalesce", "EqualNullSafe", "EqualTo", "GreaterThan", "GreaterThanOrEqual",
+            "If", "In", "InSet", "IsNotNull", "IsNull", "LessThan", "LessThanOrEqual", "Literal",
+            "Not", "Or",
+        )
+    ),
+    *(
+        "catalyst.plans.logical." + n
+        for n in (
+            "Aggregate", "Filter", "GlobalLimit", "Join", "LocalLimit", "LocalRelation",
+            "OneRowRelation", "Project", "Range", "Repartition", "RepartitionByExpression", "Union",
+        )
+    ),
+    "execution.LogicalRDD",
+    "execution.datasources.LogicalRelation",
+})
+# these raise only on a zero divisor, their right child
+_BY_DIVISOR = frozenset({"catalyst.expressions.Remainder", "catalyst.expressions.Pmod"})
+
+
+def _may_raise(df: DataFrame) -> bool:
+    """Whether running ``df`` can raise, by its optimized plan: True when
+    a node in it is outside ``_NEVER_RAISE``, or divides by other than a
+    nonzero literal. One py4j call (``toJSON``)."""
+    return _holds_raising(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+
+
+def _holds_raising(node) -> bool:
+    """``_may_raise`` over Catalyst's JSON form, where a tree is a pre-order
+    list of nodes and each node's ``num-children`` subtrees follow it."""
+    if isinstance(node, dict):
+        return any(_holds_raising(v) for v in node.values())
+    if not isinstance(node, list):
+        return False
+    if not all(isinstance(n, dict) and "class" in n for n in node):
+        return any(_holds_raising(v) for v in node)
+    end = [0] * len(node)  # end[i]: the index just past node i's subtree
+
+    def walk(i: int) -> int:
+        j = i + 1
+        for _ in range(node[i]["num-children"]):
+            j = walk(j)
+        end[i] = j
+        return j
+
+    i = 0
+    while i < len(node):
+        i = walk(i)
+    for i, n in enumerate(node):
+        name = n["class"].removeprefix("org.apache.spark.sql.")
+        if name in _NEVER_RAISE:
+            continue
+        divisor = node[end[i + 1]] if name in _BY_DIVISOR else {}
+        literal = divisor.get("class", "").endswith(".expressions.Literal")
+        if not literal or float(divisor["value"] or 0) == 0:
+            return True
+    return any(_holds_raising(v) for n in node for k, v in n.items() if k != "class")
 
 
 def _env_bool(name: str, default: str) -> str:
@@ -401,24 +470,28 @@ class ManagedTable:
                 f"{op}: NOT NULL constraint violated on {self.name} ({', '.join(cols)})"
             )
 
-    def _bump(self) -> None:
-        self.version += 1
+    def _bump(self, df: DataFrame) -> None:
+        """Make ``df`` the table's next version. Nothing changes until the
+        every-16 checkpoint has run, so a checkpoint that raises leaves the
+        table as it was."""
         # every union appends its source's partitions, and a checkpoint
         # keeps them all: hold the table to one partition per core
-        self.df = self.df.coalesce(self.df.sparkSession.sparkContext.defaultParallelism)
-        if self.version % CHECKPOINT_EVERY == 0:
+        df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+        if (self.version + 1) % CHECKPOINT_EVERY == 0:
             # Truncate the union/filter plan chain; eager=True materializes
             # the table now so later reads plan against a flat scan instead
             # of the accumulated union/filter lineage.
-            self.df = _checkpoint(self.df, eager=True)
-        self.snapshots[self.version] = self.df
+            df = _checkpoint(df, eager=True)
+        self.version += 1
+        self.df = self.snapshots[self.version] = df
         for v in [v for v in self.snapshots if v <= self.version - SNAPSHOT_KEEP]:
             del self.snapshots[v]
 
     def insert_df(self, source: DataFrame, columns: list[str] | None = None) -> None:
         """INSERT INTO .. [(cols)] SELECT/VALUES: align columns, fill
         defaults, cast to target types, then union. Starts no job unless
-        the table declares NOT NULL."""
+        the table declares NOT NULL; ``Session.sql`` runs a source whose
+        count may raise before it calls this (``Session._count_df``)."""
         target_schema = self.df.schema
         names = columns or [f.name for f in target_schema]
         if len(names) != len(source.columns):
@@ -430,15 +503,13 @@ class ManagedTable:
             *_aligned(target_schema, lambda c: _ident(c) if c in names else _literal(self.defaults.get(c)))
         )
         self._check_notnull(aligned, "INSERT")
-        self.df = self.df.unionByName(aligned)
-        self._bump()
+        self._bump(self.df.unionByName(aligned))
 
     def delete_where(self, predicate: str | None) -> None:
         if predicate is None:
-            self.df = self.df.limit(0)
+            self._bump(self.df.limit(0))
         else:
-            self.df = self.df.where(f"NOT coalesce({_group(predicate)}, false)")
-        self._bump()
+            self._bump(self.df.where(f"NOT coalesce({_group(predicate)}, false)"))
 
     def replace_df(self, source: DataFrame) -> None:
         """Replace the table's contents wholesale (a versioned mutation like
@@ -451,8 +522,7 @@ class ManagedTable:
             raise ValueError(f"replace_df source lacks columns: {missing}")
         aligned = source.selectExpr(*_aligned(target_schema, _ident))
         self._check_notnull(aligned, "REPLACE")
-        self.df = aligned
-        self._bump()
+        self._bump(aligned)
 
     def update_set(self, assignments: dict[str, str], predicate: str | None) -> None:
         updated = self.df.selectExpr(*[
@@ -463,8 +533,7 @@ class ManagedTable:
         ])
         if self.notnull & set(assignments):
             self._check_notnull(updated, "UPDATE")
-        self.df = updated
-        self._bump()
+        self._bump(updated)
 
 
 class Session:
@@ -740,9 +809,10 @@ class Session:
             else:
                 source = self.sql(stmt.query)
             cols = stmt.columns_list and _resolve_columns(stmt.columns_list, mt.df.columns, stmt.table)
+            count = self._count_df(source)
             mt.insert_df(source, cols)
             self._put_table(mt.name, mt)
-            return self._count_df(source)
+            return count
         if kind == "delete":
             mt = self._get_managed(stmt.table)
             mt.delete_where(stmt.predicate)
@@ -788,9 +858,10 @@ class Session:
                 schema=mt.df.schema,
                 multiline=bool(stmt.options.get("multiline", False)),
             )
+            count = self._count_df(src)
             mt.insert_df(src)
             self._put_table(mt.name, mt)
-            return self._count_df(src)
+            return count
         raise ValueError(f"unsupported statement kind: {kind}")
 
     def merge_into(self, merge_sql: str, source_df: DataFrame | None = None) -> DataFrame:
@@ -815,7 +886,8 @@ class Session:
         are key-equi joins Catalyst can run as broadcast or shuffle hash.
         No collect; the new table state and the returned source row count
         stay lazy plans. The cardinality check is the statement's one job
-        (NOT NULL checks add one each, on a constrained table only).
+        (NOT NULL checks add one each, on a constrained table only, and
+        the source count one when counting it may raise).
 
         The arms are SQL text in ``selectExpr``/``where``: a CASE picks the
         winning arm ``__w``, and one CASE per column applies it. The joins
@@ -905,10 +977,10 @@ class Session:
             inserted = apply_arms(anti, [{**defaults, **a} for a in arms], None)
             mt._check_notnull(inserted, "MERGE")
 
-        mt.df = updated.unionByName(inserted) if inserted is not None else updated
-        mt._bump()
+        count = self._count_df(src)
+        mt._bump(updated.unionByName(inserted) if inserted is not None else updated)
         self._put_table(mt.name, mt)
-        return self._count_df(src)
+        return count
 
     def _get_managed(self, name: str) -> ManagedTable:
         key = self._normalize_name(name)
@@ -919,10 +991,17 @@ class Session:
     def _count_df(self, source: DataFrame | None) -> DataFrame:
         """DML result shape: one row, one bigint ``count`` column
         (reference: qurious/src/utils/batch.rs:13 make_count_batch) — the
-        row count of ``source``, else 0. A lazy plan: ``source``'s analyzed
-        plan is bound already, so the write that re-registers its table's
-        view does not change what this counts. The SQL constant needs no
-        Python worker, unlike ``createDataFrame``'s local rows."""
+        row count of ``source``, else 0. The SQL constant needs no Python
+        worker, unlike ``createDataFrame``'s local rows.
+
+        A lazy plan when counting cannot raise: ``source``'s analyzed plan
+        is bound already, so the write that re-registers its table's view
+        does not change what this counts. A count that may raise (an ANSI
+        cast or division in a filter, say) runs now, so a statement that
+        builds this before it writes fails before the table changes."""
         if source is None:
             return self.spark.sql("SELECT CAST(0 AS BIGINT) AS count")
-        return source.selectExpr("count(1) AS count")
+        count = source.selectExpr("count(1) AS count")
+        if _may_raise(count):
+            return self.spark.sql(f"SELECT CAST({count.first()[0]} AS BIGINT) AS count")
+        return count

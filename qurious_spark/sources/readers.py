@@ -97,8 +97,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     everything stays lazy and JVM-side: a top-level column directly, a list
     of them element-wise. A nanos timestamp nested anywhere else (a struct,
     a map, a list of lists) would come back as silent epoch-nanos bigints,
-    so it raises ``TypeError`` naming the column. A TIME column (Spark
-    reads none) raises ``ValueError`` naming it. The conf is set HERE, at
+    so it raises ``TypeError`` naming the column. A TIME column raises
+    ``footer_schema``'s ``ValueError``. The conf is set HERE, at
     runtime (verified runtime-settable), so the tolerance holds on any
     SparkSession, not just ones built by our own get_spark helper.
     """
@@ -114,12 +114,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     # timestamp: only the physical INT64 NANOS columns are nanos
     nano_cols: dict[str, str] = {}
     for field, leaves in fields:
-        if any(c.logical_type.type == "TIME" for c in leaves):
-            # inference would fail later with PARQUET_TYPE_ILLEGAL
-            raise ValueError(
-                f"parquet column {field.name!r} ({field.type}) holds a TIME value, "
-                "which Spark cannot read"
-            )
         if not any(_timestamp_unit(c) == "nanoseconds" for c in leaves):
             continue
         if pa.types.is_timestamp(field.type):
@@ -137,7 +131,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         reader = spark.read.schema(footer_schema(spark, meta))
-    except (TypeError, ValueError):
+    except TypeError:
         reader = spark.read
     df = reader.parquet(path)
     if not nano_cols:
@@ -189,15 +183,24 @@ def footer_schema(spark: SparkSession, meta) -> StructType:
     INT64 TIMESTAMP(NANOS) is a bigint (``nanosAsLong``), and
     un-annotated binary follows ``spark.sql.parquet.binaryAsString``.
     Every field is nullable. A timestamp inside a list takes the rule of its
-    leaf. Raises ``TypeError`` for a type these rules do not cover (time,
-    duration, float16, a timestamp inside a struct or map, ...)."""
+    leaf. Raises ``ValueError`` naming a column that holds a TIME value,
+    which Spark cannot read at all (its inference fails at the scan with
+    PARQUET_TYPE_ILLEGAL), and ``TypeError`` for another type these rules
+    do not cover (duration, float16, a timestamp inside a struct or map,
+    ...)."""
     spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
     if spark_json is not None:
         return StructType.fromJson(_all_nullable(json.loads(spark_json)))
+    fields = _fields(meta)
+    for f, leaves in fields:
+        if any(c.logical_type.type == "TIME" for c in leaves):
+            raise ValueError(
+                f"parquet column {f.name!r} ({f.type}) holds a TIME value, which Spark cannot read"
+            )
     return StructType(
         [
             StructField(f.name, _spark_type(spark, f.type, leaves[0] if len(leaves) == 1 else None))
-            for f, leaves in _fields(meta)
+            for f, leaves in fields
         ]
     )
 

@@ -136,6 +136,10 @@ def test_copy_from_tbl(fresh):
     n = fresh.sql(f"COPY t_copy FROM '{p}' (DELIMITER '|')").collect()[0][0]
     assert n == 2
     assert fresh.sql("SELECT count(*) AS c FROM t_copy").collect()[0].c == 2
+    # a missing file fails the statement itself, not a later read
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        fresh.sql(f"COPY t_copy FROM '{os.path.join(d, 'missing.tbl')}'")
+    assert fresh.sql("SELECT count(*) AS c FROM t_copy").collect()[0].c == 2
 
 
 def test_show_tables(fresh):
@@ -284,6 +288,8 @@ def test_merge_multiple_match_error(fresh):
             "MERGE INTO m3_tgt t USING m3_src s ON t.k = s.k "
             "WHEN MATCHED THEN UPDATE SET k = s.k"
         )
+    assert fresh.tables["m3_tgt"].version == 1
+    assert [tuple(r) for r in fresh.sql("SELECT k FROM m3_tgt").collect()] == [(1,)]
 
 
 def test_truncate(fresh):
@@ -874,23 +880,40 @@ def test_merge_starts_only_its_cardinality_check(fresh, spark, monkeypatch):
     assert 0 < len(merge_ids) == len(check_ids)
 
 
-@pytest.mark.parametrize("case", ["insert_not_null", "merge_two_matches", "copy_missing_path"])
-def test_violations_raise_at_the_statement(fresh, tmp_path, case):
-    """Nothing is collected: the statement itself raises."""
-    fresh.sql("CREATE TABLE rv_t (k BIGINT NOT NULL, v VARCHAR)")
-    fresh.sql("INSERT INTO rv_t VALUES (1, 'a')")
-    stmt, error = {
-        "insert_not_null": ("INSERT INTO rv_t VALUES (NULL, 'b')", "NOT NULL"),
-        "merge_two_matches": (
-            "MERGE INTO rv_t t USING (SELECT * FROM VALUES (1), (1) AS s(k)) s ON t.k = s.k "
-            "WHEN MATCHED THEN UPDATE SET v = 'm'",
-            "more than one source row",
-        ),
-        "copy_missing_path": (f"COPY rv_t FROM '{tmp_path / 'missing.csv'}'", "PATH_NOT_FOUND|does not exist"),
-    }[case]
-    with pytest.raises(Exception, match=error):
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "INSERT INTO rf_t SELECT k + 10, v FROM rf_t WHERE 1 / (k - k) > 0",
+        "INSERT INTO rf_t SELECT k + 10, v FROM rf_t WHERE CAST(v AS INT) > 0",
+        "MERGE INTO rf_t t USING (SELECT k, v FROM rf_t WHERE k % (k - k) = 0) s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = 'm'",
+    ],
+    ids=["insert_divide_by_zero", "insert_bad_cast", "merge_remainder_by_zero"],
+)
+def test_source_failing_at_run_time_fails_the_statement(fresh, stmt):
+    """Under ANSI these sources raise only when run: the statement counts
+    them before it writes, so it raises and the table stays readable."""
+    fresh.sql("CREATE TABLE rf_t (k BIGINT, v VARCHAR)")
+    fresh.sql("INSERT INTO rf_t VALUES (1, 'a')")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO|CAST_INVALID_INPUT|REMAINDER_BY_ZERO"):
         fresh.sql(stmt)
-    assert [tuple(r) for r in fresh.sql("SELECT k, v FROM rv_t").collect()] == [(1, "a")]
+    assert fresh.tables["rf_t"].version == 1
+    assert [tuple(r) for r in fresh.sql("SELECT k, v FROM rf_t").collect()] == [(1, "a")]
+
+
+def test_failed_checkpoint_leaves_the_table(fresh):
+    """An UPDATE whose SET overflows stays lazy until the every-16
+    checkpoint runs it; that write raises and the table keeps its version."""
+    from qurious_spark.session import CHECKPOINT_EVERY
+
+    fresh.sql("CREATE TABLE cf_t (k BIGINT)")
+    for i in range(CHECKPOINT_EVERY - 1):
+        fresh.sql(f"INSERT INTO cf_t VALUES ({i + 1})")
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        fresh.sql("UPDATE cf_t SET k = k + 9223372036854775807")
+    assert fresh.tables["cf_t"].version == CHECKPOINT_EVERY - 1
+    total = CHECKPOINT_EVERY * (CHECKPOINT_EVERY - 1) // 2
+    assert fresh.sql("SELECT sum(k) AS s FROM cf_t").collect()[0].s == total
 
 
 def test_every_dml_kind_returns_one_bigint_count(fresh, tmp_path):
