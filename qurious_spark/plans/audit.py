@@ -101,6 +101,10 @@ ALLOW_GLOBAL_WINDOW = {
     # WHERE o_orderkey < 400 (<=400 rows at any sf; queries/relational.py
     # window_ntile_percent)
     "window_ntile_percent",
+    # the MAX over the per-supplier revenue totals (one row per supplier,
+    # never lineitem rows), so lineitem is aggregated once (queries/tpch.py
+    # tpch_q15)
+    "tpch_q15",
 }
 
 # Queries whose Python stages are the point (stubbed decode, MLlib UDFs).

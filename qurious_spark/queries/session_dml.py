@@ -64,7 +64,7 @@ def dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL:2003 MERGE INTO (update/delete/insert arms, first-match-wins) on a
     managed table; the oracle restates the same final table state as a
-    left-join + anti-join union — exactly the plan shape the session builds."""
+    left-join + anti-join union (the session runs one full outer join)."""
     from qurious_spark.queries import ensure_views
     from qurious_spark.session import Session
 
@@ -234,10 +234,10 @@ def catalog_information_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dml_update_from(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Postgres/DuckDB-style ``UPDATE ... FROM`` (join-based update),
-    desugared by the dialect to the MERGE machinery — one left join, error
-    on a target row matching multiple source rows (the determinism rule
-    DuckDB also enforces; beyond the reference, whose UPDATE never runs —
-    session.rs:130-134)."""
+    desugared by the dialect to a MERGE with no NOT MATCHED arm — one left
+    join, materialized by the statement, error on a target row matching
+    multiple source rows (the determinism rule DuckDB also enforces; beyond
+    the reference, whose UPDATE never runs — session.rs:130-134)."""
     from qurious_spark.queries import ensure_views
     from qurious_spark.session import Session
 

@@ -616,15 +616,17 @@ sql_query(
 # two lineitem scans, two HashAggregate pairs; exchange reuse can NOT
 # deduplicate them — the main-query copy carries the join-inferred
 # isnotnull(l_suppkey) pushdown and narrower pruning than the scalar-subquery
-# copy, so the exchanges never canonicalize equal). The DataFrame form below
-# still plans both copies, for the same reason; what it changes is the
-# join shape: the MAX is a one-row aggregate broadcast into a cross join
-# (same shape as tpch_q11 — never an unpartitioned window), and the winners
-# are broadcast to the supplier scan. On a 4-vCPU host at sf0.1 it was no
-# slower than the CTE text in two runs of 9 alternating pairs (medians
-# 0.424 vs 0.516 s, then 0.377 vs 0.387 s). Decimal sums are exact and
-# associative, so both copies are bit-identical to the inlined ones (pin: tests/test_moneysum.py::test_q15_matches_original; the
-# DuckDB oracle keeps the original CTE text).
+# copy, so the exchanges never canonicalize equal). A MAX aggregate that
+# cross-joins back plans two copies for the same reason. The DataFrame form
+# below takes the MAX as ``max(total_revenue) OVER ()`` over the ONE
+# aggregate, so lineitem is scanned and aggregated once: the same rows as
+# the scalar subquery (a NULL l_suppkey group counts toward the MAX in both),
+# unlike a pushed-down filter. The window is unpartitioned but runs over the
+# per-supplier totals, one row per supplier, never over lineitem
+# (plans/audit.py ALLOW_GLOBAL_WINDOW). The winners are broadcast to the
+# supplier scan. Decimal sums are exact, so the result is bit-identical to
+# the inlined CTE (pin: tests/test_moneysum.py::test_q15_matches_original;
+# the DuckDB oracle keeps the original CTE text).
 _Q15_ORACLE = """
     WITH revenue0 AS (
         SELECT l_suppkey AS supplier_no,
@@ -658,12 +660,9 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY l_suppkey
         """
     )
-    mx = rev.agg(F.max("total_revenue").alias("__mx"))
-    winners = (
-        rev.crossJoin(F.broadcast(mx))
-        .filter("total_revenue = __mx")
-        .select("l_suppkey", "total_revenue")
-    )
+    winners = rev.selectExpr("*", "max(total_revenue) OVER () AS __mx").where(
+        "total_revenue = __mx"
+    ).select("l_suppkey", "total_revenue")
     s = spark.table("supplier").select("s_suppkey", "s_name")
     out = s.join(F.broadcast(winners), F.expr("s_suppkey = l_suppkey")).selectExpr(
         "s_suppkey",

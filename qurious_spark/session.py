@@ -17,15 +17,22 @@ pieces Spark does not give us for free:
 Scale notes (100 TB): the session never collects to the driver; managed-table
 mutations build union/filter plans lazily and checkpoint (the shim in
 qurious_spark/checkpoint.py: local by default, reliable when
-SPARK_GRAFT_CHECKPOINT_DIR is set) after a
-mutation-depth threshold so plan size stays bounded (SURVEY.md §7.4.5).
+SPARK_GRAFT_CHECKPOINT_DIR is set) once CHECKPOINT_EVERY writes have passed
+since the table was last materialized, so plan size stays bounded
+(SURVEY.md §7.4.5).
 
-A DML statement starts a Spark job only for a check that must fail at the
-statement: NOT NULL on a constrained table, MERGE's cardinality check, and
-COPY TO's write. The one-row ``count`` it returns is a lazy plan over its
-source, run only when the caller collects it, unless counting the source
-may raise (``_may_raise``): then it runs before the write, so a source that
-fails at run time fails its statement and leaves the table unchanged.
+A DML statement starts Spark jobs only for:
+
+- a check that must fail at the statement: NOT NULL on a constrained table;
+- MERGE: it materializes its one join (an eager checkpoint, which also
+  resets the table's write count) and checks cardinality over the result;
+- the write on which the count reaches CHECKPOINT_EVERY: its checkpoint;
+- COPY TO's write.
+
+The one-row ``count`` it returns is a lazy plan over its source, run only
+when the caller collects it, unless counting the source may raise
+(``_may_raise``): then it runs before the write, so a source that fails at
+run time fails its statement and leaves the table unchanged.
 """
 
 from __future__ import annotations
@@ -450,6 +457,8 @@ class ManagedTable:
         # reference at mutation time (no copy); the every-16 checkpoint in
         # _bump keeps old lineages shallow. Bounded ring: SNAPSHOT_KEEP.
         self.version = 0
+        # writes since the table was last materialized (see _bump)
+        self.depth = 0
         self.snapshots: dict[int, DataFrame] = {0: df}
 
     def as_of(self, version: int) -> DataFrame:
@@ -470,18 +479,23 @@ class ManagedTable:
                 f"{op}: NOT NULL constraint violated on {self.name} ({', '.join(cols)})"
             )
 
-    def _bump(self, df: DataFrame) -> None:
-        """Make ``df`` the table's next version. Nothing changes until the
-        every-16 checkpoint has run, so a checkpoint that raises leaves the
-        table as it was."""
+    def _bump(self, df: DataFrame, materialized: bool = False) -> None:
+        """Make ``df`` the table's next version. ``depth`` counts the
+        writes since the table was last materialized: the write that takes
+        it to CHECKPOINT_EVERY checkpoints ``df`` eagerly, and a
+        ``materialized`` ``df`` (MERGE checkpoints its own result) resets
+        it with no second checkpoint. Nothing changes until the checkpoint
+        has run, so one that raises leaves the table as it was."""
         # every union appends its source's partitions, and a checkpoint
         # keeps them all: hold the table to one partition per core
         df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
-        if (self.version + 1) % CHECKPOINT_EVERY == 0:
+        depth = 0 if materialized else self.depth + 1
+        if depth == CHECKPOINT_EVERY:
             # Truncate the union/filter plan chain; eager=True materializes
             # the table now so later reads plan against a flat scan instead
             # of the accumulated union/filter lineage.
-            df = _checkpoint(df, eager=True)
+            df, depth = _checkpoint(df, eager=True), 0
+        self.depth = depth
         self.version += 1
         self.df = self.snapshots[self.version] = df
         for v in [v for v in self.snapshots if v <= self.version - SNAPSHOT_KEEP]:
@@ -880,18 +894,26 @@ class Session:
         """MERGE INTO: SQL:2003 upsert over a managed table (beyond the
         reference, whose DML stops at INSERT/DELETE — session.rs:128-151).
 
-        Plan shape (scale): ONE left outer join on the merge condition
-        handles every MATCHED arm (first-match-wins via one CASE per
-        column), ONE left anti join produces the NOT MATCHED inserts; both
-        are key-equi joins Catalyst can run as broadcast or shuffle hash.
-        No collect; the new table state and the returned source row count
-        stay lazy plans. The cardinality check is the statement's one job
-        (NOT NULL checks add one each, on a constrained table only, and
-        the source count one when counting it may raise).
+        Plan shape: ONE join of the target, each row tagged ``__tid``, with
+        the source on the merge condition: a full outer join when the
+        statement has NOT MATCHED arms, else a left outer join (the source
+        may then broadcast), the rule Delta Lake's MERGE follows. A CASE
+        picks each row's arm ``__w`` (first match wins; MATCHED arms need
+        both sides, NOT MATCHED arms a source row with no target), one CASE
+        per column applies it, and ``__keep`` drops deleted rows and source
+        rows no insert arm takes.
 
-        The arms are SQL text in ``selectExpr``/``where``: a CASE picks the
-        winning arm ``__w``, and one CASE per column applies it. The joins
-        stay DataFrame joins (``QFrame.join`` parses the ON text), not one
+        The statement materializes that projection once (an eager
+        checkpoint), so an arm that fails at run time fails the statement,
+        and the table it leaves is a flat scan: later reads and writes
+        replay no join, and the every-16 checkpoint counts from here
+        (``ManagedTable._bump``). The cardinality check (a target row may
+        match one source row) and the NOT NULL checks run over the
+        checkpoint; if one raises, the table is unchanged. The returned
+        source row count stays a lazy plan.
+
+        The arms are SQL text in ``selectExpr``/``where``. The join stays a
+        DataFrame join (``QFrame.join`` parses the ON text), not one
         ``spark.sql`` over temp views: a ``merge_into`` source from a
         ``foreachBatch`` cloned session has temp views this one cannot read.
         """
@@ -917,68 +939,63 @@ class Session:
         else:
             src = self.sql(stmt.source) if stmt.source_is_query else self.table(stmt.source)
         src_cols = set(src.columns)
-        if src_cols & {"__m", "__w"}:
-            raise ValueError("MERGE: source may not contain a __m or __w column")
-        target = mt.df.alias(talias)
-        source = src.selectExpr("*", "true AS __m").alias(salias)
-
-        def join(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
-            return QFrame(left).join(QFrame(right), how, stmt.on_cond).to_spark()
-
-        def apply_arms(df: DataFrame, arms: list[dict[str, str]], keep: str | None) -> DataFrame:
-            """Each target column as a CASE over the value arm ``__w`` gives
-            it; else the column of relation ``keep`` (None: NULL)."""
-            items = []
-            for f in fields:
-                whens = [(f"__w = {i}", _cast(a[f.name], f)) for i, a in enumerate(arms) if f.name in a]
-                items.append(f"{_case(whens, keep and f'{keep}.{_ident(f.name)}')} AS {_ident(f.name)}")
-            return df.selectExpr(*items)
-
-        # SQL-standard cardinality check: a target row may match at most one
-        # source row (nondeterministic update otherwise). It must raise at
-        # the statement, so it is the one eager job.
-        tagged = mt.df.selectExpr("*", "monotonically_increasing_id() AS __tid").alias(talias)
-        dup = join(tagged, source, "inner").groupBy("__tid").count().where("count > 1")
-        if dup.limit(1).count():
-            raise ValueError("MERGE: a target row matched more than one source row")
+        if (src_cols | set(names)) & {"__tid", "__m", "__w", "__keep"}:
+            raise ValueError("MERGE: source and target may not contain a __tid, __m, __w or __keep column")
 
         m_clauses = [c for c in clauses if c.matched]
         nm_clauses = [c for c in clauses if not c.matched]
+        tagged = mt.df.selectExpr("*", "monotonically_increasing_id() AS __tid").alias(talias)
+        source = src.selectExpr("*", "true AS __m").alias(salias)
+        joined = QFrame(tagged).join(
+            QFrame(source), "full" if nm_clauses else "left", stmt.on_cond
+        ).to_spark()
 
-        # winning MATCHED arm per row (first match wins), -1 = no arm applies
-        when = [(f"{_ident(salias)}.__m IS NOT NULL AND {_group(c.cond or 'true')}", str(i))
-                for i, c in enumerate(m_clauses)]
-        joined = join(target, source, "left").selectExpr("*", f"{_case(when, '-1')} AS __w")
-        delete_arms = [str(i) for i, c in enumerate(m_clauses) if c.action == "delete"]
-        kept = joined.where(f"NOT __w IN ({', '.join(delete_arms)})") if delete_arms else joined
-        updated = apply_arms(kept, [c.assignments for c in m_clauses], _ident(talias))
-        # NOT NULL applies to matched-update arms too, not just inserts —
-        # an UPDATE SET x = NULL on a constrained column must fail the same
-        # way INSERT/UPDATE do. Only pay the count job when an update arm
-        # actually assigns a constrained column.
+        # the winning arm per row: MATCHED arms 0..M-1, then NOT MATCHED
+        # arms; -1 = none applies (a target row then keeps its values)
+        matched = f"__tid IS NOT NULL AND {_ident(salias)}.__m IS NOT NULL"
+        when = [(f"{matched} AND {_group(c.cond or 'true')}", str(i)) for i, c in enumerate(m_clauses)]
+        when += [
+            (f"__tid IS NULL AND {_group(c.cond or 'true')}", str(len(m_clauses) + i))
+            for i, c in enumerate(nm_clauses)
+        ]
+        joined = joined.selectExpr("*", f"{_case(when, '-1')} AS __w")
+        inserts = [
+            {n: f"{_ident(salias)}.{_ident(n)}" for n in names if n in src_cols}
+            if c.insert_values is None  # INSERT *
+            else dict(zip(c.insert_columns or names, c.insert_values, strict=True))
+            for c in nm_clauses
+        ]
+        # a column an insert arm leaves out takes its default
+        defaults = {n: _literal(mt.defaults.get(n)) for n in names}
+        arms = [c.assignments for c in m_clauses] + [{**defaults, **a} for a in inserts]
+        deletes = [str(i) for i, c in enumerate(m_clauses) if c.action == "delete"]
+        keep = "(__tid IS NOT NULL OR __w >= 0)"
+        if deletes:
+            keep += f" AND NOT __w IN ({', '.join(deletes)})"
+        items = []
+        for f in fields:
+            whens = [(f"__w = {i}", _cast(a[f.name], f)) for i, a in enumerate(arms) if f.name in a]
+            items.append(f"{_case(whens, f'{_ident(talias)}.{_ident(f.name)}')} AS {_ident(f.name)}")
+        merged = joined.selectExpr(*items, "__tid", f"{_ident(salias)}.__m AS __m", f"{keep} AS __keep")
+        merged = _checkpoint(merged.coalesce(self.spark.sparkContext.defaultParallelism), eager=True)
+
+        # SQL-standard cardinality check: a target row may match at most one
+        # source row (nondeterministic update otherwise)
+        dup = merged.where("__tid IS NOT NULL AND __m").groupBy("__tid").count().where("count > 1")
+        if dup.limit(1).count():
+            raise ValueError("MERGE: a target row matched more than one source row")
+        # NOT NULL applies to the rows an update arm may have changed (when
+        # one assigns a constrained column) and to every inserted row
+        checked = []
         if mt.notnull & {name for c in m_clauses for name in c.assignments}:
-            mt._check_notnull(updated, "MERGE")
-
-        # NOT MATCHED side: anti-join source against target, then the
-        # first applicable insert arm builds each target column; a column
-        # an arm leaves out takes its default.
-        inserted = None
+            checked.append("__tid IS NOT NULL")
         if nm_clauses:
-            when = [(c.cond or "true", str(i)) for i, c in enumerate(nm_clauses)]
-            anti = join(src.alias(salias), target, "left_anti")
-            anti = anti.selectExpr("*", f"{_case(when, '-1')} AS __w").where("__w >= 0")
-            arms = [
-                {n: f"{_ident(salias)}.{_ident(n)}" for n in names if n in src_cols}
-                if c.insert_values is None  # INSERT *
-                else dict(zip(c.insert_columns or names, c.insert_values, strict=True))
-                for c in nm_clauses
-            ]
-            defaults = {n: _literal(mt.defaults.get(n)) for n in names}
-            inserted = apply_arms(anti, [{**defaults, **a} for a in arms], None)
-            mt._check_notnull(inserted, "MERGE")
+            checked.append("__tid IS NULL")
+        if checked:
+            mt._check_notnull(merged.where(f"__keep AND ({' OR '.join(checked)})"), "MERGE")
 
         count = self._count_df(src)
-        mt._bump(updated.unionByName(inserted) if inserted is not None else updated)
+        mt._bump(merged.where("__keep").selectExpr(*map(_ident, names)), materialized=True)
         self._put_table(mt.name, mt)
         return count
 

@@ -9,8 +9,8 @@ so the streaming query itself is stateless (no watermark, no state store),
 and a restart resumes from the sink's offsets.
 
 Composes two engine pieces: the checkpointed ``foreachBatch`` sink and the
-Session's MERGE executor (one left join + one anti join per batch —
-sized by the batch's key count, not the table).
+Session's MERGE executor (one full outer join of the table with the batch's
+partial aggregate, materialized per batch, so the table stays a flat scan).
 """
 
 from __future__ import annotations

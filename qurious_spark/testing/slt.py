@@ -315,13 +315,11 @@ def run_slt_file(path: str, spark=None, sql_rewrite=None, oracle=None) -> SltRes
     that ships with neither repo (testing/tpch_data.py builds both sides
     from the driver testdata instead).
     """
-    from qurious_spark.session import Session
+    from qurious_spark.session import Session, get_spark
 
-    session = Session(spark)
-    # fresh namespace: temp views persist across Sessions in the shared JVM
-    for t in session.spark.catalog.listTables():
-        if t.isTemporary:
-            session.spark.catalog.dropTempView(t.name)
+    # a fresh namespace: a new SparkSession on the same SparkContext has its
+    # own temp views, so the file neither sees nor drops its caller's
+    session = Session((spark or get_spark()).newSession())
 
     result = SltResult(path=path)
     for rec in parse_slt_file(path):

@@ -26,8 +26,8 @@ BUILD_JOBS_ALLOWED = {
     "heavy_hitters_ngrams": "min_count mode sizes the Misra-Gries capacity from n",
     "pipeline_mix_corpora": "each source's row count sets its sample quota",
     "dml_scd2_dimension": "SCD2 rejects duplicate or NULL update keys before merging",
-    "dml_update_from": "the MERGE cardinality check",
-    "merge_upsert": "the MERGE cardinality check",
+    "dml_update_from": "MERGE runs its join once and checks cardinality over the result",
+    "merge_upsert": "MERGE runs its join once and checks cardinality over the result",
     "source_csv_roundtrip": "COPY TO writes the files the query then reads",
     "source_ndjson_roundtrip": "COPY TO writes the files the query then reads",
     "source_orc_roundtrip": "COPY TO writes the files the query then reads",

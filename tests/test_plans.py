@@ -88,6 +88,16 @@ def test_q21_single_pass_over_lineitem(spark, registry):
     assert facts["cartesian"] == 0
 
 
+def test_q15_aggregates_lineitem_once(spark, registry):
+    """q15's MAX is a window over its one per-supplier aggregate, so the
+    plan scans lineitem once; a MAX that joins back plans a second copy
+    (the join-inferred isnotnull(l_suppkey) keeps the exchanges apart)."""
+    from qurious_spark.plans.inspect import _executed_plan
+
+    df = registry.REGISTRY["tpch_q15"](spark, SF)
+    assert _executed_plan(df).count("lineitem.parquet") == 1
+
+
 def test_metadata_agg_prunes_blob_column(spark):
     from qurious_spark.operators.multimodal import media_stats, synthetic_media
 

@@ -859,13 +859,19 @@ def test_dml_statements_start_no_job(fresh, spark, tmp_path):
         assert ids == [], stmt
 
 
-def test_merge_starts_only_its_cardinality_check(fresh, spark, monkeypatch):
-    DataFrame = type(spark.range(1))  # the classic subclass defines count
+def test_merge_materializes_its_one_join(fresh, spark, monkeypatch):
+    """A MERGE's jobs are the materialization of its one join and the
+    cardinality check over it. The table it leaves is a flat scan, so the
+    writes up to the next every-16 checkpoint start no job."""
+    import qurious_spark.session as S
+    from qurious_spark.session import CHECKPOINT_EVERY
 
+    DataFrame = type(spark.range(1))  # the classic subclass defines count
     fresh.sql("CREATE TABLE mj_tgt (k BIGINT, v BIGINT)")
     fresh.sql("INSERT INTO mj_tgt VALUES (1, 10), (2, 20)")
-    counted = []
-    count = DataFrame.count
+    materialized, counted = [], []
+    checkpoint, count = S._checkpoint, DataFrame.count
+    monkeypatch.setattr(S, "_checkpoint", lambda df, eager: materialized.append(df) or checkpoint(df, eager))
     monkeypatch.setattr(DataFrame, "count", lambda df: counted.append(df) or count(df))
     with job_ids(spark, "dml-jobs:merge") as merge_ids:
         fresh.sql(
@@ -874,10 +880,94 @@ def test_merge_starts_only_its_cardinality_check(fresh, spark, monkeypatch):
             "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)"
         )
     monkeypatch.undo()
-    assert len(counted) == 1  # the check is the statement's one action
+    assert len(materialized) == len(counted) == 1  # one checkpoint, one check
+    with job_ids(spark, "dml-jobs:merge-materialize") as materialize_ids:
+        checkpoint(materialized[0].select("*"), True)  # a new plan: no stage reuse
     with job_ids(spark, "dml-jobs:merge-check") as check_ids:
         counted[0].count()
-    assert 0 < len(merge_ids) == len(check_ids)
+    assert len(merge_ids) == len(materialize_ids) + len(check_ids)
+    assert "Join" not in fresh.tables["mj_tgt"].df._jdf.queryExecution().optimizedPlan().toString()
+
+    expected = {1: 11, 2: 20, 3: 30}
+    for i in range(CHECKPOINT_EVERY - 1):
+        x = 2 * i
+        with job_ids(spark, f"dml-jobs:after-merge-{i}") as ids:
+            if i % 2:
+                fresh.sql(f"UPDATE mj_tgt SET v = v + 1 WHERE k < {x}")
+                expected = {k: v + (k < x) for k, v in expected.items()}
+            else:
+                fresh.sql(f"INSERT INTO mj_tgt VALUES ({x + 100}, {x})")
+                expected[x + 100] = x
+        assert ids == [], i
+    with job_ids(spark, "dml-jobs:after-merge-checkpoint") as ids:
+        fresh.sql("DELETE FROM mj_tgt WHERE k = 3")
+    assert ids  # the 16th write since the MERGE checkpoints
+    del expected[3]
+    assert dict(map(tuple, fresh.sql("SELECT k, v FROM mj_tgt").collect())) == expected
+
+
+def test_merge_null_join_keys(fresh):
+    """A NULL key matches nothing: the source row takes the NOT MATCHED
+    arm, and the target row is kept as it is."""
+    fresh.sql("CREATE TABLE mn_tgt (k BIGINT, v VARCHAR)")
+    fresh.sql("INSERT INTO mn_tgt VALUES (1, 'a'), (NULL, 'n')")
+    fresh.sql(
+        "MERGE INTO mn_tgt t USING (SELECT * FROM VALUES (1, 'x'), (CAST(NULL AS BIGINT), 'y') AS s(k, v)) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *"
+    )
+    rows = fresh.sql("SELECT k, v FROM mn_tgt").collect()
+    assert sorted(map(tuple, rows), key=repr) == sorted([(1, "x"), (None, "n"), (None, "y")], key=repr)
+
+
+def test_merge_without_not_matched_inserts_nothing(fresh):
+    fresh.sql("CREATE TABLE mm_tgt (k BIGINT, v BIGINT)")
+    fresh.sql("INSERT INTO mm_tgt VALUES (1, 10), (2, 20), (3, 30)")
+    res = fresh.sql(
+        "MERGE INTO mm_tgt t USING (SELECT * FROM VALUES (1, 11), (2, 0), (9, 90) AS s(k, v)) s "
+        "ON t.k = s.k WHEN MATCHED AND s.v = 0 THEN DELETE WHEN MATCHED THEN UPDATE SET v = s.v"
+    )
+    assert res.collect()[0]["count"] == 3
+    rows = fresh.sql("SELECT k, v FROM mm_tgt").collect()
+    assert sorted(map(tuple, rows)) == [(1, 11), (3, 30)]
+
+
+def test_merge_non_equi_condition(fresh):
+    fresh.sql("CREATE TABLE mr_tgt (k BIGINT, v VARCHAR)")
+    fresh.sql("INSERT INTO mr_tgt VALUES (1, 'o'), (5, 'o'), (9, 'o')")
+    fresh.sql(
+        "MERGE INTO mr_tgt t "
+        "USING (SELECT * FROM VALUES (0, 2, 'a'), (4, 6, 'b'), (20, 30, 'z') AS s(lo, hi, tag)) s "
+        "ON t.k BETWEEN s.lo AND s.hi "
+        "WHEN MATCHED THEN UPDATE SET v = s.tag "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.lo, s.tag)"
+    )
+    rows = fresh.sql("SELECT k, v FROM mr_tgt").collect()
+    assert sorted(map(tuple, rows)) == [(1, "a"), (5, "b"), (9, "o"), (20, "z")]
+
+
+def test_merge_arm_failing_at_run_time_fails_the_statement(fresh, spark):
+    """The MERGE materializes its result, so a SET that overflows under
+    ANSI raises at the statement and the table keeps its version and rows."""
+    if spark.conf.get("spark.sql.ansi.enabled") != "true":
+        pytest.skip("overflow raises only under ANSI")
+    fresh.sql("CREATE TABLE mo_tgt (k BIGINT, v BIGINT)")
+    fresh.sql("INSERT INTO mo_tgt VALUES (1, 9223372036854775807), (2, 0)")
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        fresh.sql(
+            "MERGE INTO mo_tgt t USING (SELECT 1 AS k) s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = t.v + 1"
+        )
+    assert fresh.tables["mo_tgt"].version == 1
+    rows = fresh.sql("SELECT k, v FROM mo_tgt").collect()
+    assert sorted(map(tuple, rows)) == [(1, 9223372036854775807), (2, 0)]
+
+
+@pytest.mark.parametrize("column", ["__tid", "__m", "__w", "__keep"])
+def test_merge_rejects_helper_column_names(fresh, column):
+    fresh.sql("CREATE TABLE mh_tgt (k BIGINT)")
+    with pytest.raises(ValueError, match="may not contain"):
+        fresh.sql(f"MERGE INTO mh_tgt t USING (SELECT 1 AS k, 2 AS {column}) s ON t.k = s.k "
+                  "WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k)")
 
 
 @pytest.mark.parametrize(
